@@ -91,8 +91,7 @@ def run_frontier_bench(spark, max_depth: int = 8,
                        pages: int | None = None,
                        seeds: int | None = None,
                        also_sharded: bool = False,
-                       ingest_images: bool = False,
-                       bucketed_seen: bool | None = None) -> dict:
+                       ingest_images: bool = False) -> dict:
     """The engine's own metric: URLs scheduled+fetched per second on
     the synthetic frontier. Reported in two parts:
       * explore — the distributed schedule+fetch+extract+admit loop
@@ -134,22 +133,7 @@ def run_frontier_bench(spark, max_depth: int = 8,
                          ingest_images=ingest_images,
                          bucketed_images_dir=(
                              web.rstrip("/") + "-imgbucketed64"
-                             if ingest_images else None),
-                         # bucketed admission/ingest history: OFF by
-                         # default after same-epoch A/B at 16M pages /
-                         # local[32] measured the store SLOWER in both
-                         # configs (explore 203 vs 165 s no-ingest,
-                         # 442 vs 300 s with ingest) — the unsplittable
-                         # one-file-per-bucket scan + per-round sort of
-                         # the history loses to a plain exchange at any
-                         # history this sandbox can hold. The mirror's
-                         # exchange-free rationale only bites when the
-                         # history outgrows what a shuffle can move
-                         # (10^9+ URLs); stays an opt-in flag with
-                         # identity goldens, not a bench default.
-                         bucketed_seen=(False if bucketed_seen is None
-                                        else bucketed_seen),
-                         seen_buckets=64)
+                             if ingest_images else None))
     eng.explore()
     t_explore = time.time() - t0
     t1 = time.time()

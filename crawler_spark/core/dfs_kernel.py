@@ -17,9 +17,9 @@ tables into direct-indexed arrays: the random-access working set for
 N nodes is ~4.125N bytes (a 4 B/node CSR index + a 1-bit/node claimed
 bitmap, mostly L3-resident) instead of the ~64N-byte open-addressing
 walk of the round-1 kernel, which was memory-bound at 3-25 s per 10M
-edges. At >2^31 nodes the ids outgrow int32 — past
-that scale the engine's implemented exact path is the distributed
-fixpoint strategy (engine/frontier.py:resolve), not this kernel.
+edges. Ids are int32, so the kernel addresses fewer than 2^31 nodes;
+the engine checks the node count against that ceiling before it
+encodes or sweeps anything (engine/frontier.py:_node_offsets).
 
 Two interchangeable implementations of the same sweep:
 
@@ -81,18 +81,14 @@ typedef struct { int32_t id; int32_t depth; int64_t parent_rank; int32_t li; } f
    posture, and denser = more cache-resident for the random probes.
    rank0 is the global rank of this call's first claim. Returns the
    number of claims made BY THIS CALL (outputs are call-local arrays;
-   parent_rank is the GLOBAL rank). -2 on allocation failure.
-   seed_counts (optional, NULL to skip): cumulative claim count after
-   each seed's subtree — the per-seed segment boundaries the
-   optimistic parallel-shard validator needs to accept a
-   conflict-free seed prefix. */
+   parent_rank is the GLOBAL rank). -2 on allocation failure. */
 int64_t dfs_sweep_dense_resume(
     int64_t n_edges, const int32_t *c, const int32_t *li,
     int64_t m, const int32_t *uniq_p, const int64_t *starts,
     int64_t n_seeds, const int32_t *seeds, int32_t maxd,
     int64_t n_nodes, uint8_t *claimed, int64_t rank0,
     int32_t *out_id, int32_t *out_depth, int64_t *out_parent_rank,
-    int32_t *out_li, int64_t *seed_counts)
+    int32_t *out_li)
 {
     /* csr_of[id] = row into uniq_p/starts or -1: shard-local, built
        per call from this call's (shard's) CSR */
@@ -125,7 +121,6 @@ int64_t dfs_sweep_dense_resume(
                 st[sp++] = nf;
             }
         }
-        if (seed_counts) seed_counts[sidx] = n_out;
     }
     free(csr_of); free(st);
     return n_out;
@@ -143,19 +138,9 @@ int64_t dfs_sweep_dense(
     if (!claimed) return -1;
     int64_t n = dfs_sweep_dense_resume(
         n_edges, c, li, m, uniq_p, starts, n_seeds, seeds, maxd,
-        n_nodes, claimed, 0, out_id, out_depth, out_parent_rank, out_li,
-        (int64_t *)0);
+        n_nodes, claimed, 0, out_id, out_depth, out_parent_rank, out_li);
     free(claimed);
     return n < 0 ? -1 : n;
-}
-
-/* Bulk-mark ids claimed in the bitmap — the parallel-shard
-   validator's accept path (ids are a validated shard's claims; a
-   numpy scatter can't OR into shared bytes without ufunc.at, which
-   is an order of magnitude slower than this loop). */
-void mark_claimed(int64_t n, const int32_t *ids, uint8_t *claimed)
-{
-    for (int64_t k = 0; k < n; k++) CLAIM_SET(claimed, ids[k]);
 }
 
 /* dictionary-encode int64 keys against a sorted table: out[k] = index
@@ -295,9 +280,7 @@ def _load_lib():
             ctypes.c_int64, i32p, i64p,
             ctypes.c_int64, i32p, ctypes.c_int32,
             ctypes.c_int64, u8p_, ctypes.c_int64,
-            i32p, i32p, i64p, i32p, i64p]
-        lib.mark_claimed.restype = None
-        lib.mark_claimed.argtypes = [ctypes.c_int64, i32p, u8p_]
+            i32p, i32p, i64p, i32p]
         lib.encode_ids.restype = None
         lib.encode_ids.argtypes = [ctypes.c_int64, i64p,
                                    ctypes.c_int64, i64p, i32p]
@@ -458,32 +441,6 @@ def csr_runlength(p):
     return uniq[:m].copy(), starts[:m + 1].copy()
 
 
-def claimed_mask(bits, ids):
-    """Vectorized claim-membership test against a claimed bitmap:
-    returns uint8[len(ids)] with 1 where ids[k] is set in `bits`."""
-    ids = np.asarray(ids)
-    return (bits[ids >> 3] >> (ids & 7).astype(np.uint8)) & 1
-
-
-def mark_claimed(bits, ids):
-    """Bulk-set ids in the claimed bitmap in place. C loop when a
-    toolchain exists; np.bitwise_or.at fallback (a plain fancy-index
-    OR would silently drop ids sharing a byte)."""
-    ids = np.ascontiguousarray(ids, np.int32)
-    if not len(ids):
-        return
-    lib = _load_lib()
-    if lib is not None:
-        lib.mark_claimed(
-            len(ids),
-            ids.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-            bits.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)))
-    else:
-        np.bitwise_or.at(
-            bits, ids >> 3,
-            (np.uint8(1) << (ids & 7).astype(np.uint8)))
-
-
 _HEX_W = 4  # hex digits per priority-vector level (file format)
 
 
@@ -596,35 +553,19 @@ class SweepState:
     both implement the same contract — but keeping one makes `impl`
     reporting truthful)."""
 
-    def __init__(self, n_nodes: int, claimed=None, rank: int = 0):
-        """`claimed`/`rank` (optional): ADOPT an existing claim state
-        instead of starting empty — the parallel-shard validator owns
-        one shared claimed bitmap and hands it to a fresh state for
-        each conflict re-sweep (C kernel only: the py fallback keeps
-        claims in a dict, which an external bitmap can't seed
-        cheaply)."""
+    def __init__(self, n_nodes: int):
         self.n_nodes = int(n_nodes)
-        self.rank = int(rank)
+        self.rank = 0
         self._lib = _load_lib()
         if self._lib is not None:
             self.impl = "c"
-            if claimed is not None:
-                assert (claimed.dtype == np.uint8
-                        and claimed.flags["C_CONTIGUOUS"]
-                        and len(claimed) == (self.n_nodes + 7) // 8)
-                self.claimed_bits = claimed
-            else:
-                self.claimed_bits = np.zeros((self.n_nodes + 7) // 8,
-                                             np.uint8)
+            self.claimed_bits = np.zeros((self.n_nodes + 7) // 8, np.uint8)
         else:
             self.impl = "py"
-            if claimed is not None:
-                raise ValueError(
-                    "SweepState claim-state adoption requires the C kernel")
             self.claimed: dict[int, int] = {}
 
     def _sweep_shard_c(self, c_sorted, i_sorted, uniq_p, starts, seeds,
-                       max_depth, seed_counts=None):
+                       max_depth):
         lib = self._lib
         n_edges = len(c_sorted)
         out_n = self.n_nodes - self.rank  # claims left ≤ unclaimed nodes
@@ -654,8 +595,7 @@ class SweepState:
             self.claimed_bits.ctypes.data_as(
                 ctypes.POINTER(ctypes.c_uint8)),
             self.rank,
-            p32(out_id), p32(out_depth), p64(out_parent), p32(out_li),
-            None if seed_counts is None else p64(seed_counts))
+            p32(out_id), p32(out_depth), p64(out_parent), p32(out_li))
         if n < 0:
             raise MemoryError("dfs_sweep_dense_resume allocation failure")
         self.rank += int(n)
@@ -663,7 +603,7 @@ class SweepState:
                 out_li[:n])
 
     def _sweep_shard_py(self, c_sorted, i_sorted, uniq_p, starts, seeds,
-                        max_depth, seed_counts=None):
+                        max_depth):
         c_l = np.asarray(c_sorted, np.int64).tolist()
         i_l = np.asarray(i_sorted, np.int64).tolist()
         bounds = np.asarray(starts, np.int64)
@@ -678,7 +618,7 @@ class SweepState:
         push = stack.append
         pop = stack.pop
         rank0 = self.rank
-        for sidx, sh in enumerate(np.asarray(seeds, np.int64).tolist()):
+        for sh in np.asarray(seeds, np.int64).tolist():
             push((sh, 0, -1, -1))
             while stack:
                 nid, depth, parent_rank, li = pop()
@@ -699,8 +639,6 @@ class SweepState:
                             ch = c_l[k]
                             if ch >= 0 and ch not in claimed:
                                 push((ch, d1, rank, i_l[k]))
-            if seed_counts is not None:
-                seed_counts[sidx] = len(out_id)
         n = len(out_id)
         self.rank = rank0 + n
         return (n, np.array(out_id, np.int32),
@@ -709,19 +647,11 @@ class SweepState:
                 np.array(out_li, np.int32))
 
     def sweep_shard(self, c_sorted, i_sorted, uniq_p, starts, seeds,
-                    max_depth, seed_counts=None):
+                    max_depth):
         """One shard's sweep. Returns (n, id, depth, parent_rank, li)
-        — call-local arrays, GLOBAL parent ranks. `seed_counts`
-        (optional int64[n_seeds], filled in place): cumulative claim
-        count after each seed's subtree — the per-seed segment
-        boundaries the parallel-shard prefix validator consumes. Must
-        be C-contiguous int64 (filled through its buffer)."""
-        if seed_counts is not None:
-            assert (seed_counts.dtype == np.int64
-                    and seed_counts.flags["C_CONTIGUOUS"]
-                    and len(seed_counts) >= len(seeds))
+        — call-local arrays, GLOBAL parent ranks."""
         if self.impl == "c":
             return self._sweep_shard_c(c_sorted, i_sorted, uniq_p, starts,
-                                       seeds, max_depth, seed_counts)
+                                       seeds, max_depth)
         return self._sweep_shard_py(c_sorted, i_sorted, uniq_p, starts,
-                                    seeds, max_depth, seed_counts)
+                                    seeds, max_depth)

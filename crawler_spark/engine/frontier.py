@@ -23,27 +23,26 @@ P-complete — inherently sequential — so the engine splits it:
      claimed by the lexicographically smallest priority vector
      (parent's vector ++ link_index, fixed-width hex so string
      comparison = lexicographic order) among calls from claimed
-     pages, computed as an iterative full-recompute fixpoint of
-     DataFrame joins (≈ max_depth + small-slack rounds; claims form
-     chains of length ≤ max_depth rooted at the seeds, so the
-     fixpoint is unique and equals the sequential DFS — verified
-     against the oracle simulator in tests/test_crawl_golden.py).
-     Sorting claims by priority vector reproduces the reference's
-     visit order exactly; the claim set IS the reference's URL-seen
-     set.
+     pages. The explored edge set is dictionary-encoded to dense
+     int32 ids DISTRIBUTED, then one sequential explicit-stack DFS
+     sweep (core/dfs_kernel.py) claims in exact visit order — either
+     over the whole skeleton or shard by seed-rank shard with the
+     claim state carried across shards (the out-of-core path).
+     Verified against the oracle simulator in
+     tests/test_crawl_golden.py. The claim order IS the reference's
+     visit order; the claim set IS the reference's URL-seen set.
 
 Scale posture (10^10 URLs / 1000 executors):
   * frontier/fetched/edges are hash-partitioned by xxhash64(url);
-    the per-round anti-join (candidates ⋈ fetched) is the J1
-    scale-critical join — AQE + optional bloom pre-filter
-    (crawler_spark.operators.bloom) prune it.
+    the per-round anti-join (candidates ⋈ admission history) is the
+    J1 scale-critical join — one exact join, AQE-planned.
   * robots and the allowed-host list are broadcast (small dims).
   * the per-host politeness window is skew-prone (mega-hosts);
     rows are salted by pmod(url_hash, S) inside a host before the
     per-host rank so no single task sees a whole mega-host
     (cfg.rate_limit budget is split across salts).
-  * resolve is ~max_depth shuffles over the edge set — linear in
-    |edges|, partitioned by child URL.
+  * resolve encodes the edge set with two keyed shuffle joins —
+    linear in |edges| — before the driver-side sweep.
 """
 
 from __future__ import annotations
@@ -51,7 +50,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -94,6 +92,15 @@ def _read_parquet_dir(path: str, empty_schema):
 
 _MONO_MASK = (1 << 33) - 1  # monotonically_increasing_id ordinal bits
 
+# The sweep kernel's node ids are int32 (core/dfs_kernel.py): ids are
+# cast to int and the C sweep allocates n_nodes * 4 bytes of int32
+# CSR index, so a node table at or past this count cannot be resolved.
+MAX_NODES = 1 << 31
+
+
+class NodeCeilingError(ValueError):
+    """The resolve skeleton has more nodes than int32 ids can address."""
+
 
 def _node_offsets(path: str) -> tuple[dict[int, int], int]:
     """Per-write-partition dense-id offsets of a node table written
@@ -102,7 +109,10 @@ def _node_offsets(path: str) -> tuple[dict[int, int], int]:
     one task, so every row shares the file's partition id (mono >>
     33); the file's row count comes from its footer and its pid from
     the mono column's row-group min statistic. Offsets accumulate in
-    pid order — identical ids to a per-pid count pass + window."""
+    pid order — identical ids to a per-pid count pass + window.
+
+    Raises NodeCeilingError when the node total reaches MAX_NODES —
+    before any id is cast to int32 or any sweep state is allocated."""
     import pyarrow.parquet as pq
 
     per_pid: dict[int, int] = {}
@@ -120,54 +130,12 @@ def _node_offsets(path: str) -> tuple[dict[int, int], int]:
     for pid in sorted(per_pid):
         offs[pid] = acc
         acc += per_pid[pid]
+    if acc >= MAX_NODES:
+        raise NodeCeilingError(
+            f"resolve skeleton has {acc} nodes; the DFS sweep addresses "
+            f"nodes with int32 ids, so the ceiling is {MAX_NODES - 1} "
+            f"(2^31 - 1) nodes")
     return offs, acc
-
-
-def _shard_sweep_optimistic(args):
-    """Process-pool worker for the PARALLEL sharded resolve: load one
-    shard's skeleton and sweep it OPTIMISTICALLY (empty claim state —
-    as if no earlier shard had claimed anything). Runs in a forked
-    child: numpy + pyarrow + the C kernel only, no Spark (the py4j
-    gateway talks to a separate JVM process, and forked pool children
-    exit via os._exit, so the parent's JVM connection is untouched).
-
-    Returns call-local claims in visit order plus per-seed cumulative
-    claim boundaries (`seed_counts`). The parent validates each
-    shard's optimistic result against the true global claim state in
-    seed-rank order: if the optimistic claims are disjoint from every
-    earlier shard's accepted claims, the optimistic sweep IS the true
-    sweep (an optimistic run only diverges at the first pop of an
-    already-claimed node, and any such node would itself appear in the
-    optimistic claim set — so disjointness certifies the whole run);
-    otherwise the longest conflict-free seed PREFIX is accepted (later
-    seeds never influence earlier ones) and only the remaining seeds
-    re-sweep sequentially against the true state."""
-    sharded_path, s, seed_ids, n_nodes, max_depth = args
-    import numpy as np
-    import pyarrow as pa
-
-    from ..core.dfs_kernel import SweepState, csr_runlength
-
-    t0 = time.time()
-    empty = {"p_id": pa.array([], pa.int32()),
-             "i": pa.array([], pa.int32()),
-             "c_id": pa.array([], pa.int32())}
-    sdir = os.path.join(sharded_path, f"shard={s}")
-    skel_t = (_read_parquet_dir(sdir, empty)
-              if os.path.isdir(sdir) else pa.table(empty))
-    p_ids = skel_t["p_id"].to_numpy(zero_copy_only=False)
-    i_sorted = skel_t["i"].to_numpy(zero_copy_only=False)
-    c_id = np.ascontiguousarray(
-        skel_t["c_id"].to_numpy(zero_copy_only=False), np.int32)
-    uniq_p, bounds = csr_runlength(p_ids)
-    del skel_t, p_ids
-    state = SweepState(n_nodes)
-    seed_id = np.asarray(seed_ids, np.int32)
-    seed_counts = np.zeros(len(seed_id), np.int64)
-    n, out_id, out_depth, out_pr, out_li = state.sweep_shard(
-        c_id, i_sorted, uniq_p, bounds, seed_id, max_depth, seed_counts)
-    return (s, n, out_id, out_depth, out_pr, out_li, seed_counts,
-            round(time.time() - t0, 2), state.impl)
 
 
 # ---------------------------------------------------------------------------
@@ -310,17 +278,11 @@ class FrontierEngine:
                  fixture_dir: str, ckpt_dir: str,
                  enforce_politeness: bool = False,
                  host_salts: int = 8,
-                 use_bloom: bool = False,
-                 use_cuckoo: bool = False,
                  bucketed_web_dir: str | None = None,
                  web_buckets: int = 64,
                  bucket_join_min: int = 250_000,
-                 freeze_frontier: bool = True,
                  ingest_images: bool = False,
-                 ingest_bloom: bool = False,
                  bucketed_images_dir: str | None = None,
-                 bucketed_seen: bool = False,
-                 seen_buckets: int = 64,
                  cursor_spill_rows: int = 500_000):
         self.spark = spark
         self.cfg = cfg
@@ -332,7 +294,6 @@ class FrontierEngine:
         # deferred rows that can never be overtaken are written ONCE
         # and popped by cursor instead of re-ranked + rewritten every
         # window — see _write_frontier's scale note
-        self.freeze_frontier = freeze_frontier
         self._cursor = None          # pandas (host, salt, salt_cap,
         self._fdirs = None           #   consumed, frozen_total) /
         #                                (dir, host, salt, max_frank)
@@ -350,11 +311,6 @@ class FrontierEngine:
         # dirstats files of dirs retired THIS round — deleted only
         # after the round's snapshot commit (see _retire_dirs_spark)
         self._dirstats_dead: list[str] = []
-        self.use_bloom = use_bloom
-        # cuckoo is the deletion-capable alternative (operators/
-        # cuckoo.py); both compose identically as certain-new
-        # pre-filters, so the engine treats them interchangeably
-        self.use_cuckoo = use_cuckoo
         self.web = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
         self.robots = spark.read.parquet(f"{fixture_dir}/robots.parquet")
         self.seeds_raw = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
@@ -372,32 +328,11 @@ class FrontierEngine:
         os.makedirs(self.ckpt, exist_ok=True)
         self.frontier_table = SnapshotTable(spark, self._paths("frontier"))
         self.crawl_table = SnapshotTable(spark, self._paths("crawl"))
-        # bucketed seen-store (Iceberg bucket(N, url) analog over the
-        # admission history): the J1 anti-join and the politeness
-        # depth-correcting admit both key on the FULL frontier history
-        # every round — as a plain parquet union that history crosses
-        # a shuffle per round (at 10^10 URLs: the whole seen set
-        # through an all-to-all exchange, every round — THE scale
-        # killer of the naive design). Mirroring it into a catalog
-        # table PARTITIONED BY round and CLUSTERED BY url makes the
-        # history side of both joins exchange-free (scan reports
-        # hash-partitioning; only the round's candidates shuffle) and
-        # scans stay column-pruned + partition-pruned. Each partition
-        # is a slim (url, depth) copy of one committed frontier round,
-        # written right after that round's snapshot commit and
-        # rebuilt idempotently on resume (INSERT OVERWRITE per
-        # partition; _seen_store_heal), so the store is a derived
-        # index — the frontier SnapshotTable stays the only source of
-        # truth and exactness never depends on the store surviving.
-        self._seen_buckets = seen_buckets
-        self._seen_name = (self._ensure_seen_store(seen_buckets)
-                           if bucketed_seen else None)
         # in-loop image ingest (north-star: fetched image bytes are
         # decoded/validated via Arrow UDFs with phash dedup INSIDE the
         # micro-batch loop, committed per round with lineage — see
         # _ingest_images). The byte dim is the sandbox's HTTP stand-in.
         self.ingest_images = ingest_images
-        self.ingest_bloom = ingest_bloom
         if ingest_images:
             self.images_dim = spark.read.parquet(
                 f"{fixture_dir}/images.parquet").select(
@@ -415,14 +350,6 @@ class FrontierEngine:
                 if bucketed_images_dir else None)
             self._img_buckets = web_buckets
             self.images_table = SnapshotTable(spark, self._paths("images"))
-            # same bucketed-log treatment for the ingested-src history
-            # (the per-round src-seen anti-join otherwise shuffles
-            # every previously ingested src, every round — 10^9+ srcs
-            # at target scale)
-            self._imgseen_name = (self._ensure_imgseen_store(seen_buckets)
-                                  if bucketed_seen else None)
-        else:
-            self._imgseen_name = None
         self.timings: dict = {}
         # per-round plan pieces built ONCE: Column trees and slim
         # projections are immutable, and rebuilding them every round
@@ -543,146 +470,12 @@ class FrontierEngine:
                 f"INTO {buckets} BUCKETS LOCATION '{path}'")
         return self.spark.table(name)
 
-    def _ensure_seen_store(self, buckets: int) -> str:
-        """Create (or re-register on resume) the bucketed seen-store
-        catalog table — see the constructor comment for why. Path-keyed
-        name for the same reason as _ensure_bucketed_web."""
-        import hashlib
-
-        path = self._paths("seen_bucketed")
-        digest = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
-        name = f"seen_bkt_{digest}"
-        # always re-register: fresh_ckpt reuses paths, so a catalog
-        # entry from an earlier engine on this path may be stale
-        # (wiped or rewritten location). DROP on an external (LOCATION)
-        # table never touches the data files.
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        resuming = os.path.isdir(path)
-        self.spark.sql(
-            f"CREATE TABLE {name} (url STRING, depth INT, rnd INT) "
-            f"USING PARQUET PARTITIONED BY (rnd) "
-            f"CLUSTERED BY (url) INTO {buckets} BUCKETS "
-            f"LOCATION '{path}'")
-        if resuming:  # pick up partitions written by a prior session
-            self.spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
-        return name
-
-    def _seen_store_write(self, rnd: int) -> None:
-        """Mirror committed frontier round ``rnd`` into seen-store
-        partition ``rnd`` (slim url+depth, bucket-shuffled once —
-        O(round), not O(history)). INSERT OVERWRITE makes replays
-        idempotent; called only AFTER the round's snapshot commit, so
-        a crash between commit and mirror is healed by
-        _seen_store_heal on the next resume."""
-        if self._seen_name is None:
-            return
-        rdir = self._paths("frontier", rnd)
-        sel_dirs = [os.path.join(rdir, d) for d in ("sel=b", "sel=d",
-                                                    "sel=f")
-                    if os.path.isdir(os.path.join(rdir, d))]
-        if not sel_dirs:
-            return
-        rows = (self.spark.read.schema(self._frontier_schema)
-                .parquet(*sel_dirs)
-                .select("url", "depth")
-                .repartition(self._seen_buckets, F.col("url")))
-        view = f"{self._seen_name}_delta"
-        rows.createOrReplaceTempView(view)
-        self.spark.sql(
-            f"INSERT OVERWRITE TABLE {self._seen_name} "
-            f"PARTITION (rnd={rnd}) SELECT url, depth FROM {view}")
-
-    def _seen_store_heal(self, completed_rounds: int) -> None:
-        """Resume self-heal: rebuild any seen-store partition missing
-        for a committed frontier round (crash window between a round's
-        snapshot commit and its mirror write)."""
-        if self._seen_name is None:
-            return
-        have = {int(r["partition"].split("=")[1]) for r in
-                self.spark.sql(
-                    f"SHOW PARTITIONS {self._seen_name}").collect()}
-        for r in range(completed_rounds + 1):
-            if r not in have:
-                self._seen_store_write(r)
-
-    def _seen_history(self, rnd: int):
-        """The admission history for round ``rnd`` (frontier rounds
-        0..rnd) as a DataFrame of (url, depth): the bucketed store
-        when enabled (history side of every admit join is then
-        exchange-free), else the plain frontier-table read."""
-        if self._seen_name is not None:
-            # the <= filter excludes a half-written partition rnd+1
-            # left by a crashed prior attempt at the current round
-            return (self.spark.table(self._seen_name)
-                    .filter(F.col("rnd") <= rnd)
-                    .select("url", "depth"))
+    def _seen_history(self):
+        """The admission history (committed frontier rounds) as a
+        DataFrame of (url, depth): a manifest-driven frontier-table
+        read with an explicit schema."""
         return (self.frontier_table.read(schema=self._frontier_schema)
                 .select("url", "depth"))
-
-    # ---- ingested-src seen store (image-ingest twin of the above) ----
-
-    def _ensure_imgseen_store(self, buckets: int) -> str:
-        """Bucketed catalog table over the ingested-src history — the
-        image-ingest twin of _ensure_seen_store: one slim (src) copy
-        of each committed images round, PARTITIONED BY round and
-        CLUSTERED BY src, so the history side of the per-round
-        src-seen anti-join (_ingest_images step 2) is exchange-free —
-        only the round's new refs shuffle, never the 10^9+ previously
-        ingested srcs. Derived index: the images SnapshotTable stays
-        the source of truth and _imgseen_store_heal rebuilds any
-        missing partition on resume, so exactness never depends on
-        the store surviving."""
-        import hashlib
-
-        path = self._paths("imgseen_bucketed")
-        digest = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
-        name = f"imgseen_bkt_{digest}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        resuming = os.path.isdir(path)
-        self.spark.sql(
-            f"CREATE TABLE {name} (src STRING, rnd INT) "
-            f"USING PARQUET PARTITIONED BY (rnd) "
-            f"CLUSTERED BY (src) INTO {buckets} BUCKETS "
-            f"LOCATION '{path}'")
-        if resuming:
-            self.spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
-        return name
-
-    def _imgseen_store_write(self, rnd: int) -> None:
-        """Mirror committed images round ``rnd`` into store partition
-        ``rnd`` (src only, bucket-shuffled once — O(round's new srcs),
-        not O(history)). INSERT OVERWRITE keeps replays idempotent;
-        called only AFTER the round's images snapshot commit, so a
-        crash between commit and mirror is healed on resume."""
-        if self._imgseen_name is None:
-            return
-        rdir = self._paths("images", rnd)
-        if not os.path.isdir(rdir):
-            return
-        rows = (self.spark.read.schema("src string")
-                .option("basePath", self._paths("images"))
-                .parquet(rdir)
-                .select("src")
-                .repartition(self._seen_buckets, F.col("src")))
-        view = f"{self._imgseen_name}_delta"
-        rows.createOrReplaceTempView(view)
-        self.spark.sql(
-            f"INSERT OVERWRITE TABLE {self._imgseen_name} "
-            f"PARTITION (rnd={rnd}) SELECT src FROM {view}")
-
-    def _imgseen_store_heal(self) -> None:
-        """Resume self-heal: rebuild any store partition missing for
-        a committed images round (crash window between a round's
-        images commit and its mirror write — or a wiped store dir)."""
-        if self._imgseen_name is None or not self.images_table.exists():
-            return
-        have = {int(r["partition"].split("=")[1]) for r in
-                self.spark.sql(
-                    f"SHOW PARTITIONS {self._imgseen_name}").collect()}
-        for m in self.images_table.lineage()[-1]["members"]:
-            r = int(m.split("=")[1])
-            if r not in have:
-                self._imgseen_store_write(r)
 
     # ---- seeds ----
 
@@ -1355,7 +1148,7 @@ class FrontierEngine:
             eff_cap = F.col("salt_cap")
             base = F.lit(0).cast("long")
         df = df.withColumn("rn", p["rn"])
-        if self.freeze_frontier and bound is not None:
+        if bound is not None:
             is_f = (F.col("rn") > eff_cap) & (F.col("depth") <= bound)
             # dense frozen rank: base + running count of f-rows in
             # (depth, url) order — same window spec as rn, one shuffle
@@ -1416,14 +1209,13 @@ class FrontierEngine:
         candidate touching a frozen URL survives the anti-join."""
         if self.enforce_politeness:
             bound = None
-            if self.freeze_frontier:
-                if rnd == 0:
-                    bound = 0     # seeds are depth 0; arrivals >= 1
-                else:
-                    bdir = os.path.join(self._paths("frontier", rnd - 1),
-                                        "sel=b")
-                    if os.path.isdir(bdir):
-                        bound = self._footer_min_depth(bdir)
+            if rnd == 0:
+                bound = 0     # seeds are depth 0; arrivals >= 1
+            else:
+                bdir = os.path.join(self._paths("frontier", rnd - 1),
+                                    "sel=b")
+                if os.path.isdir(bdir):
+                    bound = self._footer_min_depth(bdir)
             takes, tstats = None, None
             takes_sdf = None
             if self._cursor_spark:
@@ -1455,7 +1247,7 @@ class FrontierEngine:
             "popped": (int(takes["take"].sum()) if takes is not None
                        else tstats["total_take"] if tstats is not None
                        else 0)}
-        if self.enforce_politeness and self.freeze_frontier:
+        if self.enforce_politeness:
             if not self._cursor_spark:
                 self._maybe_bootstrap_spill(rnd, counts)
             if self._cursor_spark:
@@ -1522,17 +1314,13 @@ class FrontierEngine:
         if st.get("done"):
             return
         rnd = st["completed_rounds"]
-        if rnd > 0 and self.enforce_politeness and self.freeze_frontier:
+        if rnd > 0 and self.enforce_politeness:
             self._load_cursor(rnd)   # resume: cursor as of round rnd
         if rnd == 0:
             self._write_frontier(
                 self.seed_claims()
                 .withColumn("host", url_host(F.col("url")))
                 .select("url", "depth", "host"), 0)
-            self._seen_store_write(0)
-        else:
-            self._seen_store_heal(rnd)
-            self._imgseen_store_heal()
         while rnd < max_rounds:
             t_round = time.time()
             steps: dict[str, float] = {}
@@ -1656,17 +1444,13 @@ class FrontierEngine:
             # deferred anti-join. Reading from checkpoint also
             # truncates lineage across rounds.
             cand = cand.select("url", "depth", "host")
-            # one read of the committed admission history per round,
-            # shared by every variant below: the bucketed seen-store
-            # when enabled (history side of the joins below is then
-            # exchange-free — see _ensure_seen_store), else a
+            # one read of the committed admission history per round: a
             # manifest-driven frontier read with an explicit schema
             # (skips per-dir footer inference that grows O(rounds) —
             # an incremental union-DF cache was tried and LOST: a
             # 16-deep union of single-dir scans re-analyzes slower
             # than one multi-dir scan lists)
-            frontier_hist = self._seen_history(rnd)
-            all_seen = frontier_hist.select("url")
+            frontier_hist = self._seen_history()
             if self.enforce_politeness:
                 # Depth-correcting admit. Under politeness a URL can be
                 # FIRST admitted at a non-minimal depth: its shallow
@@ -1681,69 +1465,22 @@ class FrontierEngine:
                 # decrease per re-admit ⇒ terminates. Without
                 # politeness, BFS admits every URL at minimal depth on
                 # first sight, so the cheaper plain anti-join below
-                # stays exact. The optional bloom pre-filter composes:
-                # certain-new candidates skip the exact join; only
-                # maybe-seen ones pay the depth check.
+                # stays exact.
                 seen_best = (frontier_hist.groupBy("url")
                              .agg(F.min("depth").alias("seen_depth")))
-                if self.use_bloom or self.use_cuckoo:
-                    if self.use_bloom:
-                        from ..operators.bloom import (build_bloom as _build,
-                                                       bloom_maybe_seen
-                                                       as _maybe)
-                    else:
-                        from ..operators.cuckoo import (build_cuckoo
-                                                        as _build,
-                                                        cuckoo_maybe_seen
-                                                        as _maybe)
-
-                    seen_h = all_seen.withColumn("url_hash",
-                                                 url_hash(F.col("url")))
-                    flagged = _maybe(
-                        cand.withColumn("url_hash", url_hash(F.col("url"))),
-                        _build(seen_h))
-                    certain_new = (flagged.filter(~F.col("maybe_seen"))
-                                   .drop("maybe_seen", "bucket_id",
-                                         "url_hash"))
-                    maybe = (flagged.filter(F.col("maybe_seen"))
-                             .drop("maybe_seen", "bucket_id", "url_hash"))
-                else:
-                    certain_new, maybe = None, cand
-                improved = (maybe.join(seen_best, "url", "left")
+                new_cand = (cand.join(seen_best, "url", "left")
                             .filter(F.col("seen_depth").isNull()
                                     | (F.col("depth") < F.col("seen_depth")))
                             .drop("seen_depth"))
-                new_cand = (improved if certain_new is None
-                            else certain_new.unionByName(improved))
-            elif self.use_bloom or self.use_cuckoo:
-                # at 10^10 scale: the pre-filter kills the bulk of
-                # already-seen candidates before the exact anti-join
-                if self.use_bloom:
-                    from ..operators.bloom import (
-                        build_bloom as _build,
-                        seen_anti_join_with_bloom as _anti)
-                else:
-                    from ..operators.cuckoo import (
-                        build_cuckoo as _build,
-                        seen_anti_join_with_cuckoo as _anti)
-
-                seen_h = all_seen.withColumn("url_hash",
-                                             url_hash(F.col("url")))
-                new_cand = _anti(
-                    cand.withColumn("url_hash", url_hash(F.col("url"))),
-                    seen_h, _build(seen_h),
-                    confirm_col="url").drop("url_hash")
             else:
-                new_cand = cand.join(all_seen, "url", "left_anti")
+                new_cand = cand.join(frontier_hist.select("url"), "url",
+                                     "left_anti")
             new_frontier = (
                 deferred.unionByName(new_cand)
                 .groupBy("url").agg(F.min("depth").alias("depth"),
                                     F.first("host").alias("host")))
             self._write_frontier(new_frontier, rnd + 1)
             tick("admit")
-            if self._seen_name is not None:
-                self._seen_store_write(rnd + 1)
-                tick("seen_mirror")
             # per-round metrics + per-partition lineage straight from
             # the parquet footers (no Spark job; one footer per
             # written partition, counts sum to the edge total)
@@ -1771,10 +1508,8 @@ class FrontierEngine:
 
     # ---- resolve phase ----
 
-    def resolve(self, max_iters: int | None = None,
-                strategy: str = "skeleton",
-                n_shards: int = 4,
-                shard_procs: int | None = None) -> DataFrame:
+    def resolve(self, strategy: str = "skeleton",
+                n_shards: int = 4) -> DataFrame:
         """Exact DFS-claim resolution over the explored edge set.
         Returns the visits DataFrame: (url, url_hash, host, depth,
         parent_url, link_index, prio, status_code, visit_rank,
@@ -1785,30 +1520,22 @@ class FrontierEngine:
         sequential DFS exactly — so the engine keeps everything
         EXPENSIVE distributed (fetch, parse, canonicalize, admission,
         dedup: all upstream of here) and resolves ordering over a
-        COMPACT skeleton: edges dictionary-encoded to int64 url-hashes
+        COMPACT skeleton: edges dictionary-encoded to dense int32 ids
         JVM-side (~12 bytes/edge on disk), pulled via Arrow, claimed
         with an integer explicit-stack DFS (~20 ns/edge in C). The
         sweep is the fast path whenever the dense-id skeleton fits the
         driver (~200 GB at 10^10 edges).
 
         strategy="sharded": the out-of-core exact path — seeds split
-        into contiguous seed-rank shards, each shard's reachable
-        subgraph swept alone with claim state carried across shards
-        (see _resolve_sharded). Bounds driver memory by the largest
-        shard's edge set instead of the web; claims identical
-        row-for-row to "skeleton".
+        into `n_shards` contiguous seed-rank shards, each shard's
+        reachable subgraph swept alone, in seed-rank order, with claim
+        state carried across shards (see _resolve_sharded). Bounds
+        driver memory by the largest shard's edge set instead of the
+        web; claims identical row-for-row to "skeleton".
 
-        strategy="fixpoint": the distributed Jacobi full-recompute
-        fixpoint (provably convergent — the k-th smallest true claim
-        is stable after round k — but worst-case linear rounds;
-        measured 155 rounds on a 50k-page random web). Kept for
-        cross-checking (tests assert both agree) and because it is
-        the implemented exact path past driver memory. Each round it
-        records a CERTIFIED-FINALIZED PREFIX in `resolve_certified`
-        — claims with prio strictly below the smallest prio that
-        changed this round are provably final (see the in-loop
-        argument) — so a streaming consumer can emit the visit order
-        incrementally while the tail converges."""
+        Both strategies address nodes with int32 ids: a node table of
+        MAX_NODES (2^31) or more raises NodeCeilingError before the
+        skeleton is written."""
         # per-call step timings: RESET here so two consecutive
         # resolve() calls on one engine report disjoint,
         # non-accumulating breakdowns (the bug class round-4 ADVICE
@@ -1827,11 +1554,10 @@ class FrontierEngine:
         if strategy == "skeleton":
             claims = self._resolve_skeleton(edges, seeds)
         elif strategy == "sharded":
-            claims = self._resolve_sharded(edges, seeds, n_shards=n_shards,
-                                           shard_procs=shard_procs)
+            claims = self._resolve_sharded(edges, seeds, n_shards=n_shards)
         else:
-            claims = self._resolve_fixpoint(edges.localCheckpoint(), seeds,
-                                            max_iters)
+            raise ValueError(f"unknown resolve strategy {strategy!r}; "
+                             "expected 'skeleton' or 'sharded'")
         return self._finalize_visits(claims)
 
     def _encode_skeleton(self, edges: DataFrame, seeds: DataFrame):
@@ -2007,8 +1733,7 @@ class FrontierEngine:
         return self._claims_to_visits(claims_path, seeds, nodes_id)
 
     def _resolve_sharded(self, edges: DataFrame, seeds: DataFrame,
-                         n_shards: int = 4,
-                         shard_procs: int | None = None) -> DataFrame:
+                         n_shards: int = 4) -> DataFrame:
         """Seed-branch-sharded exact resolve — the out-of-core path
         past driver memory that the skeleton strategy's docstring
         promises. Claims under seed rank r never depend on later seeds
@@ -2027,14 +1752,17 @@ class FrontierEngine:
         nodes; claims are written as dense ids and the id→url mapping
         rides the distributed rejoin in _claims_to_visits), not the
         web: at 10^10 edges the global skeleton is ~200 GB of driver
-        RAM while 64-way sharding needs only the largest branch. The trade is duplicated edge labeling where
-        shard subgraphs overlap — distributed compute paid to bound
-        sequential memory. Produces claims row-for-row equal to
+        RAM while 64-way sharding needs only the largest branch. The
+        trade is duplicated edge labeling where shard subgraphs
+        overlap — distributed compute paid to bound sequential
+        memory. Produces claims row-for-row equal to
         strategy='skeleton' (pinned in tests/test_crawl_golden.py)."""
+        from concurrent.futures import ThreadPoolExecutor
+
         import numpy as np
         import pyarrow as pa
 
-        from ..core.dfs_kernel import SweepState, _load_lib, csr_runlength
+        from ..core.dfs_kernel import SweepState, csr_runlength
 
         nodes_path, skel_path, nodes_id = self._encode_skeleton(edges, seeds)
         t0 = time.time()
@@ -2172,37 +1900,6 @@ class FrontierEngine:
             return c_id, i_sorted, uniq_p_id, bounds
 
         order = sorted(shard_seed_ids)
-        if shard_procs is None:
-            # auto-gate: the parallel path pays fork+IPC per shard, so
-            # it only engages when the labeled edge set is big enough
-            # that per-shard sweeps are seconds, not milliseconds
-            n_labeled = sum(self._footer_rows(sharded_path).values())
-            # overlap gate: the optimistic parallel path redoes each
-            # shard's FULL sweep speculatively, so it only wins when
-            # shard subgraphs are (near-)disjoint — sum(shard rows) /
-            # global skeleton rows ≈ 1. On a densely cross-linked web
-            # every seed branch reaches most of the graph (measured on
-            # the 16M bench web: 8 shards of ~58M rows each over an
-            # 80M-edge skeleton, parallel sweep 83 s vs sequential
-            # 9 s), so heavy overlap falls back to the sequential
-            # skip-claimed sweep. Both counts come from parquet
-            # footers — no Spark job.
-            n_skel = sum(self._footer_rows(skel_path).values())
-            overlap = n_labeled / max(1, n_skel)
-            shard_procs = (min(len(order),
-                               max(2, (os.cpu_count() or 8) // 4))
-                           if n_labeled >= 2_000_000 and overlap <= 1.3
-                           else 1)
-            self.timings["shard_overlap"] = round(overlap, 2)
-        if (shard_procs > 1 and len(order) > 1
-                and _load_lib() is not None):
-            # parallel optimistic sweeps + sequential validation (C
-            # kernel required: the validator adopts the shared claimed
-            # bitmap for conflict re-sweeps)
-            return self._sweep_shards_parallel(
-                order, shard_seed_ids, sharded_path, nodes_path,
-                seed_rows, seeds, _load_shard, shard_procs, nodes_id)
-        from concurrent.futures import ThreadPoolExecutor
         pool = ThreadPoolExecutor(max_workers=1)
         # shard 0's load overlaps the node-count footer scan — the
         # only shard whose IO nothing else can hide
@@ -2242,127 +1939,6 @@ class FrontierEngine:
         self.timings["dfs_sweep"] = round(time.time() - t0 - write_sec, 2)
         self.timings["sweep_impl"] = state.impl
         self.timings["shard_sweeps"] = shard_secs
-        return self._claims_to_visits(claims_path, seeds, nodes_id)
-
-    def _sweep_shards_parallel(self, order, shard_seed_ids,
-                               sharded_path, nodes_path, seed_rows,
-                               seeds, load_shard, shard_procs, nodes_id):
-        """Parallel seed-branch sweeps with EXACT validation — the
-        per-shard DFS sweeps of `_resolve_sharded` fanned out to a
-        process pool (the C kernel is ctypes and each worker is its
-        own process, so the sweeps genuinely overlap), while the claim
-        semantics stay identical to the sequential path:
-
-          * every shard is swept OPTIMISTICALLY (empty claim state)
-            in a forked worker — all shards concurrently, bounded by
-            `shard_procs` workers (driver memory: one shard edge set +
-            one claimed bitmap per LIVE worker);
-          * the parent consumes results in seed-rank order and
-            validates each against the true global claim state: claims
-            disjoint from everything earlier ⇒ the optimistic sweep is
-            provably the true sweep (see _shard_sweep_optimistic) and
-            is accepted wholesale with ranks shifted to global;
-          * on conflict, the longest conflict-free seed PREFIX is
-            accepted (per-seed boundaries come from the kernel's
-            seed_counts) and the remaining seeds re-sweep in-process
-            against the true state — exactly the sequential semantics,
-            paid only for the overlapping suffix.
-
-        Disjoint seed branches (the common case when seeds are
-        distinct sites) validate clean and the sweep wall collapses
-        from sum(shards) to ~max(shard); heavily overlapping branches
-        degrade gracefully toward the sequential cost plus a wasted
-        (but parallel) optimistic pass. `shard_resweeps` in timings
-        reports how much of the optimistic work survived."""
-        import multiprocessing as mp
-        import numpy as np
-        from concurrent.futures import ProcessPoolExecutor
-
-        from ..core.dfs_kernel import (SweepState, claimed_mask,
-                                       mark_claimed)
-
-        t0 = time.time()
-        _, n_nodes = _node_offsets(nodes_path)
-        self.timings["skeleton_read"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        claims_path = self._paths("claims")
-        shutil.rmtree(claims_path, ignore_errors=True)
-        seed_prio = {int(r["id"]): r["prio"].encode() for r in seed_rows}
-        # the true global claim state: a 1-bit/node bitmap (claim
-        # MEMBERSHIP is all the validator and the resweeps consume)
-        claimed = np.zeros((n_nodes + 7) // 8, np.uint8)
-        rank = 0
-        shard_secs: list[float] = []
-        resweeps = 0
-        write_sec = 0.0
-        sweep_impl = "c"
-        max_depth = int(self.cfg.max_depth)
-        # explicit fork: children inherit the loaded C kernel and skip
-        # the multi-second pyspark re-import a spawn/forkserver child
-        # pays; pool children exit via os._exit, so the parent's py4j
-        # socket to the (separate) JVM process is never torn down
-        with ProcessPoolExecutor(max_workers=shard_procs,
-                                 mp_context=mp.get_context("fork")) as ex:
-            futs = [ex.submit(_shard_sweep_optimistic,
-                              (sharded_path, s, shard_seed_ids[s],
-                               n_nodes, max_depth))
-                    for s in order]
-            for k, fut in enumerate(futs):
-                s = order[k]
-                (_s, n, out_id, out_depth, out_pr, out_li, seed_counts,
-                 wall, impl) = fut.result()
-                sweep_impl = impl
-                shard_secs.append(wall)
-                rank0_shard = rank
-                conflict = (np.flatnonzero(claimed_mask(claimed, out_id))
-                            if n else np.empty(0, np.int64))
-                if len(conflict) == 0:
-                    acc = n
-                    reseed_from = None
-                else:
-                    # first conflicting claim → its seed segment;
-                    # accept every seed before it (their claims end
-                    # strictly before the conflict index)
-                    first = int(conflict[0])
-                    seg = int(np.searchsorted(seed_counts, first,
-                                              side="right"))
-                    acc = int(seed_counts[seg - 1]) if seg > 0 else 0
-                    reseed_from = seg
-                parts = []
-                if acc:
-                    a_pr = out_pr[:acc].copy()
-                    a_pr[a_pr >= 0] += rank0_shard
-                    mark_claimed(claimed, out_id[:acc])
-                    rank += acc
-                    parts.append((out_id[:acc], out_depth[:acc], a_pr,
-                                  out_li[:acc]))
-                if reseed_from is not None:
-                    resweeps += 1
-                    c_id, i_sorted, uniq_p, bounds = load_shard(s)
-                    rest = np.asarray(
-                        shard_seed_ids[s][reseed_from:], np.int32)
-                    st = SweepState(n_nodes, claimed=claimed, rank=rank)
-                    n2, r_id, r_depth, r_pr, r_li = st.sweep_shard(
-                        c_id, i_sorted, uniq_p, bounds, rest, max_depth)
-                    rank = st.rank
-                    if n2:
-                        parts.append((r_id, r_depth, r_pr, r_li))
-                if parts:
-                    f_id = np.concatenate([p[0] for p in parts])
-                    f_dep = np.concatenate([p[1] for p in parts])
-                    f_pr = np.concatenate([p[2] for p in parts])
-                    f_li = np.concatenate([p[3] for p in parts])
-                    t_w = time.time()
-                    self._write_claims(
-                        claims_path, f_id, f_dep, f_pr, f_li,
-                        rank0=rank0_shard, part=s,
-                        seed_prio_by_id=seed_prio)
-                    write_sec += time.time() - t_w
-        self.timings["claims_write"] = round(write_sec, 2)
-        self.timings["dfs_sweep"] = round(time.time() - t0 - write_sec, 2)
-        self.timings["sweep_impl"] = f"{sweep_impl}*{shard_procs}procs"
-        self.timings["shard_sweeps"] = shard_secs
-        self.timings["shard_resweeps"] = resweeps
         return self._claims_to_visits(claims_path, seeds, nodes_id)
 
     @staticmethod
@@ -2479,88 +2055,11 @@ class FrontierEngine:
         self.timings[timing_key] = round(time.time() - t0, 2)
         return out
 
-    def _resolve_fixpoint(self, edges: DataFrame, seeds: DataFrame,
-                          max_iters: int | None) -> DataFrame:
-        cfg = self.cfg
-        claims = seeds
-        self.resolve_deltas: list[int] = []
-        self.resolve_certified: list[dict] = []
-        # Convergence: the k-th smallest true claim is stable after
-        # round k (transient claims below it need transient parents
-        # with even smaller prios, grounded in the always-true seeds),
-        # so the fixpoint terminates in ≤ |claims| rounds; typical
-        # convergence is ~max_depth + a few correction waves. The cap
-        # is a diagnostic backstop, not the convergence criterion.
-        iters = max_iters or max(4 * cfg.max_depth + 20, 48)
-        for it in range(iters):
-            children = (
-                edges.join(claims.select(F.col("url").alias("parent_url"),
-                                         F.col("prio").alias("p_prio"),
-                                         F.col("depth").alias("p_depth")),
-                           "parent_url")
-                .filter(F.col("p_depth") + 1 <= cfg.max_depth)
-                .select(F.col("child_url").alias("url"),
-                        F.concat(F.col("p_prio"),
-                                 _hex_prio(F.col("link_index"))).alias("prio"),
-                        (F.col("p_depth") + 1).alias("depth"),
-                        F.col("parent_url"),
-                        F.col("link_index")))
-            cands = seeds.unionByName(children)
-            # localCheckpoint truncates lineage: without it iteration
-            # k's plan embeds all previous rounds (analysis blowup)
-            new_claims = (
-                cands.groupBy("url")
-                .agg(F.min_by(F.struct("prio", "depth", "parent_url",
-                                       "link_index"), F.col("prio")).alias("c"))
-                .select("url", "c.prio", "c.depth", "c.parent_url",
-                        "c.link_index")).localCheckpoint()
-            d_new = (new_claims.select("url", "prio")
-                     .exceptAll(claims.select("url", "prio")))
-            d_old = (claims.select("url", "prio")
-                     .exceptAll(new_claims.select("url", "prio")))
-            ch = (d_new.unionByName(d_old)
-                  .agg(F.count("*").alias("n"),
-                       F.min("prio").alias("minp")).collect()[0])
-            delta = ch["n"]
-            # CERTIFIED-FINALIZED PREFIX: every claim whose prio is
-            # strictly below the smallest prio that changed this round
-            # is provably final. (Label-correcting argument: a future
-            # improvement p' < minp would extend a parent whose prio
-            # is a proper prefix of p' — hence also < minp — so the
-            # parent is final and unchanged; full-recompute Jacobi
-            # re-applies ALL edges from it every round, so p' was
-            # already offered and min-combined this round.) The engine
-            # records (minp, count, checksum) per round — a streaming
-            # consumer may emit exactly that prefix of the visit order
-            # while the tail still converges; tests re-derive each
-            # prefix from the converged claims and pin the checksums.
-            cert_pred = (F.lit(True) if ch["minp"] is None
-                         else F.col("prio") < ch["minp"])
-            cert = (new_claims.filter(cert_pred)
-                    .agg(F.count("*").alias("n"),
-                         F.coalesce(F.bit_xor(F.xxhash64("url", "prio")), F.lit(0)).alias("chk")).collect()[0])
-            self.resolve_certified.append(
-                {"minp": ch["minp"], "n": int(cert["n"]),
-                 "chk": int(cert["chk"])})
-            claims = new_claims
-            self.last_resolve_iters = it + 1
-            self.resolve_deltas.append(delta)
-            if os.environ.get("SPARK_GRAFT_FIXPOINT_PROGRESS"):
-                print(f"# fixpoint round {it + 1}: delta={delta} "
-                      f"minp_len={len(ch['minp'] or '')}",
-                      file=sys.stderr, flush=True)
-            if delta == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"DFS claim fixpoint did not converge in {iters} rounds")
-        return claims
-
     def _finalize_visits(self, claims: DataFrame) -> DataFrame:
-        """Attach statuses, the global visit rank (from the skeleton
-        sweep when available — exact visit order for free — else a
-        window over prio), and the per-host politeness batch schedule
-        (always a DISTRIBUTED host-partitioned window). Claims of
+        """Attach statuses to the swept claims (which already carry
+        the global visit rank — the sweep claims in exact visit order)
+        and the per-host politeness batch schedule (a DISTRIBUTED
+        host-partitioned window). Claims of
         never-materialized URLs are 404s (dead links — fetched as
         absent)."""
         cfg = self.cfg
@@ -2574,38 +2073,6 @@ class FrontierEngine:
                               F.coalesce("status_code", F.lit(404)))
                   .withColumn("host", url_host(F.col("url")))
                   .withColumn("url_hash", url_hash(F.col("url"))))
-        if "visit_rank" not in claims.columns:
-            # fixpoint path: global rank DISTRIBUTED —
-            # repartitionByRange(prio) gives ordered, non-overlapping
-            # key ranges; rank = per-partition row_number + the
-            # cumulative offset of the partitions before it (one
-            # O(npart) collect). A bare Window.orderBy("prio") pulled
-            # every row into ONE partition — fine at test scale,
-            # hostile at the 16M+ webs the fixpoint bench runs. prios
-            # are unique (each encodes one exact tree path), so range
-            # boundaries cannot split ties. (The skeleton sweep emits
-            # ranks directly, in exact visit order.)
-            npart = max(self.spark.sparkContext.defaultParallelism, 4)
-            ranked = (visits.repartitionByRange(npart, "prio")
-                      .withColumn("_pid", F.spark_partition_id())
-                      .localCheckpoint())  # pin pids across the two uses
-            cnt_rows = sorted(
-                (r["_pid"], r["n"]) for r in
-                ranked.groupBy("_pid").agg(F.count("*").alias("n"))
-                .collect())
-            offs, acc = [], 0
-            for pid, n_rows in cnt_rows:
-                offs.append((pid, acc))
-                acc += n_rows
-            off_df = self.spark.createDataFrame(
-                offs or [(0, 0)], "_pid int, _off long")
-            visits = (ranked.join(F.broadcast(off_df), "_pid")
-                      .withColumn(
-                          "visit_rank",
-                          (F.row_number().over(
-                              Window.partitionBy("_pid").orderBy("prio"))
-                           - 1 + F.col("_off")).cast("long"))
-                      .drop("_pid", "_off"))
         # politeness schedule: k-th visit of host h → batch k//cap(h).
         # DISTRIBUTED: the window partitions by host (ordering within
         # a host by prio ≡ visit order), so the only serial artifact
@@ -2709,40 +2176,12 @@ class FrontierEngine:
                              if self.images_table.exists() else [])
                  if m < f"round={rnd:05d}"]
         if prior:
-            if self._imgseen_name is not None:
-                # bucketed store: the scan reports hash-partitioning
-                # on src, so the anti-join below shuffles ONLY the
-                # refs side (O(round)); the strict < excludes a
-                # half-written partition from a crashed prior attempt
-                # at this round
-                seen = (self.spark.table(self._imgseen_name)
-                        .filter(F.col("rnd") < rnd)
-                        .select("src"))
-            else:
-                seen = (self.spark.read.schema("src string")
-                        .option("basePath", self._paths("images"))
-                        .parquet(*[os.path.join(self._paths("images"), m)
-                                   for m in prior])
-                        .select("src"))
-            if self.ingest_bloom:
-                # the J1 treatment at 10^9+ ingested srcs: a
-                # partitioned bloom over xxhash64(src) kills the
-                # vast majority of already-seen refs before the
-                # shuffle; bloom-positive srcs still take the exact
-                # STRING anti-join, so the output is identical to the
-                # plain path (pinned by the golden identity test) —
-                # correctness never depends on the filter
-                from ..operators.bloom import (build_bloom,
-                                               seen_anti_join_with_bloom)
-                seen_h = seen.withColumn("h", F.xxhash64("src"))
-                bloom = build_bloom(seen_h, "h")
-                refs = (seen_anti_join_with_bloom(
-                            refs.withColumn("h", F.xxhash64("src")),
-                            seen_h, bloom, hash_col="h",
-                            confirm_col="src")
-                        .drop("h"))
-            else:
-                refs = refs.join(seen, "src", "left_anti")
+            seen = (self.spark.read.schema("src string")
+                    .option("basePath", self._paths("images"))
+                    .parquet(*[os.path.join(self._paths("images"), m)
+                               for m in prior])
+                    .select("src"))
+            refs = refs.join(seen, "src", "left_anti")
         # byte fetch — join strategy by round size, mirroring the page
         # fetch: big rounds merge-join the src-bucketed dim (only the
         # refs side shuffles; no serial driver broadcast build of a
@@ -2802,7 +2241,6 @@ class FrontierEngine:
         counts = self._footer_rows(self._paths("images", rnd))
         self.images_table.commit_dir(f"round={rnd:05d}", "round", counts,
                                      extra={"round": rnd})
-        self._imgseen_store_write(rnd)
         return {"images_new": sum(counts.values()),
                 "images_invalid": sum(v for k, v in counts.items()
                                       if k.startswith("valid=false"))}

@@ -19,6 +19,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Driver heap sized to the host: a sixth of physical memory
+    (MemTotal), clamped to 1-6 GB. The heap is pinned and pre-touched
+    (see below), so it must fit beside the Python workers, the page
+    cache and the tmpfs shuffle scratch; SPARK_GRAFT_DRIVER_MEM
+    overrides it."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{max(1, min(6, kb // 2**20 // 6))}g"
+
+
 def get_spark(app: str = "crawler_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -26,6 +38,7 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
@@ -61,7 +74,7 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         .config("spark.local.dir",
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR",
                                "/dev/shm/spark-local"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_mem)
         # pin the heap: with a floating -Xms, every full GC uncommits
         # heap pages and the next allocation burst re-faults them
         # across all task threads — measured as ~26 of 32 CPUs in
@@ -69,8 +82,7 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         # user CPU sat near zero. Xms=Xmx + AlwaysPreTouch faults the
         # heap exactly once at startup and removes the storm.
         .config("spark.driver.extraJavaOptions",
-                "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-                + " -XX:+AlwaysPreTouch")
+                f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         # \r-progress bars interleave with tool stdout (check_oracle
         # lines were swallowed when piped through grep)

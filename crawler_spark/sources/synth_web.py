@@ -52,19 +52,7 @@ def _lane(j: np.ndarray, salt: int) -> np.ndarray:
 def generate_bench_web(out_dir: str, n_pages: int = 1_000_000,
                        n_hosts: int = 1000, mega_pct: int = 30,
                        seed: int = 42, n_seeds: int = 64,
-                       n_images: int | None = None,
-                       n_clusters: int = 0) -> dict:
-    """``n_clusters`` > 0 makes the web PARTITIONABLE: hosts belong to
-    cluster ``host_id % n_clusters``, cross-host links stay inside the
-    source page's cluster, and the seed list is ordered in contiguous
-    per-cluster blocks — so the seed-branch-sharded resolve's
-    contiguous seed-rank shards get (near-)disjoint subgraphs, the
-    shape the parallel optimistic sweep is built for (a seed list
-    grouped by site group — the common way real crawl seed lists are
-    organized). Requires n_hosts % n_clusters == 0. Default 0 keeps
-    the original fully-cross-linked shape byte-identical."""
-    if n_clusters:
-        assert n_hosts % n_clusters == 0, (n_hosts, n_clusters)
+                       n_images: int | None = None) -> dict:
     os.makedirs(out_dir, exist_ok=True)
     j = np.arange(n_pages, dtype=np.int64)
     if n_images is None:
@@ -107,29 +95,8 @@ def generate_bench_web(out_dir: str, n_pages: int = 1_000_000,
     pos = (splitmix64(lh ^ _U64(0xABCD)) %
            host_count[link_host].astype(_U64)).astype(np.int64)
     same_target = order[host_starts[link_host] + pos]
-    if n_clusters:
-        # cross links stay in-cluster: pick a host ≡ source cluster
-        # (mod n_clusters), then a page on it
-        q = n_hosts // n_clusters
-        th = ((link_host % n_clusters)
-              + n_clusters * (splitmix64(lh ^ _U64(0x5555))
-                              % _U64(q)).astype(np.int64))
-        # a host can be EMPTY at small n_pages/n_hosts ratios (page →
-        # host assignment is hashed); host_count's min-1 clamp would
-        # then silently index the NEXT host's pages, breaking the
-        # in-cluster invariant the parallel-sweep bench depends on.
-        # Retarget empty picks to the source's own host — same
-        # cluster by construction, nonempty (the source lives there).
-        host_size = host_ends - host_starts
-        th = np.where(host_size[th] == 0, link_host, th)
-        pos2 = (splitmix64(lh ^ _U64(0x9999))
-                % host_count[th].astype(_U64)).astype(np.int64)
-        cross_target = order[host_starts[th] + pos2]
-        assert (host_id[cross_target] % n_clusters
-                == link_host % n_clusters).all()
-    else:
-        cross_target = (splitmix64(lh ^ _U64(0x5555)) % _U64(n_pages)
-                        ).astype(np.int64)
+    cross_target = (splitmix64(lh ^ _U64(0x5555)) % _U64(n_pages)
+                    ).astype(np.int64)
     target = np.where(same_host, same_target, cross_target)
 
     load_ms = (50 + (_lane(j, seed + 8) % _U64(1950))).astype(np.int32)
@@ -227,18 +194,8 @@ def generate_bench_web(out_dir: str, n_pages: int = 1_000_000,
     # should carry real work, not 2^6 urls
     seed_pages = []
     for k in range(n_seeds):
-        if n_clusters:
-            # contiguous per-cluster seed blocks: seeds of cluster c
-            # occupy ranks [c·n_seeds/n_clusters, (c+1)·n_seeds/
-            # n_clusters) — contiguous seed-rank shards then map to
-            # whole clusters
-            c = k * n_clusters // n_seeds
-            idx = k - c * (n_seeds // n_clusters)
-            h = c + n_clusters * (idx % (n_hosts // n_clusters))
-            off = (idx // (n_hosts // n_clusters)) % int(host_count[h])
-        else:
-            h = k % n_hosts
-            off = (k // n_hosts) % int(host_count[h])
+        h = k % n_hosts
+        off = (k // n_hosts) % int(host_count[h])
         seed_pages.append(int(order[host_starts[h] + off]))
     seeds = pa.table({
         "url": pa.array([f"http://h{host_id[p]}.bench.org/p{p}#home"

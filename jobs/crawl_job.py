@@ -56,11 +56,6 @@ def main() -> None:
                     "crawler-engine.ts:565-566)")
     ap.add_argument("--politeness", action="store_true",
                     help="enforce per-host caps per explore round")
-    ap.add_argument("--bloom", action="store_true",
-                    help="bloom pre-filter on the frontier anti-join")
-    ap.add_argument("--cuckoo", action="store_true",
-                    help="cuckoo-filter pre-filter instead of bloom "
-                         "(same certain-new contract, O(1) deletion)")
     ap.add_argument("--screenshots", action="store_true",
                     help="commit the S6 per-page screenshot table "
                          "(idempotent, first-write-wins on image_id)")
@@ -74,18 +69,6 @@ def main() -> None:
                     help="src-bucketed cache of the images byte dim "
                          "(built once; big rounds then merge-join it "
                          "so only the refs side shuffles)")
-    ap.add_argument("--ingest-bloom", action="store_true",
-                    help="pre-filter the per-round image src-seen "
-                         "anti-join with the partitioned bloom "
-                         "(operators/bloom.py) — identical output, "
-                         "cheaper at 10^9+ ingested srcs")
-    ap.add_argument("--bucketed-seen", action="store_true",
-                    help="mirror the admission history into a "
-                         "round-partitioned, url-bucketed catalog "
-                         "table so the per-round seen joins keep the "
-                         "history side exchange-free (the 10^10-URL "
-                         "posture; identical output)")
-    ap.add_argument("--seen-buckets", type=int, default=64)
     ap.add_argument("--compact", action="store_true",
                     help="post-crawl table maintenance: compact the "
                          "per-round fast-append crawl/frontier tables "
@@ -118,13 +101,8 @@ def main() -> None:
                       custom_headers=tuple(args.header))
     eng = FrontierEngine(spark, cfg, args.web, args.ckpt,
                          enforce_politeness=args.politeness,
-                         use_bloom=args.bloom,
-                         use_cuckoo=args.cuckoo,
                          ingest_images=args.ingest_images,
-                         ingest_bloom=args.ingest_bloom,
-                         bucketed_images_dir=args.bucketed_images_dir,
-                         bucketed_seen=args.bucketed_seen,
-                         seen_buckets=args.seen_buckets)
+                         bucketed_images_dir=args.bucketed_images_dir)
     t0 = time.time()
     visits = eng.run()
     visits.write.mode("overwrite").parquet(os.path.join(args.out, "visits"))

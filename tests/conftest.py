@@ -12,7 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from crawler_spark.plans.session import get_spark
 
-    s = get_spark("crawler_spark_tests", cores=8, shuffle_partitions=8)
+    # local[N] comes from SPARK_GRAFT_CPUS, else the host's core count
+    s = get_spark("crawler_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
 

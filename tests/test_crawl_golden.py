@@ -97,37 +97,34 @@ def test_html_mode_matches_oracle(spark, tmp_path):
     visits.unpersist()
 
 
-def test_fixpoint_matches_skeleton(spark, tmp_path):
-    """The two resolution strategies — distributed Jacobi fixpoint and
-    skeleton heap sweep — produce identical claims."""
-    cfg = CrawlConfig(max_depth=3)
-    eng = FrontierEngine(spark, cfg, FIXDIR, fresh_ckpt(str(tmp_path / "xs")))
-    eng.explore()
-    a = {(r["url"], r["prio"], r["depth"], r["parent_url"], r["link_index"])
-         for r in eng.resolve(strategy="skeleton").collect()}
-    fix = eng.resolve(strategy="fixpoint")
-    b = {(r["url"], r["prio"], r["depth"], r["parent_url"], r["link_index"])
-         for r in fix.collect()}
-    assert a == b
+def _write_disjoint_trees_fixture(path: str, n_trees: int = 4) -> int:
+    """One complete binary tree of depth 3 per host, no cross-host
+    links, one seed per tree root: seed branches whose subgraphs are
+    disjoint. Returns the page count per tree."""
+    def link(i, href):
+        return dict(href=href, label=f"l{i}", selector=f"a.l{i}",
+                    element_type="a", pos_x=0, pos_y=0, link_index=i)
 
-    # certified-finalized prefixes: each round's record must equal the
-    # CONVERGED claims filtered to prio < minp — count AND checksum —
-    # i.e. the prefix the engine certified mid-convergence really was
-    # final. Prefix sizes are nondecreasing and end at the full set.
-    from pyspark.sql import functions as F
-    final = fix.select("url", "prio").cache()
-    total = final.count()
-    ns = [c["n"] for c in eng.resolve_certified]
-    assert ns == sorted(ns) and ns[-1] == total
-    assert len(eng.resolve_certified) == eng.last_resolve_iters
-    for rec in eng.resolve_certified:
-        pred = (F.lit(True) if rec["minp"] is None
-                else F.col("prio") < rec["minp"])
-        row = (final.filter(pred)
-               .agg(F.count("*").alias("n"),
-                    F.coalesce(F.bit_xor(F.xxhash64("url", "prio")), F.lit(0)).alias("chk")).collect()[0])
-        assert (int(row["n"]), int(row["chk"])) == (rec["n"], rec["chk"])
-    final.unpersist()
+    def page(url, hrefs):
+        host = url.split("/")[2]
+        return dict(url=url, host=host, status_code=200,
+                    title=f"T {url}", meta_description="", text_content="",
+                    headings=[], links=[link(i, h)
+                                        for i, h in enumerate(hrefs)],
+                    images=[], forms=[], load_time_ms=10)
+
+    os.makedirs(path, exist_ok=True)
+    pages, seed_urls = [], []
+    n_tree = 2 ** 4 - 1
+    for h in range(n_trees):
+        base_u = f"http://h{h}.test"
+        seed_urls.append(f"{base_u}/n0")
+        for i in range(n_tree):
+            kids = [f"{base_u}/n{c}" for c in (2 * i + 1, 2 * i + 2)
+                    if c < n_tree]
+            pages.append(page(f"{base_u}/n{i}", kids))
+    _write_web_tables(path, pages, seed_urls)
+    return n_tree
 
 
 def test_sharded_matches_skeleton_and_oracle(spark, tmp_path):
@@ -135,21 +132,32 @@ def test_sharded_matches_skeleton_and_oracle(spark, tmp_path):
     claim state carried across shards) reproduces strategy='skeleton'
     — and the sequential oracle — ROW-FOR-ROW including visit_rank,
     prio and batch_id, at several shard widths (1 shard ≡ global
-    sweep; n_shards > n_seeds clamps)."""
-    cfg = CrawlConfig(max_depth=3)
-    eng = FrontierEngine(spark, cfg, FIXDIR, fresh_ckpt(str(tmp_path / "sh")))
-    eng.explore()
-    base = [_visit_tuple_engine(r) for r in
-            eng.resolve(strategy="skeleton")
-            .orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
-    assert base == exp
-    for n_shards in (1, 2, 5, 999):
-        got = [_visit_tuple_engine(r) for r in
-               eng.resolve(strategy="sharded", n_shards=n_shards)
-               .orderBy("visit_rank").collect()]
-        assert got == base, f"n_shards={n_shards}"
-        assert eng.timings["shard_sweeps"]
+    sweep; n_shards > n_seeds clamps). Two webs: t-smoke, whose seed
+    branches share pages (later shards skip earlier claims), and
+    disjoint per-host trees, where every shard claims its whole
+    branch."""
+    disjoint = str(tmp_path / "disjoint-web")
+    n_tree = _write_disjoint_trees_fixture(disjoint)
+    cases = [("t-smoke", FIXDIR, CrawlConfig(max_depth=3), (1, 2, 5, 999)),
+             ("disjoint", disjoint,
+              CrawlConfig(max_depth=4, rate_limit=10_000), (1, 4))]
+    for name, web, cfg, widths in cases:
+        eng = FrontierEngine(spark, cfg, web,
+                             fresh_ckpt(str(tmp_path / f"sh-{name}")))
+        eng.explore()
+        base = [_visit_tuple_engine(r) for r in
+                eng.resolve(strategy="skeleton")
+                .orderBy("visit_rank").collect()]
+        exp = [_visit_tuple_oracle(v) for v in run_oracle(web, cfg).visits]
+        assert base == exp, name
+        if name == "disjoint":
+            assert len(base) == 4 * n_tree
+        for n_shards in widths:
+            got = [_visit_tuple_engine(r) for r in
+                   eng.resolve(strategy="sharded", n_shards=n_shards)
+                   .orderBy("visit_rank").collect()]
+            assert got == base, f"{name} n_shards={n_shards}"
+            assert eng.timings["shard_sweeps"]
 
 
 def test_sharded_multiword_masks(spark, tmp_path):
@@ -174,82 +182,6 @@ def test_sharded_multiword_masks(spark, tmp_path):
     assert len(eng.timings["shard_sweeps"]) == 80
 
 
-def _has_c_kernel() -> bool:
-    from crawler_spark.core.dfs_kernel import _load_lib
-    return _load_lib() is not None
-
-
-def test_sharded_parallel_overlapping_branches(spark, tmp_path):
-    """shard_procs>1 drives the process-pool optimistic path (the
-    size auto-gate picks sequential at this scale, so it is passed
-    explicitly). t-smoke's seed branches share pages, so optimistic
-    sweeps CONFLICT and the validator's prefix-accept + re-sweep
-    fallback must reproduce the skeleton sweep row-for-row anyway."""
-    cfg = CrawlConfig(max_depth=3)
-    eng = FrontierEngine(spark, cfg, FIXDIR,
-                         fresh_ckpt(str(tmp_path / "pp")))
-    eng.explore()
-    base = [_visit_tuple_engine(r) for r in
-            eng.resolve(strategy="skeleton")
-            .orderBy("visit_rank").collect()]
-    for n_shards, procs in ((2, 2), (4, 3)):
-        got = [_visit_tuple_engine(r) for r in
-               eng.resolve(strategy="sharded", n_shards=n_shards,
-                           shard_procs=procs)
-               .orderBy("visit_rank").collect()]
-        assert got == base, f"n_shards={n_shards} procs={procs}"
-        if _has_c_kernel():
-            assert "procs" in str(eng.timings["sweep_impl"])
-            assert "shard_resweeps" in eng.timings
-
-
-def test_sharded_parallel_disjoint_branches(spark, tmp_path):
-    """Disjoint seed branches (one binary tree per host, no cross-host
-    links) must validate conflict-free: every optimistic worker sweep
-    is accepted wholesale (shard_resweeps == 0) and the claims equal
-    the skeleton sweep row-for-row — the wall-collapse case the
-    parallel path exists for."""
-    def link(i, href):
-        return dict(href=href, label=f"l{i}", selector=f"a.l{i}",
-                    element_type="a", pos_x=0, pos_y=0, link_index=i)
-
-    def page(url, hrefs):
-        host = url.split("/")[2]
-        return dict(url=url, host=host, status_code=200,
-                    title=f"T {url}", meta_description="", text_content="",
-                    headings=[], links=[link(i, h)
-                                        for i, h in enumerate(hrefs)],
-                    images=[], forms=[], load_time_ms=10)
-
-    fix = str(tmp_path / "disjoint-web")
-    os.makedirs(fix, exist_ok=True)
-    pages, seed_urls = [], []
-    n_tree = 2 ** 4 - 1  # complete binary tree, depth 3
-    for h in range(4):
-        base_u = f"http://h{h}.test"
-        seed_urls.append(f"{base_u}/n0")
-        for i in range(n_tree):
-            kids = [f"{base_u}/n{c}" for c in (2 * i + 1, 2 * i + 2)
-                    if c < n_tree]
-            pages.append(page(f"{base_u}/n{i}", kids))
-    _write_web_tables(fix, pages, seed_urls)
-    cfg = CrawlConfig(max_depth=4, rate_limit=10_000)
-    eng = FrontierEngine(spark, cfg, fix,
-                         fresh_ckpt(str(tmp_path / "dis-ck")))
-    eng.explore()
-    base = [_visit_tuple_engine(r) for r in
-            eng.resolve(strategy="skeleton")
-            .orderBy("visit_rank").collect()]
-    assert len(base) == 4 * n_tree
-    got = [_visit_tuple_engine(r) for r in
-           eng.resolve(strategy="sharded", n_shards=4, shard_procs=4)
-           .orderBy("visit_rank").collect()]
-    assert got == base
-    if _has_c_kernel():
-        assert eng.timings["shard_resweeps"] == 0
-        assert len(eng.timings["shard_sweeps"]) == 4
-
-
 def test_resume_mid_crawl(spark, tmp_path):
     """Kill after 2 explore rounds, resume in a new engine instance →
     outputs identical to an uninterrupted run (FIXTURES.md inv. 6)."""
@@ -262,78 +194,6 @@ def test_resume_mid_crawl(spark, tmp_path):
     eng2 = FrontierEngine(spark, cfg, FIXDIR, ck)  # fresh instance
     visits = eng2.run()
     got = [_visit_tuple_engine(r) for r in visits.orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
-    assert got == exp
-
-
-def test_bloom_prefilter_identical_seen_set(spark, tmp_path):
-    """FIXTURES.md inv. 2: identical crawl outputs with and without
-    the bloom pre-filter on the frontier anti-join."""
-    cfg = CrawlConfig(max_depth=3)
-    eng = FrontierEngine(spark, cfg, FIXDIR,
-                         fresh_ckpt(str(tmp_path / "bloom")), use_bloom=True)
-    visits = eng.run()
-    got = [_visit_tuple_engine(r) for r in visits.orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
-    assert got == exp
-
-
-def test_bucketed_seen_store_identity(spark, tmp_path):
-    """The bucketed seen-store (frontier.py:_ensure_seen_store — the
-    Iceberg bucket(N, url) analog that makes the history side of the
-    per-round admission joins exchange-free) must not change a single
-    output row. Politeness ON so the depth-correcting seen_best path
-    (the groupBy over history) is exercised too."""
-    cfg = CrawlConfig(max_depth=3, rate_limit=6)
-    eng = FrontierEngine(spark, cfg, FIXDIR,
-                         fresh_ckpt(str(tmp_path / "bseen")),
-                         enforce_politeness=True,
-                         bucketed_seen=True, seen_buckets=8)
-    visits = eng.run()
-    got = [_visit_tuple_engine(r)
-           for r in visits.orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
-    assert got == exp
-
-
-def test_bucketed_seen_store_resume_heals(spark, tmp_path):
-    """Resume with the seen store: kill after 2 rounds, DELETE the
-    store dir entirely (worst-case crash window — rounds committed but
-    no mirror), resume in a fresh engine → _seen_store_heal rebuilds
-    every partition from the frontier snapshots and the crawl output
-    is still row-for-row exact."""
-    import shutil
-
-    cfg = CrawlConfig(max_depth=3)
-    ck = fresh_ckpt(str(tmp_path / "bseen-resume"))
-    eng1 = FrontierEngine(spark, cfg, FIXDIR, ck,
-                          bucketed_seen=True, seen_buckets=8)
-    eng1.explore(max_rounds=2)
-    assert not eng1._state()["done"]
-    shutil.rmtree(os.path.join(ck, "seen_bucketed"))
-    spark.sql(f"DROP TABLE IF EXISTS {eng1._seen_name}")
-
-    eng2 = FrontierEngine(spark, cfg, FIXDIR, ck,
-                          bucketed_seen=True, seen_buckets=8)
-    visits = eng2.run()
-    got = [_visit_tuple_engine(r)
-           for r in visits.orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
-    assert got == exp
-
-
-def test_cuckoo_prefilter_identical_seen_set(spark, tmp_path):
-    """Same invariant for the deletion-capable cuckoo variant
-    (operators/cuckoo.py), politeness ON so the depth-correcting
-    admit path runs through the filter too."""
-    cfg = CrawlConfig(max_depth=3)
-    eng = FrontierEngine(spark, cfg, FIXDIR,
-                         fresh_ckpt(str(tmp_path / "cuckoo")),
-                         enforce_politeness=True, use_cuckoo=True)
-    visits = eng.run()
-    got = [_visit_tuple_engine(r) for r in visits.orderBy("visit_rank").collect()]
-    # politeness changes ROUND placement, never the resolved DFS
-    # order, so the plain oracle is still the expectation
     exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
     assert got == exp
 
@@ -621,14 +481,60 @@ def test_resolve_timings_disjoint_per_call(spark, tmp_path):
     # skeleton-only steps must not leak into the sharded breakdown
     assert "csr_pass" not in s2
     # diagnostics that are not wall-seconds of the call
-    not_secs = {"shard_overlap", "shard_resweeps", "sweep_impl",
-                "shard_sweeps"}
+    not_secs = {"sweep_impl", "shard_sweeps"}
     for steps, wall in ((s1, w1), (s2, w2)):
         tot = sum(v for k, v in steps.items()
                   if k not in not_secs
                   and isinstance(v, (int, float))
                   and not isinstance(v, bool))
         assert tot <= wall + 1.0, (tot, wall, steps)
+
+
+def test_node_ceiling_fails_before_skeleton(spark, tmp_path, monkeypatch):
+    """The sweep addresses nodes with int32 ids, so a node table of
+    2^31 or more nodes must fail loudly — with NodeCeilingError naming
+    the ceiling — before any skeleton is written, for both resolve
+    strategies. The node table's parquet footers are made to report
+    2^31 extra rows each, so no such table has to exist."""
+    import pyarrow.parquet as pq
+
+    from crawler_spark.engine.frontier import MAX_NODES, NodeCeilingError
+
+    cfg = CrawlConfig(max_depth=3)
+    ck = fresh_ckpt(str(tmp_path / "ceiling"))
+    eng = FrontierEngine(spark, cfg, FIXDIR, ck)
+    eng.explore()
+
+    real_file = pq.ParquetFile
+
+    class _InflatedMeta:
+        def __init__(self, md):
+            self._md = md
+
+        @property
+        def num_rows(self):
+            n = self._md.num_rows
+            return n + MAX_NODES if n else 0
+
+        def __getattr__(self, name):
+            return getattr(self._md, name)
+
+    class _InflatedFile:
+        def __init__(self, *args, **kwargs):
+            self._pf = real_file(*args, **kwargs)
+
+        @property
+        def metadata(self):
+            return _InflatedMeta(self._pf.metadata)
+
+        def __getattr__(self, name):
+            return getattr(self._pf, name)
+
+    monkeypatch.setattr(pq, "ParquetFile", _InflatedFile)
+    for strategy in ("skeleton", "sharded"):
+        with pytest.raises(NodeCeilingError, match=r"2\^31"):
+            eng.resolve(strategy=strategy)
+        assert not os.path.exists(os.path.join(ck, "skeleton")), strategy
 
 
 def test_group_skewed_bootstrap_spill_resume(spark, tmp_path):
@@ -794,31 +700,6 @@ def test_inloop_image_ingest_matches_oracle(spark, tmp_path):
     assert caps == first
 
 
-def test_image_ingest_bloom_identity(spark, tmp_path):
-    """The bloom-prefiltered src-seen path (ingest_bloom=True —
-    partitioned bloom over xxhash64(src), bloom-positive srcs
-    confirmed by the exact string anti-join) must produce an images
-    table IDENTICAL to the plain anti-join, row for row including
-    per-round membership: correctness never depends on the filter
-    (no false negatives; false positives only route srcs through the
-    exact check)."""
-    cfg = CrawlConfig(max_depth=3)
-    outs = []
-    for flag in (False, True):
-        ck = fresh_ckpt(str(tmp_path / f"bloom_{flag}"))
-        eng = FrontierEngine(spark, cfg, FIXDIR, ck,
-                             ingest_images=True, ingest_bloom=flag)
-        eng.run()
-        rows = (eng.images_table.read(with_partition_columns=True)
-                .selectExpr("src", "round", "phash", "valid",
-                            "xxhash64(bytes) as bh")
-                .collect())
-        outs.append(sorted((r["src"], r["round"], r["phash"],
-                            r["valid"], r["bh"]) for r in rows))
-    assert outs[0] == outs[1]
-    assert len(outs[0]) > 0
-
-
 def test_image_ingest_bucketed_dim_identity(spark, tmp_path):
     """The src-bucketed byte-dim fetch path (big rounds merge-join the
     bucketed dim so only the refs side shuffles) must produce an
@@ -843,56 +724,22 @@ def test_image_ingest_bucketed_dim_identity(spark, tmp_path):
     assert len(outs[0]) > 0
 
 
-def test_image_ingest_bucketed_seen_identity(spark, tmp_path):
-    """The bucketed ingested-src store (frontier.py:
-    _ensure_imgseen_store — the bucket(N, src) analog that makes the
-    history side of the per-round src-seen anti-join exchange-free)
-    must produce an images table identical to the plain history read,
-    row for row including per-round membership."""
+def test_image_ingest_resume_identity(spark, tmp_path):
+    """Image-ingest resume: kill after 2 rounds, resume in a fresh
+    engine → the images table (which src was ingested in which round,
+    its bytes, phash and validity) equals an uninterrupted run's row
+    for row, so the src-seen anti-join stays write-once per src
+    across the restart."""
     cfg = CrawlConfig(max_depth=3)
-    outs = []
-    for flag in (False, True):
-        ck = fresh_ckpt(str(tmp_path / f"iseen_{flag}"))
-        eng = FrontierEngine(spark, cfg, FIXDIR, ck,
-                             ingest_images=True,
-                             bucketed_seen=flag, seen_buckets=8)
-        eng.run()
-        rows = (eng.images_table.read(with_partition_columns=True)
-                .selectExpr("src", "round", "phash", "valid",
-                            "xxhash64(bytes) as bh")
-                .collect())
-        outs.append(sorted((r["src"], r["round"], r["phash"],
-                            r["valid"], r["bh"]) for r in rows))
-    assert outs[0] == outs[1]
-    assert len(outs[0]) > 0
-
-
-def test_imgseen_store_resume_heals(spark, tmp_path):
-    """Resume with the ingested-src store: kill after 2 rounds,
-    DELETE the store dir entirely (worst-case crash window — images
-    rounds committed but no mirror), resume in a fresh engine →
-    _imgseen_store_heal rebuilds every partition from the images
-    snapshots and the ingest history (write-once per src across
-    rounds) stays exact."""
-    import shutil
-
-    cfg = CrawlConfig(max_depth=3)
-    ck = fresh_ckpt(str(tmp_path / "iseen-resume"))
-    eng1 = FrontierEngine(spark, cfg, FIXDIR, ck,
-                          ingest_images=True,
-                          bucketed_seen=True, seen_buckets=8)
+    ck = fresh_ckpt(str(tmp_path / "ingest-resume"))
+    eng1 = FrontierEngine(spark, cfg, FIXDIR, ck, ingest_images=True)
     eng1.explore(max_rounds=2)
     assert not eng1._state()["done"]
-    shutil.rmtree(os.path.join(ck, "imgseen_bucketed"))
-    spark.sql(f"DROP TABLE IF EXISTS {eng1._imgseen_name}")
-    spark.sql(f"DROP TABLE IF EXISTS {eng1._seen_name}")
 
-    eng2 = FrontierEngine(spark, cfg, FIXDIR, ck,
-                          ingest_images=True,
-                          bucketed_seen=True, seen_buckets=8)
+    eng2 = FrontierEngine(spark, cfg, FIXDIR, ck, ingest_images=True)
     eng2.run()
-    # plain reference run: same ingest, no store
-    ck3 = fresh_ckpt(str(tmp_path / "iseen-plain"))
+    # uninterrupted reference run
+    ck3 = fresh_ckpt(str(tmp_path / "ingest-plain"))
     eng3 = FrontierEngine(spark, cfg, FIXDIR, ck3, ingest_images=True)
     eng3.run()
     outs = []

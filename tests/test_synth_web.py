@@ -51,29 +51,3 @@ def test_graph_shape(tmp_path):
     # status mix: some timeouts/404s
     st = {r["status_code"] for r in web}
     assert st == {200, 0, 404}
-
-def test_clustered_partitionable(tmp_path):
-    """n_clusters: cross links stay in-cluster (cluster = host_id mod
-    n_clusters) and seed ranks come in contiguous per-cluster blocks —
-    the invariants that make contiguous seed-rank shards disjoint for
-    the parallel sharded resolve."""
-    import itertools
-    import re
-
-    generate_bench_web(str(tmp_path / "c"), 20000, n_hosts=64,
-                       n_seeds=64, n_clusters=8)
-
-    def host_id(url: str) -> int:
-        return int(re.match(r"http://h(\d+)\.", url.lower()).group(1))
-
-    web = pq.read_table(str(tmp_path / "c/web_pages.parquet")).to_pylist()
-    for r in web:
-        c = host_id(r["url"]) % 8
-        for l in r["links"]:
-            assert host_id(canonicalize_url(l["href"])) % 8 == c
-
-    seeds = sorted(pq.read_table(str(tmp_path / "c/seeds.parquet"))
-                   .to_pylist(), key=lambda s: s["seed_rank"])
-    clusters = [host_id(s["url"]) % 8 for s in seeds]
-    blocks = [k for k, _ in itertools.groupby(clusters)]
-    assert blocks == sorted(set(clusters))  # contiguous, monotone
