@@ -257,14 +257,6 @@ class ExtractPlan:
                 .select(*self.out_cols))
 
 
-def extract_round(pages: DataFrame, robots: DataFrame,
-                  allowed_hosts: list[str], cfg: CrawlConfig) -> DataFrame:
-    """One-shot convenience wrapper over ExtractPlan (the engine holds
-    a cached plan instead; see ExtractPlan docstring)."""
-    elem_dt = pages.schema["links"].dataType.elementType
-    return ExtractPlan(elem_dt, robots, allowed_hosts, cfg).apply(pages)
-
-
 # ---------------------------------------------------------------------------
 # the engine
 # ---------------------------------------------------------------------------
@@ -282,8 +274,7 @@ class FrontierEngine:
                  web_buckets: int = 64,
                  bucket_join_min: int = 250_000,
                  ingest_images: bool = False,
-                 bucketed_images_dir: str | None = None,
-                 cursor_spill_rows: int = 500_000):
+                 bucketed_images_dir: str | None = None):
         self.spark = spark
         self.cfg = cfg
         self.fixture_dir = fixture_dir
@@ -293,24 +284,12 @@ class FrontierEngine:
         # freeze-and-cursor deferral store (politeness mode only):
         # deferred rows that can never be overtaken are written ONCE
         # and popped by cursor instead of re-ranked + rewritten every
-        # window — see _write_frontier's scale note
+        # window — see _write_frontier's scale note. The cursor is a
+        # driver-held pandas dim, broadcast into the round's plan
+        # like robots: ZERO extra Spark jobs per round to consult it.
         self._cursor = None          # pandas (host, salt, salt_cap,
         self._fdirs = None           #   consumed, frozen_total) /
         #                                (dir, host, salt, max_frank)
-        # past `cursor_spill_rows` frozen (host, salt) groups, the
-        # cursor leaves the driver: it lives in per-round parquet and
-        # every touch (take computation, pop join, round advance)
-        # becomes a small Spark job — driver RSS stays flat no matter
-        # how many hosts ever freeze. Below the cap it stays a pandas
-        # dim with ZERO extra Spark jobs per round (the scaling
-        # denominator). One-way transition, checked after each
-        # advance; semantics identical (goldens pin both modes).
-        self.cursor_spill_rows = cursor_spill_rows
-        self._cursor_spark = False   # spilled mode active
-        self._cursor_sdf_path = None  # current cursor parquet (spilled)
-        # dirstats files of dirs retired THIS round — deleted only
-        # after the round's snapshot commit (see _retire_dirs_spark)
-        self._dirstats_dead: list[str] = []
         self.web = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
         self.robots = spark.read.parquet(f"{fixture_dir}/robots.parquet")
         self.seeds_raw = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
@@ -568,69 +547,16 @@ class FrontierEngine:
         return (os.path.join(d, f"round={rnd:05d}.parquet"),
                 os.path.join(d, f"dirs={rnd:05d}.parquet"))
 
-    @staticmethod
-    def _parquet_rows(path: str) -> int:
-        """Footer row count of a parquet file OR dir (no Spark job)."""
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            return sum(FrontierEngine._footer_rows(path).values())
-        return pq.ParquetFile(path).metadata.num_rows
-
-    @staticmethod
-    def _parquet_cols(path: str) -> list[str]:
-        """Schema column names of a parquet file OR dir, from the
-        footer of one part (no Spark job)."""
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            for f in sorted(os.listdir(path)):
-                if f.endswith(".parquet"):
-                    return pq.ParquetFile(
-                        os.path.join(path, f)).schema_arrow.names
-            return []
-        return pq.ParquetFile(path).schema_arrow.names
-
     def _load_cursor(self, rnd: int) -> None:
-        """Cursor state as persisted AFTER round ``rnd``'s frontier
-        write (resume path; a pre-freeze checkpoint simply has no
-        cursor files and no sel=f dirs — empty state is correct).
-
-        Mode detection is by the PERSISTED STATE's shape, not by row
-        count: the spilled-mode advance compacts the dirs registry to
-        (dir, max_frank) while pandas mode always persists the full
-        per-(dir, host, salt) registry — so a dirs parquet without a
-        'host' column IS the spilled-mode marker. Row count alone was
-        wrong both ways: a group-skewed bootstrap spill (one mega-host
-        freezing >cap ROWS over few (host, salt) GROUPS) leaves a
-        spilled cursor far below the cap, and raising
-        cursor_spill_rows between runs shrinks the cap's meaning —
-        either way a pandas-mode resume would merge the compact
-        registry on ['host', 'salt'] and crash. The row-count check
-        stays as a conservative fallback for pandas-written state that
-        now exceeds the (possibly lowered) cap."""
+        """Cursor and live-dirs registry as persisted AFTER round
+        ``rnd``'s frontier write (resume path): the round's two
+        parquet files, read back onto the driver. A pre-freeze
+        checkpoint simply has no cursor files and no sel=f dirs —
+        empty state is correct."""
         import pandas as pd
 
         cp, dp = self._cursor_paths(rnd)
         cur, fd = self._cursor_frames()
-        spilled_state = (os.path.exists(dp)
-                         and "host" not in self._parquet_cols(dp))
-        if os.path.exists(cp) and (
-                spilled_state
-                or self._parquet_rows(cp) > self.cursor_spill_rows):
-            self._cursor_spark = True
-            self._cursor_sdf_path = cp
-            self._cursor = None
-            if os.path.exists(dp):
-                fd = pd.read_parquet(dp)
-                if "host" in fd.columns:   # pre-spill dirs registry
-                    self._write_dirstats_pandas(fd)   # keep retirable
-                    fd = (fd.groupby("dir", as_index=False)["max_frank"]
-                          .max())
-            else:
-                fd = fd[["dir", "max_frank"]]
-            self._fdirs = fd
-            return
         if os.path.exists(cp):
             cur = pd.read_parquet(cp)
         if os.path.exists(dp):
@@ -642,144 +568,6 @@ class FrontierEngine:
         os.makedirs(os.path.dirname(cp), exist_ok=True)
         self._cursor.to_parquet(cp, index=False)
         self._fdirs.to_parquet(dp, index=False)
-
-    def _dirstats_path(self, rel: str) -> str:
-        """Per-freeze-dir group-stats parquet (dir, host, salt,
-        max_frank) — the spilled mode's basis for PRECISE dir
-        retirement: a dir is dead exactly when every group's consumed
-        has reached its in-dir max frank. One file/dir so a retired
-        dir's stats can be deleted outright."""
-        name = rel.replace("/", "_").replace("=", "-")
-        return os.path.join(self.ckpt, "cursor", "dirstats",
-                            name + ".parquet")
-
-    def _write_dirstats_pandas(self, fd) -> None:
-        """Spill-transition export of the pandas dirs registry (which
-        is per-(dir, host, salt)) into per-dir stats files, so dirs
-        frozen BEFORE the spill stay precisely retirable after it."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if fd is None or not len(fd) or "host" not in fd.columns:
-            return
-        os.makedirs(os.path.join(self.ckpt, "cursor", "dirstats"),
-                    exist_ok=True)
-        for rel, g in fd.groupby("dir"):
-            pq.write_table(pa.Table.from_pandas(
-                g.assign(dir=rel)[["dir", "host", "salt", "max_frank"]],
-                schema=pa.schema([
-                    ("dir", pa.string()), ("host", pa.string()),
-                    ("salt", pa.int32()), ("max_frank", pa.int64())]),
-                preserve_index=False), self._dirstats_path(rel))
-
-    def _retire_dirs_spark(self, fd, cp: str):
-        """Spilled-mode dir retirement: join every live dir's group
-        stats against the just-written cursor and keep a dir iff ANY
-        of its groups still has unpopped franks (max_frank >
-        consumed). One small Spark job, run only on pop rounds (the
-        only rounds where consumed moves); dead dirs drop from the
-        driver's live list AND their stats files are deleted (after
-        the round's commit — see below), so both
-        the list and the stats scan stay O(genuinely-live dirs) under
-        perpetual freezing. Dirs with no stats file (pre-round-4
-        checkpoints) are kept — conservative, backward compatible."""
-        dirs = list(fd["dir"].unique())
-        paths = {d: self._dirstats_path(d) for d in dirs}
-        have = [p for p in paths.values() if os.path.exists(p)]
-        if not have:
-            return fd
-        alive_rows = (self.spark.read.schema(
-            "dir string, host string, salt int, max_frank long")
-            .parquet(*have)
-            .join(self.spark.read.parquet(cp)
-                  .select("host", "salt", "consumed"),
-                  ["host", "salt"], "left")
-            .groupBy("dir")
-            .agg(F.max(F.col("max_frank")
-                       > F.coalesce("consumed", F.lit(0).cast("long")))
-                 .alias("alive")).collect())
-        dead = {r["dir"] for r in alive_rows if not r["alive"]}
-        if not dead:
-            return fd
-        # deletion is DEFERRED past the round's snapshot commit: a
-        # crash between an eager delete and commit_dir would roll the
-        # registry back to a state listing dirs whose stats files are
-        # gone, and the 'no stats file -> keep' rule would then pin
-        # them live (and in every pop scan) forever. Queued paths are
-        # flushed by _write_frontier right after commit; a crash in
-        # between merely leaves unreferenced stats files on disk
-        # (harmless: only registry-listed dirs are ever joined).
-        self._dirstats_dead.extend(paths[d] for d in dead)
-        return fd[~fd["dir"].isin(dead)].reset_index(drop=True)
-
-    def _flush_dead_dirstats(self) -> None:
-        """Post-commit deletion of retired dirs' stats files (see
-        _retire_dirs_spark's crash-window note)."""
-        for p in self._dirstats_dead:
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            elif os.path.exists(p):
-                os.remove(p)
-        self._dirstats_dead = []
-
-    def _maybe_spill_cursor(self, rnd: int) -> None:
-        """One-way pandas → parquet transition once the cursor
-        outgrows the driver cap (called right after a pandas-mode
-        advance persisted round ``rnd``'s state, so the freshly
-        written file IS the spilled store)."""
-        if (self._cursor_spark or self._cursor is None
-                or len(self._cursor) <= self.cursor_spill_rows):
-            return
-        cp, _dp = self._cursor_paths(rnd)
-        self._cursor_spark = True
-        self._cursor_sdf_path = cp
-        self._cursor = None
-        self._host_caps_ = None
-        fd = self._fdirs
-        self._write_dirstats_pandas(fd)
-        self._fdirs = (fd.groupby("dir", as_index=False)["max_frank"]
-                       .max() if fd is not None and len(fd)
-                       else self._cursor_frames()[1][["dir", "max_frank"]])
-
-    def _maybe_bootstrap_spill(self, rnd: int, counts: dict) -> None:
-        """Pre-advance spill: when the round that is ABOUT to register
-        its freezes would push the cursor past the cap, flip to
-        spilled mode FIRST so the registration itself runs as the
-        distributed advance — otherwise a single round that freezes
-        10^8 hosts at once (a wide same-depth frontier) would still
-        pay one unbounded pandas merge before _maybe_spill_cursor
-        could react. The frozen ROW count from the footers is an upper
-        bound on new groups, so the trigger is conservative (may spill
-        one round early — harmless; the transition is one-way and
-        semantics are pinned identical by the spill goldens)."""
-        n_f = sum(v for k, v in counts.items() if k.startswith("sel=f"))
-        cur_len = 0 if self._cursor is None else len(self._cursor)
-        if cur_len + n_f <= self.cursor_spill_rows:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        cur = self._cursor if self._cursor is not None \
-            else self._cursor_frames()[0]
-        bp = os.path.join(self.ckpt, "cursor",
-                          f"bootstrap={rnd:05d}.parquet")
-        os.makedirs(os.path.dirname(bp), exist_ok=True)
-        # explicit schema: an EMPTY pandas object column would infer
-        # Arrow `null`, and Spark's join coercion on a null-typed key
-        # miscasts the other side
-        pq.write_table(pa.Table.from_pandas(cur, schema=pa.schema([
-            ("host", pa.string()), ("salt", pa.int32()),
-            ("salt_cap", pa.int64()), ("consumed", pa.int64()),
-            ("frozen_total", pa.int64())]), preserve_index=False), bp)
-        self._cursor_spark = True
-        self._cursor_sdf_path = bp
-        self._cursor = None
-        self._host_caps_ = None
-        fd = self._fdirs
-        self._write_dirstats_pandas(fd)
-        self._fdirs = (fd.groupby("dir", as_index=False)["max_frank"]
-                       .max() if fd is not None and len(fd)
-                       else self._cursor_frames()[1][["dir", "max_frank"]])
 
     def _host_salt_cap(self, host: str) -> int:
         """Driver twin of the plan's salt_cap expression (same
@@ -910,165 +698,6 @@ class FrontierEngine:
         self._cursor, self._fdirs = cur, fd
         self._save_cursor(rnd)
 
-    # ---- spilled-cursor mode: the same cursor, Spark-side ----
-
-    def _cursor_salt_cap_col(self):
-        """Plan-side twin of _host_salt_cap for NEW groups entering a
-        spilled cursor — byte-identical formula to the politeness
-        plan's cap/salt_cap expressions (the dense-frank invariant
-        cross-checks plan vs cursor every freezing round)."""
-        cap = F.coalesce(
-            F.when(F.col("crawl_delay_ms") > 0,
-                   F.greatest(F.lit(1), F.least(
-                       F.lit(self.cfg.rate_limit),
-                       (F.lit(self.cfg.batch_window_ms)
-                        / F.col("crawl_delay_ms")).cast("int")))),
-            F.lit(self.cfg.rate_limit))
-        return (F.when(cap >= self.host_salts,
-                       (cap / self.host_salts).cast("int"))
-                .otherwise(cap))
-
-    def _takes_spark(self):
-        """Spilled-mode twin of _takes: the per-(host, salt) take dim
-        as a localCheckpointed DataFrame (three consumers: the mark
-        join, the pop join, the advance) plus the driver-side scalars
-        the round needs — ONE small agg job, O(1) rows collected.
-        Returns (takes_sdf, stats); takes_sdf is None when nothing has
-        ever frozen."""
-        cur = self.spark.read.parquet(self._cursor_sdf_path)
-        t = (cur.filter(F.col("frozen_total") > 0)
-             .select("host", "salt", "consumed",
-                     F.col("frozen_total").alias("ftot"),
-                     F.least(F.col("salt_cap"),
-                             F.col("frozen_total") - F.col("consumed"))
-                     .cast("long").alias("take"))
-             .localCheckpoint())
-        pop = F.col("take") > 0
-        row = t.agg(
-            F.count("*").alias("n_groups"),
-            F.coalesce(F.sum("take"), F.lit(0)).alias("total_take"),
-            F.min(F.when(pop, F.col("consumed"))).alias("kmin"),
-            F.max(F.when(pop, F.col("consumed") + F.col("take")))
-            .alias("kmax")).collect()[0]
-        if not row["n_groups"]:
-            return None, {"total_take": 0}
-        return t, {"total_take": int(row["total_take"]),
-                   "kmin": (int(row["kmin"])
-                            if row["kmin"] is not None else 0),
-                   "kmax": (int(row["kmax"])
-                            if row["kmax"] is not None else 0)}
-
-    def _frozen_pops_spark(self, takes_sdf, stats) -> DataFrame:
-        """Spilled-mode twin of _frozen_pops: same pushed global frank
-        bounds + per-group range filter, but the cursor dim joins via
-        shuffle-hash instead of broadcast (it no longer fits the
-        driver by definition of the spill)."""
-        fd = self._fdirs
-        live = sorted(fd["dir"].unique()) if fd is not None and len(fd) \
-            else []
-        dim = (takes_sdf.filter(F.col("take") > 0)
-               .select("host", "salt", "consumed", "take"))
-        return (self.spark.read.schema(self._freeze_schema)
-                .parquet(*[os.path.join(self.ckpt, d) for d in live])
-                .filter((F.col("frank") > stats["kmin"])
-                        & (F.col("frank") <= stats["kmax"]))
-                .join(dim.hint("shuffle_hash"), ["host", "salt"])
-                .filter((F.col("frank") > F.col("consumed"))
-                        & (F.col("frank") <= F.col("consumed")
-                           + F.col("take")))
-                .select("url", "depth", "host", "salt", "frank",
-                        F.lit("b").alias("sel")))
-
-    def _advance_cursor_spark(self, rnd: int, takes_sdf,
-                              counts: dict) -> None:
-        """Spilled-mode twin of _advance_cursor: consumed += take,
-        register new freezes (salt_cap from a robots join using the
-        plan's exact formula), dense-frank invariant as a distributed
-        count, next cursor parquet written by all cores. The dirs
-        registry stays driver-side but COMPACT (one row per freeze
-        dir, global max frank) — retirement becomes conservative
-        (dir max ≤ global min consumed), which only delays retiring a
-        dir, never breaks pops: frank-bound pushdown already prunes
-        consumed row groups via footer stats."""
-        import pandas as pd
-
-        cur = self.spark.read.parquet(self._cursor_sdf_path)
-        if takes_sdf is not None:
-            cur = (cur.join(takes_sdf.select("host", "salt", "take")
-                            .hint("shuffle_hash"), ["host", "salt"],
-                            "left")
-                   .withColumn("consumed",
-                               (F.col("consumed")
-                                + F.coalesce("take", F.lit(0)))
-                               .cast("long"))
-                   .drop("take"))
-        n_f = sum(v for k, v in counts.items() if k.startswith("sel=f"))
-        cp, dp = self._cursor_paths(rnd)
-        fd = self._fdirs if self._fdirs is not None \
-            else self._cursor_frames()[1][["dir", "max_frank"]]
-        if n_f:
-            rel = os.path.join(f"frontier/round={rnd:05d}", "sel=f")
-            fdir = os.path.join(self._paths("frontier", rnd), "sel=f")
-            fc = (self.spark.read.schema(self._freeze_schema)
-                  .parquet(fdir)
-                  .groupBy("host", "salt")
-                  .agg(F.count("*").alias("cnt"),
-                       F.max("frank").alias("mx"),
-                       F.min("frank").alias("mn")))
-            froze = F.col("cnt").isNotNull()
-            ft0 = F.coalesce("frozen_total", F.lit(0).cast("long"))
-            out = (cur.join(fc, ["host", "salt"], "full_outer")
-                   .join(self.robots.select("host", "crawl_delay_ms")
-                         .hint("shuffle_hash"), "host", "left")
-                   .select(
-                       "host", "salt",
-                       F.coalesce(F.col("salt_cap"),
-                                  self._cursor_salt_cap_col()
-                                  .cast("long")).alias("salt_cap"),
-                       F.coalesce("consumed", F.lit(0).cast("long"))
-                       .alias("consumed"),
-                       F.when(froze, F.col("mx")).otherwise(ft0)
-                       .cast("long").alias("frozen_total"),
-                       froze.alias("_froze"),
-                       (froze & ((F.col("mn") != ft0 + 1)
-                                 | (F.col("mx") != ft0 + F.col("cnt"))))
-                       .alias("_bad"))
-                   .localCheckpoint())
-            row = out.agg(
-                F.coalesce(F.sum(F.col("_bad").cast("long")),
-                           F.lit(0)).alias("nbad"),
-                F.max(F.when(F.col("_froze"), F.col("frozen_total")))
-                .alias("dir_max")).collect()[0]
-            if row["nbad"]:
-                raise AssertionError(
-                    f"frozen rank not dense for {int(row['nbad'])} "
-                    f"(host, salt) groups at round {rnd}")
-            (out.drop("_froze", "_bad")
-             .write.mode("overwrite").parquet(cp))
-            # per-dir group stats off the same checkpointed frame —
-            # the retirement join's input (no re-agg of the freeze dir)
-            (out.filter("_froze")
-             .select(F.lit(rel).alias("dir"), "host", "salt",
-                     F.col("frozen_total").alias("max_frank"))
-             .write.mode("overwrite").parquet(self._dirstats_path(rel)))
-            fd = pd.concat(
-                [fd, pd.DataFrame({"dir": [rel],
-                                   "max_frank": [int(row["dir_max"])]})],
-                ignore_index=True)
-        else:
-            out = cur.localCheckpoint()
-            out.write.mode("overwrite").parquet(cp)
-        if takes_sdf is not None and len(fd):
-            # pops are the only rounds where consumed moves, so only
-            # they can kill a dir — precise retirement via the stats
-            # join keeps the live-dir list bounded by the drain depth,
-            # not the crawl length, under perpetual freezing
-            fd = self._retire_dirs_spark(fd, cp)
-        self._fdirs = fd
-        self._cursor_sdf_path = cp
-        os.makedirs(os.path.dirname(dp), exist_ok=True)
-        fd.to_parquet(dp, index=False)
-
     def _state(self) -> dict:
         """Resume state derived from the frontier table's snapshot
         manifest (NOT a side file): completed_rounds = highest
@@ -1083,8 +712,7 @@ class FrontierEngine:
 
     def _politeness_mark(self, frontier: DataFrame,
                          takes_sdf: DataFrame | None = None,
-                         bound: int | None = None,
-                         broadcast_takes: bool = True) -> DataFrame:
+                         bound: int | None = None) -> DataFrame:
         """Tag each ACTIVE frontier row with its politeness verdict for
         the NEXT round: sel='b' (within the per-host budget, fetch
         now), sel='f' (frozen — can never be overtaken, goes to the
@@ -1137,11 +765,7 @@ class FrontierEngine:
               .withColumn("salt", p["salt"].cast("int"))
               .withColumn("salt_cap", p["salt_cap"]))
         if takes_sdf is not None:
-            # spilled-cursor mode joins the take dim via shuffle-hash:
-            # past the spill cap it no longer fits a driver broadcast
-            t = (F.broadcast(takes_sdf) if broadcast_takes
-                 else takes_sdf.hint("shuffle_hash"))
-            df = df.join(t, ["host", "salt"], "left")
+            df = df.join(F.broadcast(takes_sdf), ["host", "salt"], "left")
             eff_cap = F.col("salt_cap") - F.coalesce("take", F.lit(0))
             base = F.coalesce("ftot", F.lit(0)).cast("long")
         else:
@@ -1216,26 +840,16 @@ class FrontierEngine:
                                     "sel=b")
                 if os.path.isdir(bdir):
                     bound = self._footer_min_depth(bdir)
-            takes, tstats = None, None
-            takes_sdf = None
-            if self._cursor_spark:
-                takes_sdf, tstats = self._takes_spark()
-            else:
-                takes = self._takes()
-                if takes is not None:
-                    takes_sdf = self.spark.createDataFrame(
-                        takes[["host", "salt", "take", "ftot"]])
-            out = self._politeness_mark(
-                frontier, takes_sdf, bound,
-                broadcast_takes=not self._cursor_spark)
+            takes = self._takes()
+            takes_sdf = (self.spark.createDataFrame(
+                takes[["host", "salt", "take", "ftot"]])
+                if takes is not None else None)
+            out = self._politeness_mark(frontier, takes_sdf, bound)
             if takes is not None and (takes["take"] > 0).any():
                 out = out.unionByName(
                     self._frozen_pops(takes[takes["take"] > 0]))
-            elif tstats is not None and tstats["total_take"] > 0:
-                out = out.unionByName(
-                    self._frozen_pops_spark(takes_sdf, tstats))
         else:
-            takes, tstats, takes_sdf = None, None, None
+            takes = None
             out = frontier.select("url", "depth", "host",
                                   F.lit("b").alias("sel"))
         (out.write.mode("overwrite").partitionBy("sel")
@@ -1245,24 +859,15 @@ class FrontierEngine:
             "frozen": sum(v for k, v in counts.items()
                           if k.startswith("sel=f")),
             "popped": (int(takes["take"].sum()) if takes is not None
-                       else tstats["total_take"] if tstats is not None
                        else 0)}
         if self.enforce_politeness:
-            if not self._cursor_spark:
-                self._maybe_bootstrap_spill(rnd, counts)
-            if self._cursor_spark:
-                self._advance_cursor_spark(rnd, takes_sdf, counts)
-            else:
-                self._advance_cursor(rnd, takes, counts)
-                self._maybe_spill_cursor(rnd)
+            self._advance_cursor(rnd, takes, counts)
         # snapshot-commit the round (fast-append; per-partition
         # lineage from footers, no extra Spark job). This commit IS
         # the round's progress record — see _state().
         self.frontier_table.commit_dir(
             f"round={rnd:05d}", "round", counts,
             extra={"round": rnd})
-        # the commit is durable — now retired dirs' stats files can go
-        self._flush_dead_dirstats()
 
     def _read_round(self, rnd: int) -> tuple[DataFrame, DataFrame, int]:
         """(batch, deferred, n_batch) for a written frontier round —

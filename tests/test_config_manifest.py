@@ -65,29 +65,3 @@ def test_resume_refuses_changed_config(spark, tmp_path):
         with pytest.raises(ValueError, match="different CrawlConfig"):
             FrontierEngine(spark, changed, FIXDIR, ck).explore()
 
-
-def test_spilled_dir_retirement(spark, tmp_path):
-    """Precise spilled-mode retirement: once the frozen store drains,
-    every freeze dir must leave the live list and its per-dir stats
-    file must be deleted — under perpetual freezing the pop scan's
-    dir set is bounded by drain depth, not crawl length."""
-    import glob
-
-    import pandas as pd
-
-    cfg = CrawlConfig(max_depth=3, rate_limit=6)
-    ck = fresh_ckpt(str(tmp_path / "ret"))
-    eng = FrontierEngine(spark, cfg, FIXDIR, ck, enforce_politeness=True,
-                         cursor_spill_rows=0)
-    eng.explore()
-    assert eng._cursor_spark
-    # something froze during the crawl (else the test is vacuous)...
-    assert glob.glob(os.path.join(ck, "frontier", "round=*", "sel=f",
-                                  "*.parquet"))
-    # ...and by crawl end the store is drained, so the live-dir list
-    # and the stats directory must both be empty
-    assert eng._fdirs is None or len(eng._fdirs) == 0
-    assert not glob.glob(os.path.join(ck, "cursor", "dirstats", "*"))
-    last = sorted(glob.glob(os.path.join(ck, "cursor",
-                                         "dirs=*.parquet")))[-1]
-    assert len(pd.read_parquet(last)) == 0

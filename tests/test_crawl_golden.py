@@ -351,9 +351,10 @@ def test_freeze_store_write_once_and_resume(spark, tmp_path):
     rewritten. Checks: (a) freezing actually triggers at this cap,
     (b) write-once — every frozen row hits disk exactly once over the
     whole drain, (c) the cursor fully consumes the store by crawl
-    end, (d) a mid-drain resume in a FRESH engine instance restores
-    the cursor from its per-round parquet and still matches the
-    oracle row-for-row."""
+    end and pops exactly the frozen rows, (d) every freeze dir is
+    retired from the live-dirs registry once drained, (e) a mid-drain
+    resume in a FRESH engine instance restores the cursor from its
+    per-round parquet and still matches the oracle row-for-row."""
     import glob
     import json
 
@@ -390,68 +391,19 @@ def test_freeze_store_write_once_and_resume(spark, tmp_path):
     assert int(cur["frozen_total"].sum()) == n_rows
     assert (cur["consumed"] == cur["frozen_total"]).all()
 
-    # metrics carry the freeze telemetry
-    with open(os.path.join(ck, "metrics.jsonl")) as f:
-        ms = [json.loads(line) for line in f]
-    assert sum(m.get("frozen", 0) for m in ms) == n_rows
-
-
-def test_cursor_spill_matches_pandas(spark, tmp_path):
-    """cursor_spill_rows=0 forces the SPARK-SIDE cursor from the first
-    freezing round (the 10^8-frozen-hosts posture exercised at toy
-    scale): visits, write-once and drain invariants must be identical
-    to the driver-pandas cursor, including a mid-drain resume that
-    restores the spilled cursor straight from parquet (never loading
-    it onto the driver)."""
-    import glob
-    import json
-
-    import pandas as pd
-
-    cfg = CrawlConfig(max_depth=3, rate_limit=6)
-    ck = fresh_ckpt(str(tmp_path / "spill"))
-    eng1 = FrontierEngine(spark, cfg, FIXDIR, ck, enforce_politeness=True,
-                          cursor_spill_rows=0)
-    eng1.explore(max_rounds=8)            # interrupt mid-drain
-    assert eng1._cursor_spark, "spill never engaged — vacuous test"
-    eng2 = FrontierEngine(spark, cfg, FIXDIR, ck,
-                          enforce_politeness=True, cursor_spill_rows=0)
-    visits = eng2.run()
-    assert eng2._cursor_spark            # resume detected the spill
-    got = [_visit_tuple_engine(r)
-           for r in visits.orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
-    assert got == exp
-
-    # write-once across the drain, and the spilled cursor fully
-    # consumed the store by crawl end
-    ffiles = glob.glob(os.path.join(ck, "frontier", "round=*", "sel=f",
-                                    "*.parquet"))
-    assert ffiles
-    fz = spark.read.parquet(*ffiles)
-    n_rows = fz.count()
-    assert n_rows == fz.select("url").distinct().count()
-    last = sorted(glob.glob(os.path.join(ck, "cursor",
-                                         "round=*.parquet")))[-1]
-    cur = pd.read_parquet(last)          # reads file OR spark dir
-    assert int(cur["frozen_total"].sum()) == n_rows
-    assert (cur["consumed"] == cur["frozen_total"]).all()
+    # metrics carry the freeze telemetry, and every frozen row was
+    # popped exactly once
     with open(os.path.join(ck, "metrics.jsonl")) as f:
         ms = [json.loads(line) for line in f]
     assert sum(m.get("frozen", 0) for m in ms) == n_rows
     assert sum(m.get("popped", 0) for m in ms) == n_rows
 
-    # the depth-correcting admit must survive the spill too
-    fix = str(tmp_path / "spill-trap")
-    _write_depth_trap_fixture(fix)
-    cfg2 = CrawlConfig(max_depth=4, rate_limit=1)
-    eng3 = FrontierEngine(spark, cfg2, fix,
-                          fresh_ckpt(str(tmp_path / "spill-trap-ck")),
-                          enforce_politeness=True, cursor_spill_rows=0)
-    got2 = [_visit_tuple_engine(r)
-            for r in eng3.run().orderBy("visit_rank").collect()]
-    exp2 = [_visit_tuple_oracle(v) for v in run_oracle(fix, cfg2).visits]
-    assert got2 == exp2
+    # (d): drained dirs leave the live list, so the pop scan's dir set
+    # is bounded by drain depth, not crawl length
+    assert len(eng2._fdirs) == 0
+    last_dirs = sorted(glob.glob(os.path.join(ck, "cursor",
+                                              "dirs=*.parquet")))[-1]
+    assert len(pd.read_parquet(last_dirs)) == 0
 
 
 def test_resolve_timings_disjoint_per_call(spark, tmp_path):
@@ -535,98 +487,6 @@ def test_node_ceiling_fails_before_skeleton(spark, tmp_path, monkeypatch):
         with pytest.raises(NodeCeilingError, match=r"2\^31"):
             eng.resolve(strategy=strategy)
         assert not os.path.exists(os.path.join(ck, "skeleton")), strategy
-
-
-def test_group_skewed_bootstrap_spill_resume(spark, tmp_path):
-    """Regression: a GROUP-SKEWED bootstrap spill (one mega-host
-    freezing more ROWS than cursor_spill_rows across only a handful of
-    (host, salt) GROUPS) leaves a spilled cursor whose row count is
-    far BELOW the cap. Resume used to pick the cursor mode by row
-    count alone, load the spilled-mode compact dirs registry into the
-    pandas path, and crash on the next advance's ['host', 'salt']
-    merge (KeyError). Mode is now detected from the persisted
-    registry's shape; the resumed crawl must stay in spilled mode and
-    still match the oracle row-for-row."""
-    import glob
-
-    def link(i, href):
-        return dict(href=href, label=f"l{i}", selector=f"a.l{i}",
-                    element_type="a", pos_x=0, pos_y=0, link_index=i)
-
-    def page(url, hrefs):
-        host = url.split("/")[2]
-        return dict(url=url, host=host, status_code=200,
-                    title=f"T {url}", meta_description="", text_content="",
-                    headings=[], links=[link(i, h)
-                                        for i, h in enumerate(hrefs)],
-                    images=[], forms=[], load_time_ms=10)
-
-    fix = str(tmp_path / "mega-fix")
-    os.makedirs(fix)
-    kids = [f"http://mega.test/p{i:03d}" for i in range(80)]
-    pages = ([page("http://seed.test/s0", kids)]
-             + [page(u, []) for u in kids])
-    _write_web_tables(fix, pages, ["http://seed.test/s0"])
-
-    cfg = CrawlConfig(max_depth=2, rate_limit=2)
-    ck = fresh_ckpt(str(tmp_path / "mega-ck"))
-    eng1 = FrontierEngine(spark, cfg, fix, ck, enforce_politeness=True,
-                          cursor_spill_rows=30)
-    eng1.explore(max_rounds=4)            # interrupt mid-drain
-    assert eng1._cursor_spark, "bootstrap spill never engaged"
-    assert not eng1._state()["done"]
-    # the trigger shape: spilled cursor holds one row per (host, salt)
-    # group — far fewer rows than the cap that tripped the spill
-    last_cp = sorted(glob.glob(os.path.join(ck, "cursor",
-                                            "round=*.parquet")))[-1]
-    assert FrontierEngine._parquet_rows(last_cp) <= 30
-
-    eng2 = FrontierEngine(spark, cfg, fix, ck, enforce_politeness=True,
-                          cursor_spill_rows=30)
-    visits = eng2.run()
-    assert eng2._cursor_spark, "resume fell back to pandas mode"
-    got = [_visit_tuple_engine(r)
-           for r in visits.orderBy("visit_rank").collect()]
-    exp = [_visit_tuple_oracle(v) for v in run_oracle(fix, cfg).visits]
-    assert got == exp
-
-
-@pytest.mark.slow
-def test_cursor_spill_mode_equivalence_bench_web(spark, tmp_path):
-    """Deferral-heavy synthetic web (hundreds of freezing hosts):
-    pandas-cursor and spilled-cursor runs must produce the identical
-    visit set and freeze telemetry — the modes differ only in WHERE
-    the cursor lives."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from crawler_spark.sources.synth_web import generate_bench_web
-
-    web = str(tmp_path / "web-spill")
-    generate_bench_web(web, 6_000, n_hosts=200, n_seeds=32)
-    cfg = CrawlConfig(max_depth=3, rate_limit=12)
-    outs = []
-    for tag, spill in (("pandas", 10**9), ("spark", 0)):
-        ck = fresh_ckpt(str(tmp_path / f"ck-{tag}"))
-        eng = FrontierEngine(spark, cfg, web, ck,
-                             enforce_politeness=True,
-                             cursor_spill_rows=spill)
-        visits = eng.run()
-        row = (visits.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("url", "prio", "visit_rank",
-                                 "batch_id")).alias("chk")).collect()[0])
-        with open(os.path.join(ck, "metrics.jsonl")) as f:
-            ms = [json.loads(line) for line in f]
-        outs.append({"n": row["n"], "chk": row["chk"],
-                     "frozen": sum(m.get("frozen", 0) for m in ms),
-                     "popped": sum(m.get("popped", 0) for m in ms),
-                     "spilled": eng._cursor_spark})
-    assert outs[0]["spilled"] is False and outs[1]["spilled"] is True
-    assert outs[1]["frozen"] > 0
-    for k in ("n", "chk", "frozen", "popped"):
-        assert outs[0][k] == outs[1][k], (k, outs)
 
 
 def test_inloop_image_ingest_matches_oracle(spark, tmp_path):
