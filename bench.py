@@ -90,7 +90,6 @@ def ensure_bench_web(pages: int | None = None,
 def run_frontier_bench(spark, max_depth: int = 8,
                        pages: int | None = None,
                        seeds: int | None = None,
-                       also_sharded: bool = False,
                        ingest_images: bool = False) -> dict:
     """The engine's own metric: URLs scheduled+fetched per second on
     the synthetic frontier. Reported in two parts:
@@ -169,17 +168,6 @@ def run_frontier_bench(spark, max_depth: int = 8,
         if t_ing > 0:
             out["ingest_sec"] = round(t_ing, 2)
             out["ingest_images_per_sec"] = round(new / t_ing, 1)
-    if also_sharded:
-        # evidence the out-of-core exact path under timing too: the
-        # seed-branch-sharded sweep must reproduce the same visit set
-        # (row parity is pinned in tests; count-checked here) while
-        # bounding driver memory by the largest shard
-        eng.timings = {}
-        t2 = time.time()
-        n_sh = eng.resolve(strategy="sharded", n_shards=8).count()
-        out["resolve_sharded_sec"] = round(time.time() - t2, 2)
-        out["resolve_sharded_steps"] = dict(eng.timings)
-        assert n_sh == n, f"sharded visit count {n_sh} != {n}"
     return out
 
 
@@ -277,14 +265,8 @@ def main() -> None:
         # path is a first-class part of the engine's per-round work
         # (disable with SPARK_GRAFT_INGEST_IMAGES=0 to time the pure
         # link frontier)
-        # sharded resolve timed alongside by default so BENCH_rNN
-        # tracks the parallel per-shard sweep walls (shard_sweeps =
-        # per-worker seconds, concurrent; dfs_sweep = wall) — disable
-        # with SPARK_GRAFT_BENCH_SHARDED=0
         frontier = run_frontier_bench(
             spark,
-            also_sharded=os.environ.get(
-                "SPARK_GRAFT_BENCH_SHARDED", "1") == "1",
             ingest_images=os.environ.get(
                 "SPARK_GRAFT_INGEST_IMAGES", "1") == "1")
         print(f"# frontier: {frontier}", file=sys.stderr)
@@ -309,4 +291,11 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    import argparse
+
+    # configured through SPARK_GRAFT_* environment variables only;
+    # the parser gives --help a usage text instead of a bench run
+    argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter).parse_args()
     main()

@@ -11,15 +11,15 @@ crawler_spark/engine/frontier.py).
 Because it is the engine's only sequential constant, it must be as
 small as possible: a scaling-efficiency measurement divides by it.
 Nodes are DENSE int32 ids (the engine dictionary-encodes url-hashes
-against a Spark-sorted node table, then `np.searchsorted` maps the
-edge arrays — all linear scans). Dense ids turn the sweep's two hash
-tables into direct-indexed arrays: the random-access working set for
-N nodes is ~4.125N bytes (a 4 B/node CSR index + a 1-bit/node claimed
-bitmap, mostly L3-resident) instead of the ~64N-byte open-addressing
-walk of the round-1 kernel, which was memory-bound at 3-25 s per 10M
-edges. Ids are int32, so the kernel addresses fewer than 2^31 nodes;
-the engine checks the node count against that ceiling before it
-encodes or sweeps anything (engine/frontier.py:_node_offsets).
+against a node table with distributed Spark joins before the sweep;
+see engine/frontier.py:_resolve_skeleton). Dense ids turn the sweep's
+two hash tables into direct-indexed arrays: the random-access working
+set for N nodes is ~4.125N bytes (a 4 B/node CSR index + a 1-bit/node
+claimed bitmap, mostly L3-resident) instead of the ~64N-byte
+open-addressing walk of the round-1 kernel, which was memory-bound at
+3-25 s per 10M edges. Ids are int32, so the kernel addresses fewer
+than 2^31 nodes; the engine checks the node count against that
+ceiling before it encodes or sweeps anything (engine/frontier.py:_node_offsets).
 
 Two interchangeable implementations of the same sweep:
 
@@ -30,7 +30,9 @@ Two interchangeable implementations of the same sweep:
     ~1 µs/edge. Always available; the unit tests pin the two equal.
 
 ``sweep()`` picks the C kernel when a compiler is present and falls
-back silently otherwise.
+back silently otherwise. A C kernel that cannot allocate its state
+raises MemoryError: falling back to the ~50x slower, dict-per-node
+Python twin exactly when memory is short would only fail later.
 
 Inputs (all numpy, C-contiguous):
   c_sorted  int32[n_edges]  child node-id, grouped by parent with each
@@ -71,34 +73,33 @@ typedef struct { int32_t id; int32_t depth; int64_t parent_rank; int32_t li; } f
 #define CLAIM_GET(b, i) ((b[(int64_t)(i) >> 3] >> ((i) & 7)) & 1)
 #define CLAIM_SET(b, i) (b[(int64_t)(i) >> 3] |= (uint8_t)(1u << ((i) & 7)))
 
-/* Resumable sweep: claimed[] is CALLER-owned persistent claim state —
-   a BITMAP of ceil(n_nodes/8) bytes (init to 0 once; survives across
-   shard calls so seed-branch shards sweep against the claims of
-   earlier shards). The sweep only ever needs claim MEMBERSHIP (ranks
-   are assigned from the running counter and parent ranks always point
-   into the same call's output), so 1 bit/node replaces the former
-   4 B/node rank array — 32x less driver state at the 10^10-node
-   posture, and denser = more cache-resident for the random probes.
-   rank0 is the global rank of this call's first claim. Returns the
-   number of claims made BY THIS CALL (outputs are call-local arrays;
-   parent_rank is the GLOBAL rank). -2 on allocation failure. */
-int64_t dfs_sweep_dense_resume(
+/* Exact DFS-preorder claim sweep. The claim state is a BITMAP of
+   ceil(n_nodes/8) bytes: the sweep only ever needs claim MEMBERSHIP
+   (ranks come from the running counter and parent ranks always point
+   into the output), so 1 bit/node replaces a 4 B/node rank
+   array — 32x less driver state, and denser = more cache-resident for
+   the random probes. Returns the number of claims, -1 on allocation
+   failure. */
+int64_t dfs_sweep_dense(
     int64_t n_edges, const int32_t *c, const int32_t *li,
     int64_t m, const int32_t *uniq_p, const int64_t *starts,
     int64_t n_seeds, const int32_t *seeds, int32_t maxd,
-    int64_t n_nodes, uint8_t *claimed, int64_t rank0,
+    int64_t n_nodes,
     int32_t *out_id, int32_t *out_depth, int64_t *out_parent_rank,
     int32_t *out_li)
 {
-    /* csr_of[id] = row into uniq_p/starts or -1: shard-local, built
-       per call from this call's (shard's) CSR */
+    /* csr_of[id] = row into uniq_p/starts or -1 */
     int32_t *csr_of = (int32_t *)malloc((size_t)n_nodes * 4);
+    uint8_t *claimed = (uint8_t *)calloc((size_t)((n_nodes + 7) >> 3), 1);
     frame *st = (frame *)malloc((size_t)(n_edges + n_seeds + 1) * sizeof(frame));
-    if (!csr_of || !st) { free(csr_of); free(st); return -2; }
+    if (!csr_of || !claimed || !st) {
+        free(csr_of); free(claimed); free(st);
+        return -1;
+    }
     memset(csr_of, 0xff, (size_t)n_nodes * 4);
     for (int64_t j = 0; j < m; j++) csr_of[uniq_p[j]] = (int32_t)j;
 
-    int64_t sp = 0, rank = rank0, n_out = 0;
+    int64_t sp = 0, n_out = 0;
     for (int64_t sidx = 0; sidx < n_seeds; sidx++) {
         frame f0 = {seeds[sidx], 0, -1, -1};
         st[sp++] = f0;
@@ -108,8 +109,7 @@ int64_t dfs_sweep_dense_resume(
             CLAIM_SET(claimed, f.id);
             out_id[n_out] = f.id; out_depth[n_out] = f.depth;
             out_parent_rank[n_out] = f.parent_rank; out_li[n_out] = f.li;
-            int64_t my_rank = rank++;
-            n_out++;
+            int64_t my_rank = n_out++;
             if (f.depth >= maxd) continue;
             int32_t pj = csr_of[f.id];
             if (pj < 0) continue;                      /* leaf */
@@ -122,43 +122,8 @@ int64_t dfs_sweep_dense_resume(
             }
         }
     }
-    free(csr_of); free(st);
+    free(csr_of); free(claimed); free(st);
     return n_out;
-}
-
-int64_t dfs_sweep_dense(
-    int64_t n_edges, const int32_t *c, const int32_t *li,
-    int64_t m, const int32_t *uniq_p, const int64_t *starts,
-    int64_t n_seeds, const int32_t *seeds, int32_t maxd,
-    int64_t n_nodes,
-    int32_t *out_id, int32_t *out_depth, int64_t *out_parent_rank,
-    int32_t *out_li)
-{
-    uint8_t *claimed = (uint8_t *)calloc((size_t)((n_nodes + 7) >> 3), 1);
-    if (!claimed) return -1;
-    int64_t n = dfs_sweep_dense_resume(
-        n_edges, c, li, m, uniq_p, starts, n_seeds, seeds, maxd,
-        n_nodes, claimed, 0, out_id, out_depth, out_parent_rank, out_li);
-    free(claimed);
-    return n < 0 ? -1 : n;
-}
-
-/* dictionary-encode int64 keys against a sorted table: out[k] = index
-   of keys[k] in table, or -1 when absent. Called from Python threads
-   over chunks — ctypes releases the GIL for the duration of the call,
-   so the encode scales with cores (np.searchsorted holds the GIL). */
-void encode_ids(int64_t n, const int64_t *keys, int64_t n_nodes,
-                const int64_t *table, int32_t *out)
-{
-    for (int64_t k = 0; k < n; k++) {
-        int64_t key = keys[k];
-        int64_t lo = 0, hi = n_nodes;
-        while (lo < hi) {
-            int64_t mid = (lo + hi) >> 1;
-            if (table[mid] < key) lo = mid + 1; else hi = mid;
-        }
-        out[k] = (lo < n_nodes && table[lo] == key) ? (int32_t)lo : -1;
-    }
 }
 
 /* CSR run-length boundaries over a parent-contiguous id column: one
@@ -273,17 +238,6 @@ def _load_lib():
             ctypes.c_int64, i32p, ctypes.c_int32,
             ctypes.c_int64,
             i32p, i32p, i64p, i32p]
-        u8p_ = ctypes.POINTER(ctypes.c_uint8)
-        lib.dfs_sweep_dense_resume.restype = ctypes.c_int64
-        lib.dfs_sweep_dense_resume.argtypes = [
-            ctypes.c_int64, i32p, i32p,
-            ctypes.c_int64, i32p, i64p,
-            ctypes.c_int64, i32p, ctypes.c_int32,
-            ctypes.c_int64, u8p_, ctypes.c_int64,
-            i32p, i32p, i64p, i32p]
-        lib.encode_ids.restype = None
-        lib.encode_ids.argtypes = [ctypes.c_int64, i64p,
-                                   ctypes.c_int64, i64p, i32p]
         lib.csr_bounds.restype = ctypes.c_int64
         lib.csr_bounds.argtypes = [ctypes.c_int64, i32p, i32p, i64p]
         u8p = ctypes.POINTER(ctypes.c_uint8)
@@ -297,6 +251,8 @@ def _load_lib():
 
 
 def sweep_c(c_sorted, i_sorted, uniq_p, starts, seeds, n_nodes, max_depth):
+    """The C sweep. None only when no C toolchain exists; raises
+    MemoryError when the kernel cannot allocate its state."""
     lib = _load_lib()
     if lib is None:
         return None
@@ -325,8 +281,10 @@ def sweep_c(c_sorted, i_sorted, uniq_p, starts, seeds, n_nodes, max_depth):
                             int(n_nodes),
                             p32(out_id), p32(out_depth), p64(out_parent),
                             p32(out_li))
-    if n < 0:  # allocation failure inside the kernel
-        return None
+    if n < 0:
+        raise MemoryError(
+            f"dfs_sweep_dense: allocation failure sweeping {n_edges} "
+            f"edges over {int(n_nodes)} nodes")
     return (int(n), out_id[:n], out_depth[:n], out_parent[:n], out_li[:n])
 
 
@@ -370,48 +328,6 @@ def sweep_py(c_sorted, i_sorted, uniq_p, starts, seeds, n_nodes, max_depth):
     n = len(out_id)
     return (n, np.array(out_id, np.int32), np.array(out_depth, np.int32),
             np.array(out_parent, np.int64), np.array(out_li, np.int32))
-
-
-def encode_ids(keys, table, n_threads: int = 16):
-    """Vectorized dictionary-encode: positions of int64 `keys` in the
-    sorted int64 `table`, -1 for misses. C kernel + thread-chunked
-    (ctypes drops the GIL per call) when a toolchain exists;
-    np.searchsorted fallback otherwise. Contract pinned against the
-    numpy path in tests. (The engine's skeleton encode moved into
-    distributed Spark joins — engine/frontier.py:_resolve_skeleton —
-    this stays as the driver-side utility for ad-hoc kernels.)"""
-    keys = np.ascontiguousarray(keys, np.int64)
-    table = np.ascontiguousarray(table, np.int64)
-    n, n_nodes = len(keys), len(table)
-    out = np.empty(n, np.int32)
-    if n == 0:
-        return out
-    if n_nodes == 0:
-        out.fill(-1)
-        return out
-    lib = _load_lib()
-    if lib is None:
-        pos = np.minimum(np.searchsorted(table, keys), n_nodes - 1)
-        return np.where(table[pos] == keys, pos, -1).astype(np.int32)
-    i64p = ctypes.POINTER(ctypes.c_int64)
-    i32p = ctypes.POINTER(ctypes.c_int32)
-
-    def enc(lo, hi):
-        lib.encode_ids(
-            hi - lo,
-            keys[lo:hi].ctypes.data_as(i64p),
-            n_nodes, table.ctypes.data_as(i64p),
-            out[lo:hi].ctypes.data_as(i32p))
-
-    chunk = max(1 << 18, n // (n_threads * 4) + 1)
-    spans = [(lo, min(lo + chunk, n)) for lo in range(0, n, chunk)]
-    if len(spans) == 1:
-        enc(*spans[0])
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(min(n_threads, len(spans))) as ex:
-            list(ex.map(lambda s: enc(*s), spans))
-    return out
 
 
 def csr_runlength(p):
@@ -536,122 +452,3 @@ def sweep(c_sorted, i_sorted, uniq_p, starts, seeds, n_nodes, max_depth):
     return sweep_py(c_sorted, i_sorted, uniq_p, starts, seeds, n_nodes,
                     max_depth) + ("py",)
 
-
-class SweepState:
-    """Persistent claim state for seed-branch-sharded sweeps: shards
-    arrive in seed-rank order, each sweep claims against everything
-    earlier shards claimed (DFS claims under seed rank r never depend
-    on later seeds, so per-shard sweeps with shared state reproduce
-    the global sweep exactly). State is 1 BIT/node (a claimed bitmap —
-    the sweep only consumes claim membership, never a stored rank, so
-    the former 4 B/node rank array was 32x oversized: at the
-    10^10-node posture the bitmap is ~1.25 GB of driver RAM and
-    nothing else node-indexed survives on the driver). The per-shard
-    EDGE arrays — the memory hog at web scale — are bounded by the
-    largest shard, not the web. Picks the C kernel or the pure-Python
-    twin once per process (mixing them would be fine semantically —
-    both implement the same contract — but keeping one makes `impl`
-    reporting truthful)."""
-
-    def __init__(self, n_nodes: int):
-        self.n_nodes = int(n_nodes)
-        self.rank = 0
-        self._lib = _load_lib()
-        if self._lib is not None:
-            self.impl = "c"
-            self.claimed_bits = np.zeros((self.n_nodes + 7) // 8, np.uint8)
-        else:
-            self.impl = "py"
-            self.claimed: dict[int, int] = {}
-
-    def _sweep_shard_c(self, c_sorted, i_sorted, uniq_p, starts, seeds,
-                       max_depth):
-        lib = self._lib
-        n_edges = len(c_sorted)
-        out_n = self.n_nodes - self.rank  # claims left ≤ unclaimed nodes
-        out_id = np.empty(out_n, np.int32)
-        out_depth = np.empty(out_n, np.int32)
-        out_parent = np.empty(out_n, np.int64)
-        out_li = np.empty(out_n, np.int32)
-        i64p = ctypes.POINTER(ctypes.c_int64)
-        i32p = ctypes.POINTER(ctypes.c_int32)
-
-        def p64(a):
-            return a.ctypes.data_as(i64p)
-
-        def p32(a):
-            return a.ctypes.data_as(i32p)
-
-        c_sorted = np.ascontiguousarray(c_sorted, np.int32)
-        i_sorted = np.ascontiguousarray(i_sorted, np.int32)
-        uniq_p = np.ascontiguousarray(uniq_p, np.int32)
-        starts = np.ascontiguousarray(starts, np.int64)
-        seeds = np.ascontiguousarray(seeds, np.int32)
-        n = lib.dfs_sweep_dense_resume(
-            n_edges, p32(c_sorted), p32(i_sorted),
-            len(uniq_p), p32(uniq_p), p64(starts),
-            len(seeds), p32(seeds), max_depth,
-            self.n_nodes,
-            self.claimed_bits.ctypes.data_as(
-                ctypes.POINTER(ctypes.c_uint8)),
-            self.rank,
-            p32(out_id), p32(out_depth), p64(out_parent), p32(out_li))
-        if n < 0:
-            raise MemoryError("dfs_sweep_dense_resume allocation failure")
-        self.rank += int(n)
-        return (int(n), out_id[:n], out_depth[:n], out_parent[:n],
-                out_li[:n])
-
-    def _sweep_shard_py(self, c_sorted, i_sorted, uniq_p, starts, seeds,
-                        max_depth):
-        c_l = np.asarray(c_sorted, np.int64).tolist()
-        i_l = np.asarray(i_sorted, np.int64).tolist()
-        bounds = np.asarray(starts, np.int64)
-        child_idx = dict(zip(np.asarray(uniq_p, np.int64).tolist(),
-                             zip(bounds[:-1].tolist(), bounds[1:].tolist())))
-        claimed = self.claimed
-        out_id: list[int] = []
-        out_depth: list[int] = []
-        out_parent: list[int] = []
-        out_li: list[int] = []
-        stack: list[tuple] = []
-        push = stack.append
-        pop = stack.pop
-        rank0 = self.rank
-        for sh in np.asarray(seeds, np.int64).tolist():
-            push((sh, 0, -1, -1))
-            while stack:
-                nid, depth, parent_rank, li = pop()
-                if nid in claimed:
-                    continue
-                rank = rank0 + len(out_id)
-                claimed[nid] = rank
-                out_id.append(nid)
-                out_depth.append(depth)
-                out_parent.append(parent_rank)
-                out_li.append(li)
-                if depth < max_depth:
-                    ci = child_idx.get(nid)
-                    if ci is not None:
-                        lo, hi = ci
-                        d1 = depth + 1
-                        for k in range(hi - 1, lo - 1, -1):
-                            ch = c_l[k]
-                            if ch >= 0 and ch not in claimed:
-                                push((ch, d1, rank, i_l[k]))
-        n = len(out_id)
-        self.rank = rank0 + n
-        return (n, np.array(out_id, np.int32),
-                np.array(out_depth, np.int32),
-                np.array(out_parent, np.int64),
-                np.array(out_li, np.int32))
-
-    def sweep_shard(self, c_sorted, i_sorted, uniq_p, starts, seeds,
-                    max_depth):
-        """One shard's sweep. Returns (n, id, depth, parent_rank, li)
-        — call-local arrays, GLOBAL parent ranks."""
-        if self.impl == "c":
-            return self._sweep_shard_c(c_sorted, i_sorted, uniq_p, starts,
-                                       seeds, max_depth)
-        return self._sweep_shard_py(c_sorted, i_sorted, uniq_p, starts,
-                                    seeds, max_depth)

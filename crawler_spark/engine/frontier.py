@@ -25,9 +25,10 @@ P-complete — inherently sequential — so the engine splits it:
      comparison = lexicographic order) among calls from claimed
      pages. The explored edge set is dictionary-encoded to dense
      int32 ids DISTRIBUTED, then one sequential explicit-stack DFS
-     sweep (core/dfs_kernel.py) claims in exact visit order — either
-     over the whole skeleton or shard by seed-rank shard with the
-     claim state carried across shards (the out-of-core path).
+     sweep (core/dfs_kernel.py) over the whole skeleton claims in
+     exact visit order. The skeleton must fit the driver: resolve
+     fails by name (SkeletonMemoryError, NodeCeilingError) before
+     the sweep when it does not.
      Verified against the oracle simulator in
      tests/test_crawl_golden.py. The claim order IS the reference's
      visit order; the claim set IS the reference's URL-seen set.
@@ -136,6 +137,50 @@ def _node_offsets(path: str) -> tuple[dict[int, int], int]:
             f"nodes with int32 ids, so the ceiling is {MAX_NODES - 1} "
             f"(2^31 - 1) nodes")
     return offs, acc
+
+
+class SkeletonMemoryError(MemoryError):
+    """The resolve sweep would need more driver memory than is free."""
+
+
+# Driver bytes of the resolve sweep (_resolve_skeleton and the C
+# kernel in core/dfs_kernel.py), summed over every allocation — not all
+# are live at once, so this bounds the peak from above. Per edge: the
+# Arrow read of three int32 columns (12), their contiguous numpy
+# copies (12), csr_runlength's int32 run ids + int64 run starts before
+# trimming (12) and the kernel's DFS stack of one 24-byte frame per
+# edge (24). Per node: the trimmed CSR arrays (4 + 8), the kernel's
+# int32 csr_of index (4), its four output columns sized to the node
+# count (4 + 4 + 8 + 4) and its claimed bitmap (1 bit, counted as 1).
+_SWEEP_EDGE_BYTES = 12 + 12 + 12 + 24
+_SWEEP_NODE_BYTES = 4 + 8 + 4 + (4 + 4 + 8 + 4) + 1
+
+
+def _mem_available() -> int | None:
+    """MemAvailable from /proc/meminfo in bytes; None when unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _check_sweep_fits(n_edges: int, n_nodes: int) -> None:
+    """Raise SkeletonMemoryError when the sweep's driver bytes exceed
+    the host's available memory — before the skeleton is read, so an
+    oversized skeleton fails by name instead of by OOM. The skeleton
+    is read with pyarrow, not collected through Spark, so
+    spark.driver.maxResultSize does not bound it."""
+    avail = _mem_available()
+    need = _SWEEP_EDGE_BYTES * n_edges + _SWEEP_NODE_BYTES * n_nodes
+    if avail is not None and need > avail:
+        raise SkeletonMemoryError(
+            f"resolve sweep of {n_edges} edges over {n_nodes} nodes needs "
+            f"about {need} bytes of driver memory, but only {avail} bytes "
+            f"are available (MemAvailable)")
 
 
 # ---------------------------------------------------------------------------
@@ -1113,34 +1158,26 @@ class FrontierEngine:
 
     # ---- resolve phase ----
 
-    def resolve(self, strategy: str = "skeleton",
-                n_shards: int = 4) -> DataFrame:
+    def resolve(self) -> DataFrame:
         """Exact DFS-claim resolution over the explored edge set.
         Returns the visits DataFrame: (url, url_hash, host, depth,
         parent_url, link_index, prio, status_code, visit_rank,
         batch_id) — equal row-for-row to the oracle simulator.
 
-        strategy="skeleton" (default): lexicographic-first claiming is
-        P-complete — no parallel shortcut reproduces the reference's
-        sequential DFS exactly — so the engine keeps everything
-        EXPENSIVE distributed (fetch, parse, canonicalize, admission,
-        dedup: all upstream of here) and resolves ordering over a
-        COMPACT skeleton: edges dictionary-encoded to dense int32 ids
-        JVM-side (~12 bytes/edge on disk), pulled via Arrow, claimed
-        with an integer explicit-stack DFS (~20 ns/edge in C). The
-        sweep is the fast path whenever the dense-id skeleton fits the
-        driver (~200 GB at 10^10 edges).
+        Lexicographic-first claiming is P-complete — no parallel
+        shortcut reproduces the reference's sequential DFS exactly —
+        so the engine keeps everything EXPENSIVE distributed (fetch,
+        parse, canonicalize, admission, dedup: all upstream of here)
+        and resolves ordering over a COMPACT skeleton: edges
+        dictionary-encoded to dense int32 ids JVM-side (~12 bytes/edge
+        on disk), pulled via Arrow, claimed with an integer
+        explicit-stack DFS (~20 ns/edge in C). See _resolve_skeleton.
 
-        strategy="sharded": the out-of-core exact path — seeds split
-        into `n_shards` contiguous seed-rank shards, each shard's
-        reachable subgraph swept alone, in seed-rank order, with claim
-        state carried across shards (see _resolve_sharded). Bounds
-        driver memory by the largest shard's edge set instead of the
-        web; claims identical row-for-row to "skeleton".
-
-        Both strategies address nodes with int32 ids: a node table of
-        MAX_NODES (2^31) or more raises NodeCeilingError before the
-        skeleton is written."""
+        The whole skeleton is swept on the driver, which must hold it:
+        a skeleton whose sweep would not fit the driver's available
+        memory raises SkeletonMemoryError, and a node table of
+        MAX_NODES (2^31) or more — past the sweep's int32 ids — raises
+        NodeCeilingError before the skeleton is written."""
         # per-call step timings: RESET here so two consecutive
         # resolve() calls on one engine report disjoint,
         # non-accumulating breakdowns (the bug class round-4 ADVICE
@@ -1156,23 +1193,20 @@ class FrontierEngine:
                  .filter(F.col("kind") == "edge")
                  .select("parent_url", "link_index", "child_url"))
         seeds = self.seed_claims().localCheckpoint()
-        if strategy == "skeleton":
-            claims = self._resolve_skeleton(edges, seeds)
-        elif strategy == "sharded":
-            claims = self._resolve_sharded(edges, seeds, n_shards=n_shards)
-        else:
-            raise ValueError(f"unknown resolve strategy {strategy!r}; "
-                             "expected 'skeleton' or 'sharded'")
-        return self._finalize_visits(claims)
+        return self._finalize_visits(self._resolve_skeleton(edges, seeds))
 
-    def _encode_skeleton(self, edges: DataFrame, seeds: DataFrame):
-        """Distributed dictionary-encode of the explored edge set into
-        the all-numeric skeleton: a dense-id node table (nodes_path)
-        and the encoded (p_id, i, c_id) edge table (skel_path), both
-        written by all cores. Shared by the skeleton and sharded
-        resolve strategies. Returns (nodes_path, skel_path, nodes_id
-        DataFrame)."""
-        self.timings = getattr(self, "timings", {})
+    def _resolve_skeleton(self, edges: DataFrame,
+                          seeds: DataFrame) -> DataFrame:
+        """Exact DFS claiming over the int64-encoded skeleton.
+
+        The lexicographic-heap formulation of round 1 is equivalent to
+        plain DFS preorder (the priority vectors have the prefix
+        property, so heap order ≡ visit stack order) — but the heap
+        built an O(depth)-char priority STRING per edge push, which
+        dominated the sweep. This version sweeps with an integer
+        explicit-stack DFS (no strings, no heap, no per-edge
+        allocation beyond one tuple); priority vectors are emitted
+        vectorized by the claims write (see _write_claims)."""
         t0 = time.time()
         # all-numeric skeleton (20 bytes/edge): host identity and
         # politeness are NOT shipped — only the visit ORDER is
@@ -1219,7 +1253,7 @@ class FrontierEngine:
          .sortWithinPartitions("h")
          .withColumn("mono", F.monotonically_increasing_id())
          .write.mode("overwrite").parquet(nodes_path))
-        offs, _ = _node_offsets(nodes_path)
+        offs, n_nodes = _node_offsets(nodes_path)
         off_df = self.spark.createDataFrame(
             list(offs.items()) or [(0, 0)], "pid int, off long")
         nodes_id = (self.spark.read.parquet(nodes_path)
@@ -1259,22 +1293,9 @@ class FrontierEngine:
             .sortWithinPartitions("p_id", "i")
             .write.mode("overwrite").parquet(skel_path))
         self.timings["skeleton_write"] = round(time.time() - t0, 2)
-        return nodes_path, skel_path, nodes_id
-
-    def _resolve_skeleton(self, edges: DataFrame,
-                          seeds: DataFrame) -> DataFrame:
-        """Exact DFS claiming over the int64-encoded skeleton.
-
-        The lexicographic-heap formulation of round 1 is equivalent to
-        plain DFS preorder (the priority vectors have the prefix
-        property, so heap order ≡ visit stack order) — but the heap
-        built an O(depth)-char priority STRING per edge push, which
-        dominated the sweep. This version sweeps with an integer
-        explicit-stack DFS (no strings, no heap, no per-edge
-        allocation beyond one tuple); priority vectors are emitted
-        vectorized by the claims write (see _write_claims)."""
-        nodes_path, skel_path, nodes_id = self._encode_skeleton(edges, seeds)
         t0 = time.time()
+        _check_sweep_fits(sum(self._footer_rows(skel_path).values()),
+                          n_nodes)
         import pyarrow as pa
 
         skel_t = _read_parquet_dir(
@@ -1285,11 +1306,6 @@ class FrontierEngine:
         t0 = time.time()
         import numpy as np
 
-        # node COUNT only — the id→hash mapping itself stays
-        # distributed (claims are written as dense ids and rejoined
-        # to urls in _claims_to_visits; the former driver-resident
-        # 8 B/node id→hash array was ~80 GB at the 10^10-URL posture)
-        _, n_nodes = _node_offsets(nodes_path)
         # seeds sorted by prio string ≡ seed_rank order: the oracle
         # crawls each seed's subtree to completion before the next;
         # ids come from the same node table the edges were encoded
@@ -1331,226 +1347,16 @@ class FrontierEngine:
         shutil.rmtree(claims_path, ignore_errors=True)
         t0 = time.time()
         self._write_claims(claims_path, out_id, out_depth, out_parent_rank,
-                           out_li, rank0=0, part=0,
+                           out_li,
                            seed_prio_by_id={int(r["id"]): r["prio"].encode()
                                             for r in seed_rows})
         self.timings["claims_write"] = round(time.time() - t0, 2)
         return self._claims_to_visits(claims_path, seeds, nodes_id)
 
-    def _resolve_sharded(self, edges: DataFrame, seeds: DataFrame,
-                         n_shards: int = 4) -> DataFrame:
-        """Seed-branch-sharded exact resolve — the out-of-core path
-        past driver memory that the skeleton strategy's docstring
-        promises. Claims under seed rank r never depend on later seeds
-        (the reference crawls each seed's subtree to completion before
-        the next, crawler-engine.ts:556,673-695), so the sweep pages
-        branch-by-branch: seeds are split into n_shards contiguous
-        seed-rank ranges, each shard's edge subgraph (everything
-        BFS-reachable from the shard's seeds within max_depth — a
-        conservative superset of what its DFS can traverse, computed
-        DISTRIBUTED by ≤max_depth labeled frontier joins) is collected
-        and swept alone, with the claim state (a 1-bit/node claimed
-        bitmap) persisting across shards so later shards skip earlier
-        claims exactly like the global sweep would. Driver memory is
-        bounded by the LARGEST SHARD's edge set (+ the bitmap — the
-        only remaining node-indexed driver state, ~1.25 GB at 10^10
-        nodes; claims are written as dense ids and the id→url mapping
-        rides the distributed rejoin in _claims_to_visits), not the
-        web: at 10^10 edges the global skeleton is ~200 GB of driver
-        RAM while 64-way sharding needs only the largest branch. The
-        trade is duplicated edge labeling where shard subgraphs
-        overlap — distributed compute paid to bound sequential
-        memory. Produces claims row-for-row equal to
-        strategy='skeleton' (pinned in tests/test_crawl_golden.py)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        import numpy as np
-        import pyarrow as pa
-
-        from ..core.dfs_kernel import SweepState, csr_runlength
-
-        nodes_path, skel_path, nodes_id = self._encode_skeleton(edges, seeds)
-        t0 = time.time()
-        npart = max(self.spark.sparkContext.defaultParallelism, 4)
-        # hash-partition the encoded edge set by parent ONCE and pin it
-        # in memory (~12 B/edge): every BFS level below joins on p_id,
-        # so the partitioning is computed once and each level's join
-        # shuffles only the (much smaller) frontier side — re-reading
-        # the parquet per level re-shuffled all edges every level,
-        # which made shard labeling cost more than the resolve itself
-        enc = (self.spark.read.parquet(skel_path)
-               .repartition(npart, "p_id").persist())
-        seed_rows = sorted(
-            seeds.select(url_hash(F.col("url")).alias("h"), "prio")
-            .join(nodes_id, "h").collect(),
-            key=lambda r: r["prio"])
-        n_seeds = len(seed_rows)
-        n_shards = max(1, min(n_shards, n_seeds))
-        shard_seed_ids: dict[int, list[int]] = {}
-        for i, r in enumerate(seed_rows):
-            s = i * n_shards // n_seeds
-            shard_seed_ids.setdefault(s, []).append(int(r["id"]))
-        self.timings["seed_collect"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        # per-shard reachability labels: multi-source BFS over the
-        # encoded edges, one frontier join per depth level, with the
-        # shard set of each node carried as a BITMASK (W = ceil(n/64)
-        # long words) instead of (shard, node) rows — a node reachable
-        # from k shards is ONE frontier row, not k, so the per-level
-        # join/agg intermediates shrink by up to n_shards× where shard
-        # subgraphs overlap (the duplication only reappears in the
-        # final per-shard skeleton files, where it is the point).
-        n_words = (n_shards + 63) // 64
-        mask_cols = [f"m{w}" for w in range(n_words)]
-        mask_ddl = ", ".join(f"{c} long" for c in mask_cols)
-
-        def _seed_row(shard: int, node: int) -> tuple:
-            masks = [0] * n_words
-            bit = 1 << (shard % 64)
-            # bit 63 is the sign bit of a Spark LongType — wrap to the
-            # signed representation (bitwise ops are sign-agnostic)
-            masks[shard // 64] = bit - (1 << 64) if bit >= (1 << 63) else bit
-            return (node, *masks)
-
-        # per-level frontiers cross a parquet write/read barrier
-        # (level dirs under the checkpoint), NOT localCheckpoint: each
-        # level's plan joins two subtrees that both descend from the
-        # previous level (cand via `frontier`, seen via the cumulative
-        # read), and Spark 4.1 leaks driver-side work that doubles per
-        # generation when such diamonds chain through checkpoints (see
-        # operators/cluster.py:connected_components, where it was
-        # measured). File-scan-rooted rounds stay constant-cost, and
-        # the cumulative `seen` becomes ONE multi-dir scan instead of
-        # a per-level union of checkpoint frames.
-        label_dir = self._paths("shard_label")
-        if os.path.isdir(label_dir):
-            shutil.rmtree(label_dir)
-
-        def _level_path(lv: int) -> str:
-            return os.path.join(label_dir, f"level={lv:03d}")
-
-        (self.spark.createDataFrame(
-            [_seed_row(s, i) for s, ids in shard_seed_ids.items()
-             for i in ids],
-            f"node int, {mask_ddl}")
-         .write.parquet(_level_path(0)))
-        level_paths = [_level_path(0)]
-        frontier = self.spark.read.parquet(*level_paths)
-
-        def _bit_or_all(df: DataFrame, key: str) -> DataFrame:
-            return df.groupBy(key).agg(
-                *[F.bit_or(c).alias(c) for c in mask_cols])
-
-        new_bits = [F.col(c).bitwiseAND(
-            F.bitwise_not(F.coalesce(F.col(f"s_{c}"), F.lit(0)
-                                     .cast("long"))))
-            for c in mask_cols]
-        for lv in range(1, int(self.cfg.max_depth) + 1):
-            seen = _bit_or_all(self.spark.read.parquet(*level_paths),
-                               "node").select(
-                "node", *[F.col(c).alias(f"s_{c}") for c in mask_cols])
-            cand = _bit_or_all(
-                enc.join(frontier.hint("shuffle_hash")
-                         .withColumnRenamed("node", "p_id"), "p_id")
-                   .filter(F.col("c_id") >= 0)
-                   .withColumnRenamed("c_id", "node"), "node")
-            (cand.join(seen, "node", "left")
-             .select("node", *[nb.alias(c) for nb, c
-                               in zip(new_bits, mask_cols)])
-             .filter(" or ".join(f"{c} != 0" for c in mask_cols))
-             .write.parquet(_level_path(lv)))
-            if sum(self._footer_rows(_level_path(lv)).values()) == 0:
-                break
-            level_paths.append(_level_path(lv))
-            frontier = self.spark.read.parquet(_level_path(lv))
-        reach_u = self.spark.read.parquet(*level_paths)
-        # unfold the masks into (node, shard) only now, for the
-        # shard-partitioned write
-        arr = "array(" + ", ".join(mask_cols) + ")"
-        shards_of = (f"filter(sequence(0, {n_shards - 1}), s -> "
-                     f"(element_at({arr}, cast(s div 64 as int) + 1)"
-                     f" & shiftleft(1L, s % 64)) != 0)")
-        reach = (_bit_or_all(reach_u, "node")
-                 .select("node", F.explode(F.expr(shards_of))
-                         .alias("shard")))
-        sharded_path = self._paths("skeleton_sharded")
-        # shard-partitioned skeleton: within a shard dir every parent
-        # is contiguous and link-sorted (partition key includes p_id),
-        # which is all the per-shard CSR pass needs
-        (enc.join(reach.withColumnRenamed("node", "p_id"), "p_id")
-            .repartition(npart, "shard", "p_id")
-            .sortWithinPartitions("shard", "p_id", "i")
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(sharded_path))
-        enc.unpersist()
-        self.timings["shard_label"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        empty = {"p_id": pa.array([], pa.int32()),
-                 "i": pa.array([], pa.int32()),
-                 "c_id": pa.array([], pa.int32())}
-
-        def _load_shard(s: int):
-            """Read + CSR-prepare one shard's skeleton (pyarrow and
-            csr_runlength release the GIL, so this overlaps the C
-            sweep of the previous shard when run on the prefetch
-            thread)."""
-            sdir = os.path.join(sharded_path, f"shard={s}")
-            skel_t = (_read_parquet_dir(sdir, empty)
-                      if os.path.isdir(sdir) else pa.table(empty))
-            p_ids = skel_t["p_id"].to_numpy(zero_copy_only=False)
-            i_sorted = skel_t["i"].to_numpy(zero_copy_only=False)
-            c_id = np.ascontiguousarray(
-                skel_t["c_id"].to_numpy(zero_copy_only=False), np.int32)
-            uniq_p_id, bounds = csr_runlength(p_ids)
-            return c_id, i_sorted, uniq_p_id, bounds
-
-        order = sorted(shard_seed_ids)
-        pool = ThreadPoolExecutor(max_workers=1)
-        # shard 0's load overlaps the node-count footer scan — the
-        # only shard whose IO nothing else can hide
-        nxt_fut = pool.submit(_load_shard, order[0])
-        _, n_nodes = _node_offsets(nodes_path)
-        self.timings["skeleton_read"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        claims_path = self._paths("claims")
-        shutil.rmtree(claims_path, ignore_errors=True)
-        state = SweepState(n_nodes)
-        seed_prio = {int(r["id"]): r["prio"].encode() for r in seed_rows}
-        shard_secs = []
-        write_sec = 0.0  # this resolve's writes only, excluded from
-        # dfs_sweep below so the sharded and skeleton paths report the
-        # same disjoint step breakdown (and a second resolve on the
-        # same engine can't double-count the previous call's writes)
-        for k, s in enumerate(order):
-            t_s = time.time()
-            c_id, i_sorted, uniq_p_id, bounds = nxt_fut.result()
-            if k + 1 < len(order):
-                # double-buffer: shard k+1's read/decode runs while
-                # shard k sweeps (the claim state is strictly
-                # sequential, the IO is not)
-                nxt_fut = pool.submit(_load_shard, order[k + 1])
-            seed_id = np.array(shard_seed_ids[s], np.int32)
-            n, out_id, out_depth, out_pr, out_li = state.sweep_shard(
-                c_id, i_sorted, uniq_p_id, bounds, seed_id,
-                self.cfg.max_depth)
-            t_w = time.time()
-            self._write_claims(claims_path, out_id, out_depth, out_pr,
-                               out_li, rank0=state.rank - n, part=s,
-                               seed_prio_by_id=seed_prio)
-            write_sec += time.time() - t_w
-            shard_secs.append(round(time.time() - t_s, 2))
-        pool.shutdown(wait=False)
-        self.timings["claims_write"] = round(write_sec, 2)
-        self.timings["dfs_sweep"] = round(time.time() - t0 - write_sec, 2)
-        self.timings["sweep_impl"] = state.impl
-        self.timings["shard_sweeps"] = shard_secs
-        return self._claims_to_visits(claims_path, seeds, nodes_id)
-
     @staticmethod
     def _write_claims(claims_path: str, out_id, out_depth, out_parent_rank,
-                      out_li, rank0: int, part: int,
-                      seed_prio_by_id: dict[int, bytes]) -> None:
-        """Hand a sweep's claims back through a pyarrow parquet part:
+                      out_li, seed_prio_by_id: dict[int, bytes]) -> None:
+        """Hand the sweep's claims back through a pyarrow parquet file:
         ~10× faster than createDataFrame at millions of rows,
         session-independent (no Arrow-vs-fallback divergence on the
         nullable parent_id), and it doubles as the resolve checkpoint
@@ -1567,8 +1373,8 @@ class FrontierEngine:
 
         The priority VECTOR of every claim is emitted here too —
         prio(claim) = prio(parent) ++ hex4(link_index) — rebuilt
-        VECTORIZED per depth level over the call's arrays (parents
-        always claim in the same sweep call and at depth-1, so each
+        VECTORIZED per depth level over the sweep's arrays (parents
+        always claim before their children and at depth-1, so each
         level's parent bytes are complete before the level runs; no
         per-claim Python loop, no Spark joins). The claims are
         driver-resident at this point by design — the sweep is the
@@ -1584,12 +1390,10 @@ class FrontierEngine:
         from ..core.dfs_kernel import emit_prios
 
         n = len(out_id)
-        # parent ranks are GLOBAL but a claim's parent is always
-        # claimed by the same sweep call (DFS parents lie on the path
-        # from this call's seeds), so call-local index = rank - rank0
-        local_pr = np.maximum(out_parent_rank - rank0, 0)
+        # a parent rank is its row in the sweep's output (seeds: -1)
+        parent_row = np.maximum(out_parent_rank, 0)
         parent_id = pa.array(
-            (out_id[local_pr] if n else out_id).astype(np.int32),
+            (out_id[parent_row] if n else out_id).astype(np.int32),
             pa.int32(), mask=out_parent_rank < 0)
         # ---- prio build: one forward pass in the C kernel ----
         # (numpy twin inside emit_prios when no toolchain; pinned
@@ -1603,7 +1407,7 @@ class FrontierEngine:
             seed_blob += p
             seed_ord[i] = j
         offsets, data = emit_prios(
-            out_depth, out_parent_rank, out_li, rank0,
+            out_depth, out_parent_rank, out_li, 0,
             np.frombuffer(bytes(seed_blob) or b"\0" * _HEX_W, np.uint8),
             seed_ord)
         prio_arr = pa.LargeStringArray.from_buffers(
@@ -1616,16 +1420,14 @@ class FrontierEngine:
             "parent_rank": pa.array(out_parent_rank.astype(np.int64)),
             "link_index": pa.array(out_li.astype(np.int32)),
             "prio": prio_arr,
-            "visit_rank": pa.array(
-                np.arange(rank0, rank0 + n, dtype=np.int64)),
+            "visit_rank": pa.array(np.arange(n, dtype=np.int64)),
         })
         pq.write_table(tbl,
-                       os.path.join(claims_path, f"claims_{part:05d}.parquet"),
+                       os.path.join(claims_path, "claims_00000.parquet"),
                        row_group_size=1 << 20)
 
     def _claims_to_visits(self, claims_path: str, seeds: DataFrame,
-                          nodes_id: DataFrame,
-                          timing_key: str = "claims_rejoin") -> DataFrame:
+                          nodes_id: DataFrame) -> DataFrame:
         """Read the claims parquet (prio vectors already emitted by the
         sweep write — see _write_claims) and map dense ids back to url
         strings DISTRIBUTED: every DFS claim is BFS-admitted, so the
@@ -1657,7 +1459,7 @@ class FrontierEngine:
                .select("url", "prio", "depth", "parent_url", "link_index",
                        "visit_rank"))
         out = out.localCheckpoint()
-        self.timings[timing_key] = round(time.time() - t0, 2)
+        self.timings["claims_rejoin"] = round(time.time() - t0, 2)
         return out
 
     def _finalize_visits(self, claims: DataFrame) -> DataFrame:

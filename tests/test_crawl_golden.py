@@ -127,59 +127,20 @@ def _write_disjoint_trees_fixture(path: str, n_trees: int = 4) -> int:
     return n_tree
 
 
-def test_sharded_matches_skeleton_and_oracle(spark, tmp_path):
-    """strategy='sharded' (seed-branch-paged out-of-core sweep with
-    claim state carried across shards) reproduces strategy='skeleton'
-    — and the sequential oracle — ROW-FOR-ROW including visit_rank,
-    prio and batch_id, at several shard widths (1 shard ≡ global
-    sweep; n_shards > n_seeds clamps). Two webs: t-smoke, whose seed
-    branches share pages (later shards skip earlier claims), and
-    disjoint per-host trees, where every shard claims its whole
-    branch."""
-    disjoint = str(tmp_path / "disjoint-web")
-    n_tree = _write_disjoint_trees_fixture(disjoint)
-    cases = [("t-smoke", FIXDIR, CrawlConfig(max_depth=3), (1, 2, 5, 999)),
-             ("disjoint", disjoint,
-              CrawlConfig(max_depth=4, rate_limit=10_000), (1, 4))]
-    for name, web, cfg, widths in cases:
-        eng = FrontierEngine(spark, cfg, web,
-                             fresh_ckpt(str(tmp_path / f"sh-{name}")))
-        eng.explore()
-        base = [_visit_tuple_engine(r) for r in
-                eng.resolve(strategy="skeleton")
-                .orderBy("visit_rank").collect()]
-        exp = [_visit_tuple_oracle(v) for v in run_oracle(web, cfg).visits]
-        assert base == exp, name
-        if name == "disjoint":
-            assert len(base) == 4 * n_tree
-        for n_shards in widths:
-            got = [_visit_tuple_engine(r) for r in
-                   eng.resolve(strategy="sharded", n_shards=n_shards)
-                   .orderBy("visit_rank").collect()]
-            assert got == base, f"{name} n_shards={n_shards}"
-            assert eng.timings["shard_sweeps"]
-
-
-def test_sharded_multiword_masks(spark, tmp_path):
-    """>64 shards forces the second bitmask word (W=2) in the shard
-    labeling BFS — t-smoke has 4 seeds, so this needs a synthetic web
-    with enough seeds. 80 shards over 80 seeds must reproduce the
-    single-word global sweep row-for-row."""
-    from crawler_spark.sources.synth_web import generate_bench_web
-
-    web = str(tmp_path / "web80")
-    generate_bench_web(web, 3000, n_hosts=20, n_seeds=80)
-    cfg = CrawlConfig(max_depth=3, rate_limit=10_000)
-    eng = FrontierEngine(spark, cfg, web, fresh_ckpt(str(tmp_path / "mw")))
-    eng.explore()
-    base = [_visit_tuple_engine(r) for r in
-            eng.resolve(strategy="skeleton")
-            .orderBy("visit_rank").collect()]
+def test_disjoint_trees_match_oracle(spark, tmp_path):
+    """Disjoint per-host trees — seed branches that share no page, so
+    every seed claims its whole branch — reproduce the sequential
+    oracle ROW-FOR-ROW including visit_rank, prio and batch_id."""
+    web = str(tmp_path / "disjoint-web")
+    n_tree = _write_disjoint_trees_fixture(web)
+    cfg = CrawlConfig(max_depth=4, rate_limit=10_000)
+    eng = FrontierEngine(spark, cfg, web,
+                         fresh_ckpt(str(tmp_path / "disjoint")))
     got = [_visit_tuple_engine(r) for r in
-           eng.resolve(strategy="sharded", n_shards=80)
-           .orderBy("visit_rank").collect()]
-    assert got == base
-    assert len(eng.timings["shard_sweeps"]) == 80
+           eng.run().orderBy("visit_rank").collect()]
+    exp = [_visit_tuple_oracle(v) for v in run_oracle(web, cfg).visits]
+    assert got == exp
+    assert len(got) == 4 * n_tree
 
 
 def test_resume_mid_crawl(spark, tmp_path):
@@ -408,10 +369,10 @@ def test_freeze_store_write_once_and_resume(spark, tmp_path):
 
 def test_resolve_timings_disjoint_per_call(spark, tmp_path):
     """Two consecutive resolve() calls on one engine must each report
-    their OWN step breakdown — no key carried over from the previous
-    strategy's run, and no accumulated seconds (the timing
-    double-count bug class ADVICE flagged in round 4). Each call's
-    numeric steps must sum to no more than that call's wall time."""
+    their OWN step breakdown — the same steps, and no accumulated
+    seconds (the timing double-count bug class ADVICE flagged in
+    round 4). Each call's numeric steps must sum to no more than that
+    call's wall time."""
     import time as _time
 
     cfg = CrawlConfig(max_depth=3)
@@ -419,24 +380,18 @@ def test_resolve_timings_disjoint_per_call(spark, tmp_path):
                          fresh_ckpt(str(tmp_path / "tmg")))
     eng.explore()
 
-    t0 = _time.time()
-    n1 = eng.resolve().count()
-    w1 = _time.time() - t0
-    s1 = dict(eng.timings)
+    runs = []
+    for _ in range(2):
+        t0 = _time.time()
+        n = eng.resolve().count()
+        runs.append((n, _time.time() - t0, dict(eng.timings)))
 
-    t0 = _time.time()
-    n2 = eng.resolve(strategy="sharded", n_shards=2).count()
-    w2 = _time.time() - t0
-    s2 = dict(eng.timings)
-
+    (n1, _, s1), (n2, _, s2) = runs
     assert n1 == n2
-    # skeleton-only steps must not leak into the sharded breakdown
-    assert "csr_pass" not in s2
-    # diagnostics that are not wall-seconds of the call
-    not_secs = {"sweep_impl", "shard_sweeps"}
-    for steps, wall in ((s1, w1), (s2, w2)):
+    assert s1.keys() == s2.keys()
+    for _, wall, steps in runs:
         tot = sum(v for k, v in steps.items()
-                  if k not in not_secs
+                  if k != "sweep_impl"
                   and isinstance(v, (int, float))
                   and not isinstance(v, bool))
         assert tot <= wall + 1.0, (tot, wall, steps)
@@ -445,9 +400,9 @@ def test_resolve_timings_disjoint_per_call(spark, tmp_path):
 def test_node_ceiling_fails_before_skeleton(spark, tmp_path, monkeypatch):
     """The sweep addresses nodes with int32 ids, so a node table of
     2^31 or more nodes must fail loudly — with NodeCeilingError naming
-    the ceiling — before any skeleton is written, for both resolve
-    strategies. The node table's parquet footers are made to report
-    2^31 extra rows each, so no such table has to exist."""
+    the ceiling — before any skeleton is written. The node table's
+    parquet footers are made to report 2^31 extra rows each, so no
+    such table has to exist."""
     import pyarrow.parquet as pq
 
     from crawler_spark.engine.frontier import MAX_NODES, NodeCeilingError
@@ -483,10 +438,34 @@ def test_node_ceiling_fails_before_skeleton(spark, tmp_path, monkeypatch):
             return getattr(self._pf, name)
 
     monkeypatch.setattr(pq, "ParquetFile", _InflatedFile)
-    for strategy in ("skeleton", "sharded"):
-        with pytest.raises(NodeCeilingError, match=r"2\^31"):
-            eng.resolve(strategy=strategy)
-        assert not os.path.exists(os.path.join(ck, "skeleton")), strategy
+    with pytest.raises(NodeCeilingError, match=r"2\^31"):
+        eng.resolve()
+    assert not os.path.exists(os.path.join(ck, "skeleton"))
+
+
+def test_skeleton_memory_guard_fails_before_sweep(spark, tmp_path,
+                                                  monkeypatch):
+    """A skeleton whose sweep needs more driver memory than the host
+    has available fails loudly — SkeletonMemoryError naming both byte
+    counts — after the skeleton is written and before it is read, so
+    no sweep runs and no claims are written."""
+    from crawler_spark.engine import frontier as fr
+
+    cfg = CrawlConfig(max_depth=3)
+    ck = fresh_ckpt(str(tmp_path / "memguard"))
+    eng = FrontierEngine(spark, cfg, FIXDIR, ck)
+    eng.explore()
+
+    monkeypatch.setattr(fr, "_mem_available", lambda: 1024)
+    with pytest.raises(fr.SkeletonMemoryError) as ei:
+        eng.resolve()
+    n_edges = sum(eng._footer_rows(os.path.join(ck, "skeleton")).values())
+    _, n_nodes = fr._node_offsets(os.path.join(ck, "nodes"))
+    need = fr._SWEEP_EDGE_BYTES * n_edges + fr._SWEEP_NODE_BYTES * n_nodes
+    assert n_edges > 0 and need > 1024
+    assert f"{need} bytes" in str(ei.value)
+    assert "1024 bytes" in str(ei.value)
+    assert not os.path.exists(os.path.join(ck, "claims"))
 
 
 def test_inloop_image_ingest_matches_oracle(spark, tmp_path):

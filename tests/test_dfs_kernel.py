@@ -99,21 +99,23 @@ def test_depth_cap_claims_but_does_not_expand():
     assert h.tolist() == [1, 2]  # 3 is beyond the depth cap
 
 
-def test_encode_ids_matches_searchsorted():
-    rng = np.random.default_rng(7)
-    table = np.unique(rng.integers(-(2**62), 2**62, 5000, dtype=np.int64))
-    keys = np.concatenate([
-        rng.choice(table, 200_000),                      # hits
-        rng.integers(-(2**62), 2**62, 200_000, dtype=np.int64),  # mostly miss
-        table[:1], table[-1:],                            # boundaries
-    ])
-    from crawler_spark.core.dfs_kernel import encode_ids
-    got = encode_ids(keys, table)
-    pos = np.minimum(np.searchsorted(table, keys), len(table) - 1)
-    exp = np.where(table[pos] == keys, pos, -1).astype(np.int32)
-    np.testing.assert_array_equal(got, exp)
-    assert encode_ids(keys[:0], table).shape == (0,)
-    assert (encode_ids(keys[:5], table[:0]) == -1).all()
+def test_kernel_allocation_failure_raises(monkeypatch):
+    """A C kernel that cannot allocate raises MemoryError instead of
+    falling back to the Python twin, which is ~50x slower and keeps a
+    dict entry per node — the worst path to take when memory is
+    short. None from sweep_c keeps meaning only "no C toolchain"."""
+    import crawler_spark.core.dfs_kernel as dk
+
+    class _FailingLib:
+        @staticmethod
+        def dfs_sweep_dense(*_args):
+            return -1
+
+    monkeypatch.setattr(dk, "_load_lib", lambda: _FailingLib)
+    c, i, up, b, s, nn = _random_skeleton(
+        np.random.default_rng(5), 40, 200, 3)
+    with pytest.raises(MemoryError, match="allocation failure"):
+        dk.sweep(c, i, up, b, s, nn, 3)
 
 
 def test_dead_edges_skipped():
@@ -153,37 +155,6 @@ def test_csr_runlength_matches_numpy():
     assert len(u0) == 0 and list(b0) == [0]
     # the C path must actually be exercised in this environment
     assert _load_lib() is not None
-
-
-@pytest.mark.parametrize("seed,n_chunks", [(11, 2), (12, 3), (13, 7)])
-def test_resume_sweep_matches_one_shot(seed, n_chunks):
-    """SweepState (seed-branch-sharded sweeps with claim state carried
-    across calls) concatenates to exactly the one-shot sweep — for
-    both the C kernel and the pure-Python twin — when the seed list is
-    split into chunks and every chunk sees the full edge set (the
-    shard subgraph is a superset of what its DFS traverses, so passing
-    the whole graph is the most conservative shard)."""
-    from crawler_spark.core.dfs_kernel import SweepState, sweep
-
-    rng = np.random.default_rng(seed)
-    c, i, up, b, s, nn = _random_skeleton(rng, 3000, 20000, 12)
-    ref = sweep(c, i, up, b, s, nn, 6)[:5]
-    for impl in ("c", "py"):
-        st = SweepState(nn)
-        if impl == "py":
-            st._lib = None
-            st.impl = "py"
-            st.claimed = {}
-        elif st.impl != "c":
-            pytest.skip("no C toolchain")
-        chunks = np.array_split(s, n_chunks)
-        parts = [st.sweep_shard(c, i, up, b, ch, 6)
-                 for ch in chunks if len(ch)]
-        n = sum(p[0] for p in parts)
-        assert n == ref[0]
-        for k in range(1, 5):
-            got = np.concatenate([p[k] for p in parts])
-            np.testing.assert_array_equal(got, ref[k], err_msg=f"{impl}:{k}")
 
 
 @pytest.mark.parametrize("seed", [3, 4, 5])

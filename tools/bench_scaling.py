@@ -39,8 +39,7 @@ ensure_bench_web()
 # steady-state benchmarking; both children prewarm identically.
 run_frontier_bench(spark, max_depth=6, pages=50_000, seeds=1024,
                    ingest_images={ingest})
-res = run_frontier_bench(spark, max_depth={depth}, also_sharded={sharded},
-                         ingest_images={ingest})
+res = run_frontier_bench(spark, max_depth={depth}, ingest_images={ingest})
 print("RESULT " + json.dumps(res))
 """
 
@@ -156,9 +155,8 @@ def run_calibration_decode(small: int, large: int) -> dict:
 
 
 def run_one(cores: int, depth: int, pages: int,
-            sharded: bool = True, ingest: bool = False) -> dict:
-    code = CHILD.format(repo=REPO, cores=cores, depth=depth,
-                        sharded=sharded, ingest=ingest)
+            ingest: bool = False) -> dict:
+    code = CHILD.format(repo=REPO, cores=cores, depth=depth, ingest=ingest)
     env = dict(os.environ, SPARK_GRAFT_BENCH_PAGES=str(pages))
     p = subprocess.run([sys.executable, "-c", code], capture_output=True,
                        text=True, cwd=REPO, check=False, env=env)
@@ -175,12 +173,6 @@ def main() -> None:
     ap.add_argument("--depth", type=int, default=8)
     ap.add_argument("--pages", type=int, default=1_000_000)
     ap.add_argument("--json", default="")
-    ap.add_argument("--sharded", action=argparse.BooleanOptionalAction,
-                    default=True,
-                    help="also time the seed-branch-sharded resolve in "
-                    "each child (--no-sharded skips it; the sharded "
-                    "pass is timed alongside and never enters the "
-                    "end-to-end efficiency numbers)")
     ap.add_argument("--ingest-images", action="store_true",
                     help="run the pair with in-loop image ingest ON "
                     "(decode/dedup/commit inside every round) and "
@@ -229,10 +221,10 @@ print("PREWARMED")
     cal_decode = (run_calibration_decode(args.small, args.large)
                   if args.ingest_images else None)
 
-    small_runs = [run_one(args.small, args.depth, args.pages, args.sharded,
+    small_runs = [run_one(args.small, args.depth, args.pages,
                           args.ingest_images)
                   for _ in range(args.repeat)]
-    large_runs = [run_one(args.large, args.depth, args.pages, args.sharded,
+    large_runs = [run_one(args.large, args.depth, args.pages,
                           args.ingest_images)
                   for _ in range(args.repeat)]
     small = min(small_runs, key=lambda r: r["sec"])
