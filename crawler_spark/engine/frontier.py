@@ -62,6 +62,9 @@ from ..sources.tables import SnapshotTable
 from .config import PRIO_WIDTH, CrawlConfig
 
 _HEX_W = PRIO_WIDTH
+# politeness salts per host: a host whose per-window cap covers all
+# salts is ranked in HOST_SALTS url-hash slices (mega-host skew)
+HOST_SALTS = 8
 
 
 def _hex_prio(idx_col):
@@ -314,18 +317,12 @@ class FrontierEngine:
     def __init__(self, spark: SparkSession, cfg: CrawlConfig,
                  fixture_dir: str, ckpt_dir: str,
                  enforce_politeness: bool = False,
-                 host_salts: int = 8,
-                 bucketed_web_dir: str | None = None,
-                 web_buckets: int = 64,
-                 bucket_join_min: int = 250_000,
-                 ingest_images: bool = False,
-                 bucketed_images_dir: str | None = None):
+                 ingest_images: bool = False):
         self.spark = spark
         self.cfg = cfg
         self.fixture_dir = fixture_dir
         self.ckpt = ckpt_dir
         self.enforce_politeness = enforce_politeness
-        self.host_salts = host_salts
         # freeze-and-cursor deferral store (politeness mode only):
         # deferred rows that can never be overtaken are written ONCE
         # and popped by cursor instead of re-ranked + rewritten every
@@ -339,10 +336,6 @@ class FrontierEngine:
         self.robots = spark.read.parquet(f"{fixture_dir}/robots.parquet")
         self.seeds_raw = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
         self.allowed_hosts = self._seed_hosts() if cfg.restrict_domains else []
-        self.bucket_join_min = bucket_join_min
-        self.web_table = (self._ensure_bucketed_web(bucketed_web_dir,
-                                                    web_buckets)
-                          if bucketed_web_dir else None)
         # snapshot tables over the checkpoint dirs (Iceberg-shaped
         # commit protocol, sources/tables.py): every micro-batch round
         # is committed as a fast-append snapshot with per-partition
@@ -361,18 +354,6 @@ class FrontierEngine:
             self.images_dim = spark.read.parquet(
                 f"{fixture_dir}/images.parquet").select(
                 "src", "image_id", "bytes", "w", "h", "fmt", "caption")
-            # big-round byte fetches join against a src-bucketed copy
-            # of the dim (the Iceberg bucket(N, src) analog) so ONLY
-            # the refs side shuffles — the plain join either
-            # sort-merge-shuffles the multi-GB byte dim every round or
-            # pays a serial driver-side broadcast build of multi-
-            # million-src ref sets (same failure modes the fetch join
-            # solved; see _ensure_bucketed_web)
-            self._images_dim_bucketed = (
-                self._ensure_bucketed_dim(bucketed_images_dir,
-                                          web_buckets)
-                if bucketed_images_dir else None)
-            self._img_buckets = web_buckets
             self.images_table = SnapshotTable(spark, self._paths("images"))
         self.timings: dict = {}
         # per-round plan pieces built ONCE: Column trees and slim
@@ -394,17 +375,11 @@ class FrontierEngine:
             from ..operators.html_parse import IMG_T, LINK_T
             link_dt, img_dt = LINK_T.elementType, IMG_T
             self._web_slim = self.web.select("url", "status_code", "html")
-            self._wt_slim = (self.web_table.select(
-                "url", "status_code", "html")
-                if self.web_table is not None else None)
         else:
             link_dt = self.web.schema["links"].dataType.elementType
             img_dt = self.web.schema["images"].dataType
             self._web_slim = self.web.select("url", "status_code", "title",
                                              "links", "images")
-            self._wt_slim = (self.web_table.select(
-                "url", "status_code", "title", "links", "images")
-                if self.web_table is not None else None)
         self._extract_plan = ExtractPlan(
             link_dt, self.robots, self.allowed_hosts, cfg)
         # explicit file schemas: skip per-read footer inference, which
@@ -437,62 +412,6 @@ class FrontierEngine:
                               link_dt["link_index"].dataType),
             types.StructField("child_url", types.StringType()),
             types.StructField("child_host", types.StringType())])
-
-    def _ensure_bucketed_web(self, path: str, buckets: int) -> DataFrame:
-        """Bucket+sort the static web by url ONCE (hash-bucketed table,
-        the Iceberg `bucket(N, url)` partition-transform analog). The
-        per-round fetch join then plans as a sort-merge join where only
-        the frontier side shuffles: no driver-side broadcast build —
-        which is serial and was the round bottleneck at multi-million-
-        row batches — and no re-sort of the web (buckets are written
-        sorted). One-time cost, amortized over every round and every
-        run sharing the cache dir."""
-        # key the catalog name on the bucketed path: two engines in one
-        # session with different fixture dirs must not silently share a
-        # bucketed web (same-name reuse fetched pages from the wrong web)
-        import hashlib
-
-        digest = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
-        name = f"web_bucketed_{digest}"
-        if self.spark.catalog.tableExists(name):
-            return self.spark.table(name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            (self.web.repartition(buckets, F.col("url"))
-             .write.mode("overwrite")
-             .bucketBy(buckets, "url").sortBy("url")
-             .option("path", path)
-             .saveAsTable(name))
-        else:  # data from a previous session: register it
-            ddl = self.web.schema.toDDL()
-            self.spark.sql(
-                f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY (url) SORTED BY (url) "
-                f"INTO {buckets} BUCKETS LOCATION '{path}'")
-        return self.spark.table(name)
-
-    def _ensure_bucketed_dim(self, path: str, buckets: int) -> DataFrame:
-        """Bucket+sort the images byte dim by src ONCE (same pattern
-        and rationale as _ensure_bucketed_web; shared cache dir,
-        path-keyed catalog name)."""
-        import hashlib
-
-        digest = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:12]
-        name = f"imgdim_bucketed_{digest}"
-        if self.spark.catalog.tableExists(name):
-            return self.spark.table(name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            (self.images_dim.repartition(buckets, F.col("src"))
-             .write.mode("overwrite")
-             .bucketBy(buckets, "src").sortBy("src")
-             .option("path", path)
-             .saveAsTable(name))
-        else:  # data from a previous session: register it
-            ddl = self.images_dim.schema.toDDL()
-            self.spark.sql(
-                f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY (src) SORTED BY (src) "
-                f"INTO {buckets} BUCKETS LOCATION '{path}'")
-        return self.spark.table(name)
 
     def _seen_history(self):
         """The admission history (committed frontier rounds) as a
@@ -625,7 +544,7 @@ class FrontierEngine:
                         "host", "crawl_delay_ms").collect()}
             self._host_caps_ = caps
         cap = caps.get(host, self.cfg.rate_limit)
-        return cap // self.host_salts if cap >= self.host_salts else cap
+        return cap // HOST_SALTS if cap >= HOST_SALTS else cap
 
     def _takes(self):
         """Per-(host, salt) cursor dim for this round's write: take =
@@ -788,12 +707,12 @@ class FrontierEngine:
             # whose cap covers all salts are split (budget divides
             # exactly, stays an upper bound); small-cap hosts rank
             # unsalted.
-            salt = (F.when(F.col("cap") >= self.host_salts,
+            salt = (F.when(F.col("cap") >= HOST_SALTS,
                            F.pmod(url_hash(F.col("url")),
-                                  F.lit(self.host_salts)))
+                                  F.lit(HOST_SALTS)))
                     .otherwise(F.lit(0)))
-            salt_cap = (F.when(F.col("cap") >= self.host_salts,
-                               (F.col("cap") / self.host_salts).cast("int"))
+            salt_cap = (F.when(F.col("cap") >= HOST_SALTS,
+                               (F.col("cap") / HOST_SALTS).cast("int"))
                         .otherwise(F.col("cap")))
             w = Window.partitionBy("host", "salt").orderBy("depth", "url")
             p = {
@@ -996,38 +915,22 @@ class FrontierEngine:
             # attempted-but-never-materialized URL to 404 (the
             # attempted set IS the union of frontier rounds, so no
             # separate attempted table is written).
-            # One web scan + one broadcast per round.
-            web_slim = self._web_slim
-            bsel = batch
-            # join strategy by batch size: small rounds broadcast the
-            # batch over the web scan (driver builds a small hash
-            # relation); big rounds against a bucketed web use a
-            # sort-merge join where ONLY the frontier side shuffles —
-            # the driver-side broadcast build is serial and became the
-            # round bottleneck at multi-million-row batches (measured:
-            # fetch step 14.5s at local[8] vs 7.8s at local[32] on a
-            # 6M-url round — barely scaling because the build doesn't).
-            # No cache on the join output: caching web rows (links
-            # arrays) thrashes the unified memory manager at high
-            # thread counts.
-            if self.web_table is not None and n_batch > self.bucket_join_min:
-                fetched = self._wt_slim.hint("merge").join(bsel, "url",
-                                                           "inner")
-            elif n_batch <= 1_500_000:
-                # small + tail rounds: broadcast the batch over the
-                # plain web scan. One plan SHAPE for every such round,
-                # so whole-stage codegen compiles once and is reused —
-                # a per-round IN-pushdown variant was tried and lost:
-                # each round's distinct url list forced a fresh InSet
-                # codegen + the bucketed-scan fixed cost (measured 6 s
-                # for a 1.7k-url tail round vs 0.7 s for this plan on a
-                # 90k round). On a real cluster the fetch is an HTTP
-                # mapInPandas over the batch (O(batch), no web scan) —
-                # the scan here is the sandbox stand-in's cost, and it
-                # is fully parallel.
-                fetched = web_slim.join(F.broadcast(bsel), "url")
+            # Join strategy by batch size. Rounds up to 1.5M urls
+            # broadcast the batch over the web scan: one plan SHAPE for
+            # every such round, so whole-stage codegen compiles once
+            # and is reused (a per-round IN-pushdown variant lost: each
+            # round's url list forced a fresh InSet codegen). Bigger
+            # rounds use a plain AQE-planned join, since the driver-
+            # side broadcast build is serial. On a real cluster the
+            # fetch is an HTTP mapInPandas over the batch (O(batch), no
+            # web scan); the scan is the sandbox stand-in's cost, and
+            # it is fully parallel. No cache on the join output:
+            # caching web rows (links arrays) thrashes the unified
+            # memory manager.
+            if n_batch <= 1_500_000:
+                fetched = self._web_slim.join(F.broadcast(batch), "url")
             else:
-                fetched = bsel.join(web_slim, "url", "inner")
+                fetched = batch.join(self._web_slim, "url", "inner")
             if self.parse_from_html:
                 # E1 in the loop: derive title/links/images from the
                 # raw markup payload — narrow Arrow-batched stage, the
@@ -1044,7 +947,7 @@ class FrontierEngine:
             # (kind=edge) in a single write — no materialize+re-read
             # of the links arrays, one Spark job instead of two.
             # Parallelism comes from the join output's partitioning
-            # (scan splits / buckets / shuffle partitions), so the
+            # (scan splits / shuffle partitions), so the
             # explode+canonicalize hot stage fans out to every core.
             # Admission (scheme/domain/robots on the child url) is
             # fused in (broadcast robots join + native predicates, no
@@ -1071,7 +974,7 @@ class FrontierEngine:
             tick("fetch_extract")
             img_metrics = {}
             if self.ingest_images:
-                img_metrics = self._ingest_images(rnd, n_batch)
+                img_metrics = self._ingest_images(rnd)
                 tick("images")
 
             # candidate admission for the NEXT frontier (BFS depth
@@ -1254,14 +1157,16 @@ class FrontierEngine:
          .withColumn("mono", F.monotonically_increasing_id())
          .write.mode("overwrite").parquet(nodes_path))
         offs, n_nodes = _node_offsets(nodes_path)
-        off_df = self.spark.createDataFrame(
-            list(offs.items()) or [(0, 0)], "pid int, off long")
+        # the per-pid offsets (≤ npart entries) ride in the plan as a
+        # literal map, so the consumers of nodes_id start no Python
+        # workers (a DataFrame built from a Python list is a pickled
+        # RDD, read by a Python worker in every job that scans it)
+        off_map = F.create_map(*[
+            F.lit(v).cast(t) for pid, off in sorted(offs.items()) or [(0, 0)]
+            for v, t in ((pid, "int"), (off, "long"))])
+        off = off_map[F.shiftrightunsigned("mono", 33).cast("int")]
         nodes_id = (self.spark.read.parquet(nodes_path)
-                    .withColumn("pid", F.shiftrightunsigned("mono", 33)
-                                .cast("int"))
-                    .join(F.broadcast(off_df), "pid")
-                    .select("h", (F.col("off")
-                                  + F.col("mono").bitwiseAND(_MONO_MASK))
+                    .select("h", (off + F.col("mono").bitwiseAND(_MONO_MASK))
                             .cast("int").alias("id")))
         self.timings["nodes_write"] = round(time.time() - t0, 2)
         t0 = time.time()
@@ -1537,7 +1442,7 @@ class FrontierEngine:
         types.StructField("phash", types.LongType()),
         types.StructField("valid", types.BooleanType())])
 
-    def _ingest_images(self, rnd: int, n_batch: int = 0) -> dict:
+    def _ingest_images(self, rnd: int) -> dict:
         """In-loop image ingest for round ``rnd`` (north-star core:
         "fetched image bytes are decoded/validated via vectorized
         pandas/Arrow UDFs with phash dedup" inside the micro-batch
@@ -1589,20 +1494,9 @@ class FrontierEngine:
                                for m in prior])
                     .select("src"))
             refs = refs.join(seen, "src", "left_anti")
-        # byte fetch — join strategy by round size, mirroring the page
-        # fetch: big rounds merge-join the src-bucketed dim (only the
-        # refs side shuffles; no serial driver broadcast build of a
-        # multi-million-src set, no re-shuffle of the multi-GB byte
-        # dim); small + tail rounds broadcast the refs over the plain
-        # dim scan (one compiled plan shape reused every such round)
-        npart = max(self.spark.sparkContext.defaultParallelism, 4)
-        merge_path = (self._images_dim_bucketed is not None
-                      and n_batch > self.bucket_join_min)
-        if merge_path:
-            fetched = self._images_dim_bucketed.hint("merge").join(
-                refs, "src")
-        else:
-            fetched = self.images_dim.join(F.broadcast(refs), "src")
+        # byte fetch: broadcast the round's new refs over the dim scan
+        # (one compiled plan shape reused every round)
+        fetched = self.images_dim.join(F.broadcast(refs), "src")
 
         def dec(it):
             from ..core.imaging import decode_image, phash64
@@ -1625,24 +1519,13 @@ class FrontierEngine:
                     "phash": pd.Series(ph, dtype="int64"),
                     "valid": pd.Series(ok, dtype="bool")})
 
-        # decode fan-out. Broadcast path (small/tail rounds): the join
-        # output inherits the dim SCAN's split count (a handful of
-        # tasks) — without an explicit repartition the Arrow decode
-        # stage ran on 2-3 cores at any core count (measured 1.4k
-        # img/s at local[32] vs the decoder's ~4.9k img/s/core); the
-        # shuffle moves only the NEW srcs' bytes and those rounds are
-        # small. Merge path (big rounds): the bucketed join output is
-        # ALREADY hash-partitioned by src into `web_buckets`
-        # partitions — repartitioning it re-shuffled every fetched
-        # byte of the round's multi-GB image payload a second time
-        # for zero balance gain (src is hash-bucketed, so the buckets
-        # are even); decode straight on the join output whenever the
-        # bucket fan-out covers the cores.
-        if merge_path and self._img_buckets >= npart:
-            out = fetched.mapInPandas(dec, self._IMG_INGEST_SCHEMA)
-        else:
-            out = (fetched.repartition(npart)
-                   .mapInPandas(dec, self._IMG_INGEST_SCHEMA))
+        # decode fan-out: the join output inherits the dim SCAN's
+        # split count (a handful of tasks), so without the repartition
+        # the Arrow decode stage runs on 2-3 cores at any core count;
+        # the shuffle moves only the round's NEW srcs' bytes
+        npart = max(self.spark.sparkContext.defaultParallelism, 4)
+        out = (fetched.repartition(npart)
+               .mapInPandas(dec, self._IMG_INGEST_SCHEMA))
         (out.write.mode("overwrite").partitionBy("valid")
          .parquet(self._paths("images", rnd)))
         counts = self._footer_rows(self._paths("images", rnd))

@@ -190,23 +190,11 @@ def minhash_dedup(docs: DataFrame, threshold: float = 0.5,
 
 def embedding_dedup(emb: DataFrame, threshold: float = 0.95,
                     id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    exact: bool = True) -> DataFrame:
+                    vec_col: str = "embedding") -> DataFrame:
     """Embedding-cosine near-dup dedup: pairs with cosine ≥ threshold
-    (exact block-partitioned BLAS by default; LSH-bucketed when
-    exact=False trades recall for sub-quadratic compute) → connected
-    components → canonical vector per cluster."""
-    from .similarity import cosine_pairs, lsh_bucketed_neighbors
+    (exact block-partitioned BLAS) → connected components → canonical
+    vector per cluster."""
+    from .similarity import cosine_pairs
 
-    if exact:
-        pairs = cosine_pairs(emb, threshold, id_col, vec_col)
-    else:
-        nn = lsh_bucketed_neighbors(emb, k=10, id_col=id_col,
-                                    vec_col=vec_col,
-                                    dim=len(emb.select(vec_col)
-                                            .first()[0]))
-        pairs = (nn.filter(F.col("cos_e4") >= int(threshold * 10_000))
-                 .select(F.least("qid", "nid").alias("id_a"),
-                         F.greatest("qid", "nid").alias("id_b"))
-                 .distinct())
+    pairs = cosine_pairs(emb, threshold, id_col, vec_col)
     return assign_canonical(emb, pairs, id_col)

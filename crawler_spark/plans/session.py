@@ -92,11 +92,6 @@ def get_spark(app: str = "crawler_spark", cores: int | None = None,
         # maxResultSize kills it long before driver memory is at risk
         .config("spark.driver.maxResultSize", "16g")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # bucketed web fetch: the buckets are written sorted by url
-        # (one file per bucket); without this flag Spark ignores the
-        # sortBy metadata and re-sorts the whole web side on every
-        # round's sort-merge fetch join
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -45,9 +45,9 @@ def run_corpus(spark, docs_path: str, out: str,
                minhash_threshold: float = 0.5,
                cosine_threshold: float = 0.95, max_hamming: int = 10,
                min_quality: int = 0) -> dict:
-    """The pipeline body, importable so bench.py can time it in the
-    same session (a `corpus` regression number per round) — stats
-    dict identical to the CLI's stdout line."""
+    """The pipeline body, importable so a caller (perfbench's
+    corpus_dedup workload, tests/test_corpus_job.py) can run it in its
+    own session — stats dict identical to the CLI's stdout line."""
     from pyspark.sql import functions as F
 
     from crawler_spark.operators.cluster import (embedding_dedup,
@@ -64,9 +64,11 @@ def run_corpus(spark, docs_path: str, out: str,
         every scan-rooted stage a single task at any core count
         (measured: identical corpus walls at 8 and 32 cores). One
         up-front round-robin repartition restores parallelism for the
-        whole chain; real multi-file corpora skip it."""
+        whole chain; a scan with fewer splits than cores (e.g. 2
+        uneven row groups on 4 cores) gets it too, while multi-file
+        corpora skip it."""
         par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < max(2, par // 2):
+        if df.rdd.getNumPartitions() < par:
             return df.repartition(par)
         return df
 

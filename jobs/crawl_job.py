@@ -65,10 +65,6 @@ def main() -> None:
                          "fetch/dedup metrics); emits the final "
                          "claims-narrowed images/ + image_captions/ "
                          "tables under --out")
-    ap.add_argument("--bucketed-images-dir", default=None,
-                    help="src-bucketed cache of the images byte dim "
-                         "(built once; big rounds then merge-join it "
-                         "so only the refs side shuffles)")
     ap.add_argument("--compact", action="store_true",
                     help="post-crawl table maintenance: compact the "
                          "per-round fast-append crawl/frontier tables "
@@ -101,8 +97,7 @@ def main() -> None:
                       custom_headers=tuple(args.header))
     eng = FrontierEngine(spark, cfg, args.web, args.ckpt,
                          enforce_politeness=args.politeness,
-                         ingest_images=args.ingest_images,
-                         bucketed_images_dir=args.bucketed_images_dir)
+                         ingest_images=args.ingest_images)
     t0 = time.time()
     visits = eng.run()
     visits.write.mode("overwrite").parquet(os.path.join(args.out, "visits"))

@@ -539,30 +539,6 @@ def test_inloop_image_ingest_matches_oracle(spark, tmp_path):
     assert caps == first
 
 
-def test_image_ingest_bucketed_dim_identity(spark, tmp_path):
-    """The src-bucketed byte-dim fetch path (big rounds merge-join the
-    bucketed dim so only the refs side shuffles) must produce an
-    images table identical to the plain broadcast-refs join.
-    bucket_join_min=0 forces every round through the merge path."""
-    cfg = CrawlConfig(max_depth=3)
-    outs = []
-    for bdir in (None, str(tmp_path / "imgbucket")):
-        ck = fresh_ckpt(str(tmp_path / f"bk_{bdir is not None}"))
-        eng = FrontierEngine(spark, cfg, FIXDIR, ck,
-                             ingest_images=True,
-                             bucketed_images_dir=bdir,
-                             bucket_join_min=0 if bdir else 250_000)
-        eng.run()
-        rows = (eng.images_table.read(with_partition_columns=True)
-                .selectExpr("src", "round", "phash", "valid",
-                            "xxhash64(bytes) as bh")
-                .collect())
-        outs.append(sorted((r["src"], r["round"], r["phash"],
-                            r["valid"], r["bh"]) for r in rows))
-    assert outs[0] == outs[1]
-    assert len(outs[0]) > 0
-
-
 def test_image_ingest_resume_identity(spark, tmp_path):
     """Image-ingest resume: kill after 2 rounds, resume in a fresh
     engine → the images table (which src was ingested in which round,

@@ -4,10 +4,9 @@ The golden tests (tests/test_crawl_golden.py) pin the Spark engine
 row-for-row against the sequential oracle simulator at fixture scale
 (~10^2..10^3 pages).  This tool runs the SAME comparison on the bench
 synthetic web at 10^6 pages — the largest size the pure-Python
-simulator can replay in minutes — using the exact bench configuration
-(max_depth=8, politeness ON, bucketed-web fetch join), so the scaling
-numbers in BENCH_scaling.json are backed by a full-order correctness
-check one decade past the test fixtures:
+simulator can replay in minutes — using the bench configuration
+(max_depth=8, politeness ON), a full-order correctness check one
+decade past the test fixtures:
 
   * visit order, url, url_hash, host, depth, parent_url, link_index,
     priority vector, status_code and politeness batch_id must match
@@ -36,10 +35,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from crawler_spark.sources.synth_web import generate_bench_web  # noqa: E402
+
+
+def ensure_bench_web(pages: int, seeds: int) -> str:
+    """Generate (once, cached under /tmp) the synthetic bench web:
+    1000 hosts, one mega-host with ~30% of the pages."""
+    web_dir = f"/tmp/crawler_spark_bench/web-{pages}-s{seeds}"
+    if not all(os.path.exists(os.path.join(web_dir, f))
+               for f in ("web_pages.parquet", "images.parquet")):
+        print(f"# generating bench web ({pages} pages)…", file=sys.stderr)
+        print(f"# {generate_bench_web(web_dir, pages, n_seeds=seeds)}",
+              file=sys.stderr)
+    return web_dir
+
 
 def engine_visits(pages: int, seeds: int, depth: int, cores: int,
                   ingest: bool = False):
-    from bench import ensure_bench_web
     from crawler_spark.engine.config import CrawlConfig
     from crawler_spark.engine.frontier import FrontierEngine, fresh_ckpt
     from crawler_spark.plans.session import get_spark
@@ -54,8 +66,6 @@ def engine_visits(pages: int, seeds: int, depth: int, cores: int,
     eng = FrontierEngine(spark, cfg, web,
                          fresh_ckpt(os.path.join(ck_base, "ckpt_simcheck")),
                          enforce_politeness=True,
-                         bucketed_web_dir=web.rstrip("/") + "-bucketed64",
-                         web_buckets=64,
                          ingest_images=ingest)
     visits = eng.run()
     rows = visits.orderBy("visit_rank").collect()
