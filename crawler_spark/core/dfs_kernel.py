@@ -34,7 +34,13 @@ back silently otherwise. A C kernel that cannot allocate its state
 raises MemoryError: falling back to the ~50x slower, dict-per-node
 Python twin exactly when memory is short would only fail later.
 
-Inputs (all numpy, C-contiguous):
+The same kernel library holds the union-find that labels connected
+components for near-duplicate clustering (operators/cluster.py):
+``components_c`` in C and ``components_py`` in Python, pinned equal in
+the unit tests; its C side also raises MemoryError when it cannot
+allocate.
+
+Sweep inputs (all numpy, C-contiguous):
   c_sorted  int32[n_edges]  child node-id, grouped by parent with each
                             parent's children in link order; -1 marks
                             a child outside the node table (dead edge
@@ -124,6 +130,37 @@ int64_t dfs_sweep_dense(
     }
     free(csr_of); free(claimed); free(st);
     return n_out;
+}
+
+/* Connected components of a dense-id pair list by union-find:
+   union toward the smaller root, path halving. Every root is the
+   smallest id of its set, so out_root[i] is the minimum id of i's
+   component (i itself for a node in no pair). Returns 0, or -1 on
+   allocation failure. */
+static int32_t uf_find(int32_t *up, int32_t x)
+{
+    while (up[x] != x) {
+        up[x] = up[up[x]];
+        x = up[x];
+    }
+    return x;
+}
+
+int64_t uf_components(int64_t n_pairs, const int32_t *a, const int32_t *b,
+                      int64_t n_nodes, int32_t *out_root)
+{
+    int32_t *up = (int32_t *)malloc((size_t)n_nodes * 4 + 4);
+    if (!up) return -1;
+    for (int64_t i = 0; i < n_nodes; i++) up[i] = (int32_t)i;
+    for (int64_t k = 0; k < n_pairs; k++) {
+        int32_t ra = uf_find(up, a[k]), rb = uf_find(up, b[k]);
+        if (ra < rb) up[rb] = ra;
+        else if (rb < ra) up[ra] = rb;
+    }
+    for (int64_t i = 0; i < n_nodes; i++)
+        out_root[i] = uf_find(up, (int32_t)i);
+    free(up);
+    return 0;
 }
 
 /* CSR run-length boundaries over a parent-contiguous id column: one
@@ -244,6 +281,9 @@ def _load_lib():
         lib.emit_prios.restype = ctypes.c_int64
         lib.emit_prios.argtypes = [ctypes.c_int64, i64p, i32p,
                                    ctypes.c_int64, u8p, i32p, i64p, u8p]
+        lib.uf_components.restype = ctypes.c_int64
+        lib.uf_components.argtypes = [ctypes.c_int64, i32p, i32p,
+                                      ctypes.c_int64, i32p]
         _lib = lib
     except Exception:  # noqa: BLE001 — no cc / sandboxed: fall back
         _lib = None
@@ -328,6 +368,58 @@ def sweep_py(c_sorted, i_sorted, uniq_p, starts, seeds, n_nodes, max_depth):
     n = len(out_id)
     return (n, np.array(out_id, np.int32), np.array(out_depth, np.int32),
             np.array(out_parent, np.int64), np.array(out_li, np.int32))
+
+
+def components_c(a, b, n_nodes):
+    """The C union-find: int32[n_nodes], each id's component minimum.
+    None only when no C toolchain exists; raises MemoryError when the
+    kernel cannot allocate its parent array."""
+    lib = _load_lib()
+    if lib is None:
+        return None
+    i32p = ctypes.POINTER(ctypes.c_int32)
+    a = np.ascontiguousarray(a, np.int32)
+    b = np.ascontiguousarray(b, np.int32)
+    if len(a) != len(b) or len(a) and (
+            min(a.min(), b.min()) < 0 or max(a.max(), b.max()) >= n_nodes):
+        raise ValueError("uf_components: pair ids must be two equal-length "
+                         "arrays of ids in 0..n_nodes-1")
+    out = np.empty(int(n_nodes), np.int32)
+    if lib.uf_components(len(a), a.ctypes.data_as(i32p),
+                         b.ctypes.data_as(i32p), int(n_nodes),
+                         out.ctypes.data_as(i32p)) < 0:
+        raise MemoryError(
+            f"uf_components: allocation failure labelling {len(a)} "
+            f"pairs over {int(n_nodes)} nodes")
+    return out
+
+
+def components_py(a, b, n_nodes):
+    """Pure-Python twin of components_c — identical contract, used as
+    the fallback and as the oracle for the kernel-parity unit test."""
+    up = list(range(int(n_nodes)))
+
+    def find(x):
+        while up[x] != x:
+            up[x] = up[up[x]]
+            x = up[x]
+        return x
+
+    for x, y in zip(np.asarray(a).tolist(), np.asarray(b).tolist()):
+        rx, ry = find(x), find(y)
+        if rx < ry:
+            up[ry] = rx
+        elif ry < rx:
+            up[rx] = ry
+    return np.array([find(i) for i in range(int(n_nodes))], np.int32)
+
+
+def components(a, b, n_nodes):
+    """Component minimum of every dense id 0..n_nodes-1 under the
+    undirected pairs (a[k], b[k]): C when a toolchain exists, Python
+    otherwise."""
+    res = components_c(a, b, n_nodes)
+    return res if res is not None else components_py(a, b, n_nodes)
 
 
 def csr_runlength(p):

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types
 
+from ..core.skeleton import _footer_rows, _read_parquet_dir, check_fits
 from ..functions.urls import canonicalize_url, url_hash, url_host, url_path
 from ..sources.tables import SnapshotTable
 from .config import PRIO_WIDTH, CrawlConfig
@@ -70,28 +71,6 @@ HOST_SALTS = 8
 def _hex_prio(idx_col):
     """Fixed-width lowercase hex of an int column (prio component)."""
     return F.lpad(F.lower(F.hex(idx_col)), _HEX_W, "0")
-
-
-def _read_parquet_dir(path: str, empty_schema):
-    """Thread-pooled pyarrow read of a parquet dir (ctypes/pyarrow
-    release the GIL, so the read scales with cores — a single-stream
-    driver toPandas() collect here was 61 s of the committed 32-core
-    bench). Explicit in-order concat: skeleton parts are
-    parent-hash-partitioned (each parent contiguous and link-sorted —
-    all the CSR pass needs); node rows carry their id explicitly, so
-    their order is irrelevant."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from concurrent.futures import ThreadPoolExecutor
-
-    files = sorted(
-        os.path.join(path, f) for f in os.listdir(path)
-        if f.endswith(".parquet"))
-    if not files:
-        return pa.table(empty_schema)
-    with ThreadPoolExecutor(min(16, len(files))) as ex:
-        parts = list(ex.map(pq.read_table, files))
-    return pa.concat_tables(parts)
 
 
 _MONO_MASK = (1 << 33) - 1  # monotonically_increasing_id ordinal bits
@@ -142,10 +121,6 @@ def _node_offsets(path: str) -> tuple[dict[int, int], int]:
     return offs, acc
 
 
-class SkeletonMemoryError(MemoryError):
-    """The resolve sweep would need more driver memory than is free."""
-
-
 # Driver bytes of the resolve sweep (_resolve_skeleton and the C
 # kernel in core/dfs_kernel.py), summed over every allocation — not all
 # are live at once, so this bounds the peak from above. Per edge: the
@@ -157,33 +132,6 @@ class SkeletonMemoryError(MemoryError):
 # count (4 + 4 + 8 + 4) and its claimed bitmap (1 bit, counted as 1).
 _SWEEP_EDGE_BYTES = 12 + 12 + 12 + 24
 _SWEEP_NODE_BYTES = 4 + 8 + 4 + (4 + 4 + 8 + 4) + 1
-
-
-def _mem_available() -> int | None:
-    """MemAvailable from /proc/meminfo in bytes; None when unreadable."""
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    return int(line.split()[1]) * 1024
-    except (OSError, ValueError, IndexError):
-        pass
-    return None
-
-
-def _check_sweep_fits(n_edges: int, n_nodes: int) -> None:
-    """Raise SkeletonMemoryError when the sweep's driver bytes exceed
-    the host's available memory — before the skeleton is read, so an
-    oversized skeleton fails by name instead of by OOM. The skeleton
-    is read with pyarrow, not collected through Spark, so
-    spark.driver.maxResultSize does not bound it."""
-    avail = _mem_available()
-    need = _SWEEP_EDGE_BYTES * n_edges + _SWEEP_NODE_BYTES * n_nodes
-    if avail is not None and need > avail:
-        raise SkeletonMemoryError(
-            f"resolve sweep of {n_edges} edges over {n_nodes} nodes needs "
-            f"about {need} bytes of driver memory, but only {avail} bytes "
-            f"are available (MemAvailable)")
 
 
 # ---------------------------------------------------------------------------
@@ -448,23 +396,6 @@ class FrontierEngine:
         if rnd is None:
             return os.path.join(self.ckpt, name)
         return os.path.join(self.ckpt, name, f"round={rnd:05d}")
-
-    @staticmethod
-    def _footer_rows(path: str) -> dict[str, int]:
-        """Per-file row counts from parquet footers (driver-side, no
-        Spark job): the written files ARE the partitions, so this is
-        the per-partition lineage for free. Recursive (frontier rounds
-        are partitioned by `sel`)."""
-        import pyarrow.parquet as pq
-
-        out: dict[str, int] = {}
-        for root, _dirs, files in sorted(os.walk(path)):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(root, f), path)
-                    out[rel] = pq.ParquetFile(
-                        os.path.join(root, f)).metadata.num_rows
-        return out
 
     @staticmethod
     def _footer_min_depth(path: str) -> int | None:
@@ -818,7 +749,7 @@ class FrontierEngine:
                                   F.lit("b").alias("sel"))
         (out.write.mode("overwrite").partitionBy("sel")
          .parquet(self._paths("frontier", rnd)))
-        counts = self._footer_rows(self._paths("frontier", rnd))
+        counts = _footer_rows(self._paths("frontier", rnd))
         self._round_freeze = {
             "frozen": sum(v for k, v in counts.items()
                           if k.startswith("sel=f")),
@@ -839,7 +770,7 @@ class FrontierEngine:
         base = self._paths("frontier", rnd)
         bdir = os.path.join(base, "sel=b")
         ddir = os.path.join(base, "sel=d")
-        n_batch = (sum(self._footer_rows(bdir).values())
+        n_batch = (sum(_footer_rows(bdir).values())
                    if os.path.isdir(bdir) else 0)
         rd = self.spark.read.schema(self._frontier_schema)
         batch = (rd.parquet(bdir) if n_batch
@@ -961,7 +892,7 @@ class FrontierEngine:
             # commit the crawl round BEFORE the next frontier round:
             # resume replays any round whose frontier commit is
             # missing, so the crawl commit must never lag it
-            crawl_counts = self._footer_rows(self._paths("crawl", rnd))
+            crawl_counts = _footer_rows(self._paths("crawl", rnd))
             self.crawl_table.commit_dir(f"round={rnd:05d}", "round",
                                         crawl_counts,
                                         extra={"round": rnd})
@@ -1199,8 +1130,9 @@ class FrontierEngine:
             .write.mode("overwrite").parquet(skel_path))
         self.timings["skeleton_write"] = round(time.time() - t0, 2)
         t0 = time.time()
-        _check_sweep_fits(sum(self._footer_rows(skel_path).values()),
-                          n_nodes)
+        n_edges = sum(_footer_rows(skel_path).values())
+        check_fits(_SWEEP_EDGE_BYTES * n_edges + _SWEEP_NODE_BYTES * n_nodes,
+                   f"resolve sweep of {n_edges} edges over {n_nodes} nodes")
         import pyarrow as pa
 
         skel_t = _read_parquet_dir(
@@ -1528,7 +1460,7 @@ class FrontierEngine:
                .mapInPandas(dec, self._IMG_INGEST_SCHEMA))
         (out.write.mode("overwrite").partitionBy("valid")
          .parquet(self._paths("images", rnd)))
-        counts = self._footer_rows(self._paths("images", rnd))
+        counts = _footer_rows(self._paths("images", rnd))
         self.images_table.commit_dir(f"round={rnd:05d}", "round", counts,
                                      extra={"round": rnd})
         return {"images_new": sum(counts.values()),

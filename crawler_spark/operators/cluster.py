@@ -9,14 +9,16 @@ reference's only dedup is the keyed screenshot window
 "canonical" capture per (component, reason, selector) per window);
 this generalizes it to content-based duplicate graphs of any size.
 
-Algorithm: iterative min-label propagation (each node repeatedly takes
-the smallest label among itself and its neighbours) — the standard
-large-scale connected-components formulation. Convergence is bounded
-by the largest component DIAMETER, not size; near-dup components are
-dense and shallow (a hub duplicate links most members directly), so a
-handful of rounds converge even at 10^10 docs. Each round is one
-shuffle-join + one aggregate over the edge list; `localCheckpoint`
-truncates the lineage so round N's plan doesn't embed rounds 1..N-1.
+Algorithm: the expensive pair join stays distributed upstream; the
+pair list is a compact skeleton (two ids per pair, far fewer pairs
+than items), so it is labelled in ONE driver pass, the way the engine
+resolves its crawl skeleton (core/skeleton.py): Spark writes the
+pairs as parquet, the driver dense-encodes the ids in sorted order
+and runs a union-find (core/dfs_kernel.py, C with a Python twin) that
+labels every id with its component's minimum, and the labels return
+to Spark through one parquet file. Union-find finishes in one pass
+over the pairs whatever the component diameters, so there are no
+rounds to bound.
 """
 
 from __future__ import annotations
@@ -26,23 +28,42 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Driver bytes per pair of the label pass for 8-byte ids, summed over
+# its allocations: the Arrow read (16), the two numpy copies (16) and
+# their concatenation (16); np.unique's flattened copy, argsort
+# permutation, sorted copy, mask, cumsum and inverse (16 + 16 + 16 +
+# 2 + 16 + 16); the int32 dense pairs (8); the kernel's parent array
+# and output over at most two ids per pair (8 + 8); the labels and
+# their Arrow copies (32 + 32). A string id also holds one Python str
+# object per value (to_numpy) — counted at 80 bytes, an id of up to
+# 31 ASCII characters.
+_CC_PAIR_BYTES = 16 + 16 + 16 + (16 + 16 + 16 + 2 + 16 + 16) + 8 + 16 + 64
+_CC_STR_PAIR_BYTES = 2 * 80
 
-def _footer_rows(local_dir: str) -> int:
-    """Total row count of a local parquet dir from file footers only
-    (zero Spark jobs). A missing dir is an empty partition (0 rows) —
-    partitionBy skips partitions with no rows."""
-    import glob
 
-    import pyarrow.parquet as pq
+def _min_labels(a, b):
+    """(ids, canonical ids) over the ids of the undirected pairs
+    (a[k], b[k]), two numpy arrays of one id type (numbers or str):
+    each id labelled with its component's minimum. The order-preserving
+    unique maps ids to dense int32 ranks, so the smallest dense id of
+    a component is its smallest original id — Spark's min, for numbers
+    and for strings (code-point order equals UTF-8 byte order)."""
+    import numpy as np
 
-    return sum(pq.ParquetFile(f).metadata.num_rows
-               for f in glob.glob(os.path.join(local_dir, "*.parquet")))
+    from ..core.dfs_kernel import components
+
+    uniq, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    if len(uniq) >= 1 << 31:
+        raise ValueError(f"connected_components: {len(uniq)} ids exceed "
+                         f"the union-find's int32 ids")
+    inv = inv.astype(np.int32)
+    root = components(inv[:len(a)], inv[len(a):], len(uniq))
+    return uniq, uniq[root]
 
 
 def connected_components(ids: DataFrame, pairs: DataFrame,
                          id_col: str,
                          src: str = "id_a", dst: str = "id_b",
-                         max_iters: int = 16,
                          work_dir: str | None = None) -> DataFrame:
     """Label every id with its component's minimum id.
 
@@ -51,111 +72,56 @@ def connected_components(ids: DataFrame, pairs: DataFrame,
     pairs: undirected edges (src, dst) — any extra columns ignored.
 
     Returns (id_col, canonical_id). Deterministic under any
-    partitioning: min is order-independent.
+    partitioning: the labels depend only on the pair set.
 
-    Each round is edge-relax (take the min label over direct
-    neighbours) + POINTER JUMP (label ← label(label), valid because a
-    label is always an existing node id): the jump compresses label
-    chains, cutting rounds ~4× on chain-shaped components (measured:
-    a 226-node snake converges in 36 rounds vs ~150 for plain
-    propagation, which silently returned NON-converged labels past
-    max_iters — caught by tests/test_property_random.py). At a fixed
-    point, edge-relax unchanged ⇒ adjacent nodes agree ⇒ labels are
-    uniform per component and equal to its min id; past max_iters
-    this RAISES rather than returning wrong labels.
-
-    Each round's labels cross a parquet write/read barrier (same
-    per-round pattern as the engine's frontier loop), NOT
-    localCheckpoint: Spark 4.1 self-joins chained through
-    local/reliable checkpoints leak driver-side work that DOUBLES per
-    generation (measured 0.3 s/round flat with the barrier vs 0.16 →
-    36 s by round 19 with checkpoints — repro in the test module's
-    history), while the barrier keeps every round constant-cost."""
+    The pairs are written under `work_dir` (a fresh temp dir inside
+    it; the system temp dir by default), read on the driver after the
+    footer row count passes the SkeletonMemoryError guard, labelled by
+    _min_labels and written back as one parquet file. The labels are
+    left-joined onto `ids` (an id in no pair labels itself) and the
+    result is detached with localCheckpoint before the temp dir is
+    removed. On a multi-executor cluster `work_dir` must be shared
+    storage the driver can also read as a local path — the same
+    requirement as the engine's checkpoint dir."""
     import shutil
     import tempfile
 
-    spark = ids.sparkSession
-    # work_dir: where the per-round label tables land. The local
-    # tempdir default is correct for local[k]; on a multi-executor
-    # cluster pass a SHARED path (HDFS/S3/NFS) — the same requirement
-    # as the engine's checkpoint dir.
-    # edges are hash-partitioned on dst ONCE before the checkpoint
-    # (LogicalRDD keeps the output partitioning), so every round's
-    # probe join re-exchanges only the label side, never the edge
-    # list — the larger relation at scale. Edges are static (no
-    # chained self-join), so localCheckpoint is safe here.
-    edges = (pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-             .unionByName(pairs.select(F.col(dst).alias("src"),
-                                       F.col(src).alias("dst")))
-             .repartition("dst")
-             .localCheckpoint())
-    labels = ids.select(F.col(id_col).alias("src"),
-                        F.col(id_col).alias("label"))
-    # local-mode default rides tmpfs when present (the round tables
-    # are written and re-read immediately; same choice as the bench
-    # checkpoint) — cluster callers pass shared storage instead
-    tmp = work_dir or tempfile.mkdtemp(
-        prefix="crawler_spark_cc_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None)
-    os.makedirs(tmp, exist_ok=True)
-    def _relax(lbl: DataFrame) -> DataFrame:
-        neigh = (edges.join(lbl.select(F.col("src").alias("dst"), "label"),
-                            "dst")
-                 .groupBy("src").agg(F.min("label").alias("nlabel")))
-        return (lbl.join(neigh, "src", "left")
-                .select("src", F.least(
-                    F.col("label"),
-                    F.coalesce("nlabel", F.col("label"))).alias("label"),
-                    "old"))
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    from ..core.skeleton import _footer_rows, _read_parquet_dir, check_fits
+
+    spark = ids.sparkSession
+    id_type = ids.schema[id_col].dataType
+    if work_dir:
+        os.makedirs(work_dir, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="crawler_spark_cc_", dir=work_dir)
     try:
-        converged = False
-        for it in range(max_iters):
-            # TWO relax passes per barrier round: both reuse the same
-            # pre-partitioned edge list inside ONE job, so the second
-            # pass costs an extra join but no extra barrier/round —
-            # and it squares the per-round propagation radius.
-            # Measured on the bench phash graph (1053 nodes, dense
-            # near-dup clusters): 5 rounds/6.2 s single-relax → 3
-            # rounds/4.6 s double-relax; a third pass stopped paying
-            # (still 3 rounds, deeper plan, 5.4 s).
-            relaxed = _relax(_relax(
-                labels.withColumn("old", F.col("label"))))
-            # pointer jump: label ← label(label). label(label) ≤ label
-            # by construction (a node's label only decreases and
-            # starts at itself), so the jump never regresses. The
-            # self-join is WITHIN one round; the barrier below stops
-            # it compounding across rounds.
-            lmap = relaxed.select(F.col("src").alias("lbl_node"),
-                                  F.col("label").alias("jump"))
-            out = (relaxed.join(lmap,
-                                F.col("label") == F.col("lbl_node"))
-                   .select("src", F.col("jump").alias("label"),
-                           (F.col("jump") != F.col("old")).alias("chg")))
-            path = os.path.join(tmp, f"r{it}")
-            # partition the round table by `chg`: the convergence
-            # check then reads parquet FOOTER row counts (no Spark
-            # job) — same footer-lineage trick as the engine's
-            # frontier loop. Non-local work dirs (shared HDFS/S3 on a
-            # real cluster) fall back to a count job.
-            out.write.mode("overwrite").partitionBy("chg").parquet(path)
-            cur = spark.read.parquet(path)
-            if os.path.isdir(path):
-                changed = _footer_rows(os.path.join(path, "chg=true"))
-            else:
-                changed = cur.filter(F.col("chg")).count()
-            labels = cur.select("src", "label")
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components: not converged after "
-                f"{max_iters} rounds — raise max_iters for graphs "
-                f"with very long chain components")
-        # detach the result from the tmp dir before deleting it
-        result = (labels.select(F.col("src").alias(id_col),
-                                F.col("label").alias("canonical_id"))
+        pairs_path = os.path.join(tmp, "pairs")
+        (pairs.select(F.col(src).cast(id_type).alias("a"),
+                      F.col(dst).cast(id_type).alias("b"))
+         .write.parquet(pairs_path))
+        n_pairs = sum(_footer_rows(pairs_path).values())
+        per_pair = _CC_PAIR_BYTES + (
+            _CC_STR_PAIR_BYTES if isinstance(id_type, T.StringType) else 0)
+        check_fits(per_pair * n_pairs,
+                   f"connected components of {n_pairs} pairs")
+        at = to_arrow_type(id_type)
+        tbl = _read_parquet_dir(pairs_path, {"a": pa.array([], at),
+                                             "b": pa.array([], at)})
+        uniq, canon = _min_labels(tbl["a"].to_numpy(zero_copy_only=False),
+                                  tbl["b"].to_numpy(zero_copy_only=False))
+        del tbl
+        labels_path = os.path.join(tmp, "labels.parquet")
+        pq.write_table(pa.table({id_col: pa.array(uniq, at),
+                                 "label": pa.array(canon, at)}),
+                       labels_path)
+        result = (ids.select(id_col)
+                  .join(spark.read.parquet(labels_path), id_col, "left")
+                  .select(id_col, F.coalesce("label", F.col(id_col))
+                          .alias("canonical_id"))
                   .localCheckpoint())
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -163,11 +129,10 @@ def connected_components(ids: DataFrame, pairs: DataFrame,
 
 
 def assign_canonical(items: DataFrame, pairs: DataFrame,
-                     id_col: str, max_iters: int = 16) -> DataFrame:
+                     id_col: str) -> DataFrame:
     """items + (canonical_id, is_canonical) from the pair graph —
     keep `is_canonical` rows for a deduplicated corpus."""
-    comp = connected_components(items.select(id_col), pairs, id_col,
-                                max_iters=max_iters)
+    comp = connected_components(items.select(id_col), pairs, id_col)
     return (items.join(comp, id_col)
             .withColumn("is_canonical",
                         F.col(id_col) == F.col("canonical_id")))
@@ -179,8 +144,8 @@ def minhash_dedup(docs: DataFrame, threshold: float = 0.5,
                   text_col: str = "text") -> DataFrame:
     """Document near-dup dedup end-to-end: shingle → MinHash → banded
     LSH candidates (est. Jaccard ≥ threshold) → connected components →
-    canonical doc per cluster. One banded self-join + a few CC rounds;
-    no all-pairs anywhere."""
+    canonical doc per cluster. One banded self-join + one driver
+    union-find pass; no all-pairs anywhere."""
     from .dedup import minhash_lsh_pairs
 
     pairs = minhash_lsh_pairs(docs, threshold, num_hashes, bands, n,

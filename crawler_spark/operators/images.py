@@ -177,20 +177,19 @@ def phash_candidate_pairs(images: DataFrame, max_hamming: int = 10,
 
 
 def phash_dedup(images: DataFrame, max_hamming: int = 10,
-                id_col: str = "image_id", phash_col: str = "phash",
-                max_iters: int = 16) -> DataFrame:
+                id_col: str = "image_id",
+                phash_col: str = "phash") -> DataFrame:
     """Collapse near-duplicate clusters: connected components over the
-    candidate-pair graph via iterative min-label propagation (the
-    standard large-scale CC trick; cluster diameters are tiny for
-    near-dup graphs so few rounds converge). Returns the input plus
-    `canonical_id` (= min id in the component) and `is_canonical`.
+    banded candidate-pair graph, labelled by one driver union-find pass
+    (operators/cluster.py). Returns the input plus `canonical_id`
+    (= min id in the component) and `is_canonical`.
 
     Generalizes the reference's screenshot dedup windows
     (browser-session.ts:2444-2473) to content-based dedup."""
     from .cluster import assign_canonical
 
     pairs = phash_candidate_pairs(images, max_hamming, id_col, phash_col)
-    return assign_canonical(images, pairs, id_col, max_iters=max_iters)
+    return assign_canonical(images, pairs, id_col)
 
 
 def exact_byte_dedup(images: DataFrame, id_col: str = "image_id") -> DataFrame:

@@ -1,5 +1,5 @@
-"""Cluster assignment (near-dup dedup end-to-end): distributed
-min-label connected components match a pure-Python union-find over
+"""Cluster assignment (near-dup dedup end-to-end): connected
+components (one driver union-find pass) match a pure-Python union-find over
 the same candidate pairs, for the MinHash document graph and the
 embedding-cosine graph, under different partitionings."""
 

@@ -449,6 +449,7 @@ def test_skeleton_memory_guard_fails_before_sweep(spark, tmp_path,
     has available fails loudly — SkeletonMemoryError naming both byte
     counts — after the skeleton is written and before it is read, so
     no sweep runs and no claims are written."""
+    from crawler_spark.core import skeleton
     from crawler_spark.engine import frontier as fr
 
     cfg = CrawlConfig(max_depth=3)
@@ -456,10 +457,11 @@ def test_skeleton_memory_guard_fails_before_sweep(spark, tmp_path,
     eng = FrontierEngine(spark, cfg, FIXDIR, ck)
     eng.explore()
 
-    monkeypatch.setattr(fr, "_mem_available", lambda: 1024)
-    with pytest.raises(fr.SkeletonMemoryError) as ei:
+    monkeypatch.setattr(skeleton, "_mem_available", lambda: 1024)
+    with pytest.raises(skeleton.SkeletonMemoryError) as ei:
         eng.resolve()
-    n_edges = sum(eng._footer_rows(os.path.join(ck, "skeleton")).values())
+    n_edges = sum(skeleton._footer_rows(
+        os.path.join(ck, "skeleton")).values())
     _, n_nodes = fr._node_offsets(os.path.join(ck, "nodes"))
     need = fr._SWEEP_EDGE_BYTES * n_edges + fr._SWEEP_NODE_BYTES * n_nodes
     assert n_edges > 0 and need > 1024

@@ -4,7 +4,9 @@ The sweep is the engine's one sequential step (exact-order contract;
 see crawler_spark/core/dfs_kernel.py) — these tests pin the compiled
 kernel to the Python reference on randomized graphs so the fast path
 can never drift. Dense-id contract: nodes are 0..n_nodes-1, dead
-edges carry child id -1. No Spark involved.
+edges carry child id -1. The connected-components union-find in the
+same library is pinned the same way, against its Python twin and an
+independent reference. Only the memory-guard test starts Spark.
 """
 
 from __future__ import annotations
@@ -219,3 +221,112 @@ def test_emit_prios_c_matches_numpy_twin(seed):
                                 np.zeros(4, np.uint8),
                                 np.empty(0, np.int32))
     assert list(off0) == [0] and len(data0) == 0
+
+
+def _uf_reference(pairs, nodes):
+    """Dict union-find labelling every node with its component min."""
+    parent = {x: x for x in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for x, y in pairs:
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return {x: find(x) for x in nodes}
+
+
+def _random_pairs(rng, n_nodes, n_pairs):
+    """Random undirected pairs over the lower half of the id space, so
+    the upper half are singletons; includes self-pairs and repeats."""
+    a = rng.integers(0, n_nodes // 2, n_pairs).astype(np.int32)
+    b = rng.integers(0, n_nodes // 2, n_pairs).astype(np.int32)
+    return a, b
+
+
+def _shuffled_chain(rng, n_nodes):
+    """One path through all ids in random order: the shape that makes
+    min-label propagation take thousands of rounds."""
+    order = rng.permutation(n_nodes).astype(np.int32)
+    return order[:-1], order[1:]
+
+
+@pytest.mark.parametrize("shape,n_nodes,n_pairs", [
+    ("random", 50, 30), ("random", 2000, 1500), ("random", 2000, 6000),
+    ("chain", 100_000, None)])
+def test_union_find_matches_twin_and_reference(shape, n_nodes, n_pairs):
+    from crawler_spark.core.dfs_kernel import (_load_lib, components_c,
+                                               components_py)
+
+    assert _load_lib() is not None  # the C path must exist here
+    rng = np.random.default_rng(n_nodes + (n_pairs or 0))
+    if shape == "chain":
+        a, b = _shuffled_chain(rng, n_nodes)
+    else:
+        a, b = _random_pairs(rng, n_nodes, n_pairs)
+    got_c = components_c(a, b, n_nodes)
+    got_py = components_py(a, b, n_nodes)
+    exp = _uf_reference(zip(a.tolist(), b.tolist()), range(n_nodes))
+    assert got_c.dtype == np.int32
+    np.testing.assert_array_equal(got_c, got_py)
+    assert got_c.tolist() == [exp[i] for i in range(n_nodes)]
+    if shape == "chain":
+        assert (got_c == 0).all()
+    else:
+        assert (got_c[n_nodes // 2:] == np.arange(n_nodes // 2, n_nodes)).all()
+
+
+def test_min_labels_string_ids():
+    """The driver encode keeps the order of string ids, so every label
+    is the component's smallest string, as Spark's min compares it."""
+    from crawler_spark.operators.cluster import _min_labels
+
+    rng = np.random.default_rng(21)
+    words = np.array([f"{int(v):x}" for v in
+                      rng.integers(0, 1 << 40, 600)], dtype=object)
+    a = words[rng.integers(0, 300, 400)]
+    b = words[rng.integers(0, 300, 400)]
+    uniq, canon = _min_labels(a, b)
+    exp = _uf_reference(zip(a.tolist(), b.tolist()),
+                        set(a.tolist()) | set(b.tolist()))
+    assert dict(zip(uniq.tolist(), canon.tolist())) == exp
+    assert len(set(exp.values())) < len(exp)  # some real merging
+
+
+def test_union_find_allocation_failure_raises(monkeypatch):
+    """As for the sweep: a union-find that cannot allocate raises
+    MemoryError instead of running the Python twin."""
+    import crawler_spark.core.dfs_kernel as dk
+
+    class _FailingLib:
+        @staticmethod
+        def uf_components(*_args):
+            return -1
+
+    monkeypatch.setattr(dk, "_load_lib", lambda: _FailingLib)
+    a, b = _random_pairs(np.random.default_rng(6), 40, 30)
+    with pytest.raises(MemoryError, match="allocation failure"):
+        dk.components(a, b, 40)
+
+
+def test_cc_memory_guard_fails_before_read(spark, monkeypatch):
+    """connected_components checks the pair count from the parquet
+    footers against the driver's available memory and raises
+    SkeletonMemoryError before any pair is read."""
+    from crawler_spark.core import skeleton
+    from crawler_spark.operators.cluster import connected_components
+
+    reads = []
+    monkeypatch.setattr(skeleton, "_mem_available", lambda: 1024)
+    monkeypatch.setattr(skeleton, "_read_parquet_dir",
+                        lambda *a: reads.append(a))
+    ids = spark.createDataFrame([(i,) for i in range(40)], "node long")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(30)],
+                                  "id_a long, id_b long")
+    with pytest.raises(skeleton.SkeletonMemoryError,
+                       match="connected components of 30 pairs"):
+        connected_components(ids, pairs, "node")
+    assert reads == []

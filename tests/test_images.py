@@ -70,8 +70,8 @@ def gen_hash(gen: WebGen, suffix: str) -> int:
 
 
 def test_phash_dedup_matches_python_cc(spark, images_df):
-    """Spark banded-LSH + min-label CC == pure-Python connected
-    components over the identical hamming graph."""
+    """Spark banded-LSH + driver union-find CC == pure-Python
+    connected components over the identical hamming graph."""
     rows = [(r["image_id"], r["phash"])
             for r in images_df.select("image_id", "phash").collect()]
     # oracle: brute-force pairs, union-find

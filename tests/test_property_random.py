@@ -3,8 +3,8 @@ in the dedup path: the PPJoin prefix/length/positional filters in
 jaccard_pairs must lose NO qualifying pair on adversarial random
 corpora (brute-force cross-check, multiple thresholds), and
 connected_components must match union-find on random graphs whose
-components are long CHAINS — diameters large enough to force several
-label-propagation rounds and the convergence early-exit."""
+components are long CHAINS with shuffled ids — the large diameters
+that round-based label propagation handles worst."""
 
 from __future__ import annotations
 
@@ -97,9 +97,9 @@ def _uf(ids, pairs):
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_connected_components_long_chains(spark, seed):
-    """Chains of length up to ~40 force many min-label rounds; mixed
-    with random extra edges, singletons, and shuffled ids so the
-    min-label is in the middle of some chains."""
+    """Chains of length up to ~40 (diameters that would force many
+    min-label rounds); mixed with random extra edges, singletons, and
+    shuffled ids so the min-label is in the middle of some chains."""
     rng = random.Random(seed)
     ids = list(range(300))
     rng.shuffle(ids)
@@ -118,8 +118,8 @@ def test_connected_components_long_chains(spark, seed):
     ids_df = spark.createDataFrame([(i,) for i in ids], "node long")
     pairs_df = spark.createDataFrame(pairs, "id_a long, id_b long")
     got = {r["node"]: r["canonical_id"]
-           for r in connected_components(ids_df, pairs_df, "node",
-                                         max_iters=64).collect()}
+           for r in connected_components(ids_df, pairs_df,
+                                         "node").collect()}
     assert got == exp
     # non-trivial: at least one component deeper than 8 label rounds
     assert max(len([1 for v in exp.values() if v == c])

@@ -51,22 +51,52 @@ def df_multiset(cols, rows):
     return sorted(cols), out
 
 
-def main() -> int:
+def compare(scols, srows, ocols, orows) -> list[str]:
+    """Check a Spark result (column names, rows as
+    sequences in that column order) against its DuckDB oracle: row
+    count, sorted column names and the order-insensitive multiset of
+    normalized values. Returns the differences; empty when equal."""
+    sc, sm = df_multiset(scols, srows)
+    oc, om = df_multiset(ocols, orows)
+    status = []
+    if len(srows) != len(orows):
+        status.append(f"rowcount {len(srows)} vs {len(orows)}")
+    if sc != oc:
+        status.append(f"cols {sc} vs {oc}")
+    elif sm != om:
+        miss = [k for k in om if om[k] != sm.get(k, 0)][:3]
+        extra = [k for k in sm if sm[k] != om.get(k, 0)][:3]
+        status.append(f"values differ; oracle-only={miss} "
+                      f"spark-only={extra}")
+    return status
+
+
+def oracle_db(sf: str):
+    """A DuckDB connection with one view per sf table."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{sf}/{t}.parquet'")
+    return con
+
+
+def parse_args(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default="")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
-    import duckdb
+
+def main() -> int:
+    args = parse_args()
 
     import __spark_entry__ as entry
     from crawler_spark.plans.session import get_spark
 
     spark = get_spark("check_oracle", cores=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{args.sf}/{t}.parquet'")
+    con = oracle_db(args.sf)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -98,18 +128,8 @@ def main() -> int:
             print(f"FAIL  {name:20s} duckdb error: {e}")
             n_fail += 1
             continue
-        sc, sm = df_multiset(scols, [[r[c] for c in scols] for r in srows])
-        oc, om = df_multiset(ocols, orows)
-        status = []
-        if len(srows) != len(orows):
-            status.append(f"rowcount {len(srows)} vs {len(orows)}")
-        if sc != oc:
-            status.append(f"cols {sc} vs {oc}")
-        elif sm != om:
-            miss = [k for k in om if om[k] != sm.get(k, 0)][:3]
-            extra = [k for k in sm if sm[k] != om.get(k, 0)][:3]
-            status.append(f"values differ; oracle-only={miss} "
-                          f"spark-only={extra}")
+        status = compare(scols, [[r[c] for c in scols] for r in srows],
+                         ocols, orows)
         if status:
             print(f"FAIL  {name:20s} {'; '.join(status)}")
             n_fail += 1

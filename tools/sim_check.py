@@ -12,9 +12,7 @@ decade past the test fixtures:
     priority vector, status_code and politeness batch_id must match
     the simulator tuple-for-tuple (the golden-test comparison, not a
     count check);
-  * above 10^6 the simulator is impractical (pure-Python DFS) — there
-    tools/reach_check.py provides the independent closed-form BFS
-    upper bound on the visit count instead.
+  * above 10^6 the simulator is impractical (pure-Python DFS).
 
 Usage: python tools/sim_check.py [--pages 1000000] [--seeds 1024]
        [--depth 8] [--cores 16]
