@@ -37,9 +37,8 @@ from crawler_spark.operators.multimodal import (audio_features, caption_stats,
 from crawler_spark.operators.similarity import (ann_topk, cosine_pairs,
                                                 ivf_topk,
                                                 lsh_bucketed_neighbors)
-from crawler_spark.operators.textstats import (doc_fingerprint, lang_id,
-                                               quality_features,
-                                               quality_score, subword_count,
+from crawler_spark.operators.textstats import (doc_fingerprint,
+                                               text_features,
                                                winnow_fingerprints)
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
@@ -685,22 +684,21 @@ def q_simhash_pairs(spark, sf_dir):
 
 
 def q_doc_stats(spark, sf_dir):
-    """Text-pipeline per-doc stats, fused to one projection: quality
-    features + score, token/subword counts, exact dedup fingerprint,
-    and n-gram language ID (merged quality / token_counts /
-    fingerprint / lang_id — all share the documents row grain and the
-    same tokenizer, so one scan computes all of them)."""
-    d = _t(spark, sf_dir, "documents")
-    f = quality_features(F.col("text"))
+    """Text-pipeline per-doc stats, fused to one projection over one
+    token array (text_features): quality features + score,
+    token/subword counts, exact dedup fingerprint and marker-stopword
+    language ID."""
+    feats = ("n_tokens", "stopword_ratio", "punct_ratio", "quality",
+             "n_subwords", "fingerprint", "lang")
+    d = text_features(_t(spark, sf_dir, "documents"), {f: f for f in feats})
     return d.select(
         "doc_id",
-        f["n_tokens"].cast("long").alias("n_tokens"),
-        F.round(f["stopword_ratio"], 6).alias("stopword_ratio"),
-        F.round(f["punct_ratio"], 6).alias("punct_ratio"),
-        quality_score(F.col("text")).alias("quality"),
-        subword_count(F.col("text")).cast("long").alias("n_subwords"),
-        doc_fingerprint(F.col("text")).alias("fingerprint"),
-        lang_id(F.col("text")).alias("pred_lang"))
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.round("stopword_ratio", 6).alias("stopword_ratio"),
+        F.round("punct_ratio", 6).alias("punct_ratio"),
+        "quality",
+        F.col("n_subwords").cast("long").alias("n_subwords"),
+        "fingerprint", F.col("lang").alias("pred_lang"))
 
 
 def q_winnow(spark, sf_dir):

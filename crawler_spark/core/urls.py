@@ -24,10 +24,6 @@ from __future__ import annotations
 
 from urllib.parse import urlsplit
 
-# Schemes the frontier admits; anything else (javascript:, mailto:,
-# data:) is rejected upstream by the link-hygiene filter (F10).
-HTTP_SCHEMES = ("http", "https")
-
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
 
@@ -83,47 +79,3 @@ def url_path(url: str) -> str:
     except ValueError:
         return ""
 
-
-def resolve_href(base_url: str, href: str) -> str | None:
-    """Resolve *href* against *base_url* like the in-page extractor
-    (new URL(href, location.href) — crawler-engine.ts:1528-1533).
-
-    Returns None for hrefs the link-hygiene filter drops: fragments,
-    ``javascript:`` and other non-http(s) schemes
-    (browser-session.ts:3262)."""
-    href = href.strip()
-    if not href or href.startswith("#"):
-        return None
-    low = href.lower()
-    if ":" in href.split("/", 1)[0].split("?", 1)[0]:
-        scheme = low.split(":", 1)[0]
-        if scheme not in HTTP_SCHEMES:
-            return None
-        return href
-    from urllib.parse import urljoin
-
-    try:
-        out = urljoin(base_url, href)
-    except ValueError:
-        return None
-    if not out.lower().startswith(("http://", "https://")):
-        return None
-    return out
-
-
-def domain_allowed(url: str, start_host: str, include_subdomains: bool,
-                   restrict: bool) -> bool:
-    """Domain-restriction filter (F4, crawler-engine.ts:505-523):
-    hostname == start_host, or endswith('.' + start_host) when
-    include_subdomains; unrestricted when *restrict* is False;
-    malformed URL → reject."""
-    if not restrict:
-        return True
-    h = url_host(url)
-    if not h:
-        return False
-    if h == start_host:
-        return True
-    if include_subdomains and h.endswith("." + start_host):
-        return True
-    return False

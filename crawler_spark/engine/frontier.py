@@ -138,6 +138,38 @@ _SWEEP_NODE_BYTES = 4 + 8 + 4 + (4 + 4 + 8 + 4) + 1
 # admission (F2-F5) as reusable native expressions
 # ---------------------------------------------------------------------------
 
+def _host_cap(cfg: CrawlConfig):
+    """Fetch starts per host per batch window from a joined
+    ``crawl_delay_ms`` column (a host without a robots row gets the
+    rate limit): the column twin of ``cfg.host_cap``."""
+    return F.coalesce(
+        F.when(F.col("crawl_delay_ms") > 0,
+               F.greatest(F.lit(1), F.least(
+                   F.lit(cfg.rate_limit),
+                   (F.lit(cfg.batch_window_ms) /
+                    F.col("crawl_delay_ms")).cast("int")))),
+        F.lit(cfg.rate_limit))
+
+
+def _domain_ok(host, allowed_hosts: list[str], cfg: CrawlConfig):
+    """Domain restriction (F4): *host* is an allowed host or, with
+    ``cfg.include_subdomains``, a subdomain of one."""
+    hosts = F.array(*[F.lit(h) for h in sorted(allowed_hosts)])
+    return F.exists(hosts, lambda a: (host == a) | (
+        host.endswith(F.concat(F.lit("."), a))
+        if cfg.include_subdomains else F.lit(False)))
+
+
+def _robots_blocked(path):
+    """Robots disallow (F5): *path* starts with a non-empty prefix of
+    the joined ``disallow_prefixes``."""
+    return F.when(
+        F.col("disallow_prefixes").isNotNull(),
+        F.exists("disallow_prefixes",
+                 lambda p: (p != "") & path.startswith(p)),
+    ).otherwise(F.lit(False))  # allow-all when robots missing (:481-485)
+
+
 def admit(df: DataFrame, url_col: str, robots: DataFrame,
           allowed_hosts: list[str], cfg: CrawlConfig) -> DataFrame:
     """Filter *df* to admissible URLs (already canonical): http(s)
@@ -150,19 +182,11 @@ def admit(df: DataFrame, url_col: str, robots: DataFrame,
         .withColumn("path", url_path(u))
     )
     if cfg.restrict_domains:
-        hosts = F.array(*[F.lit(h) for h in sorted(allowed_hosts)])
-        cond = F.exists(hosts, lambda a: (F.col("host") == a) | (
-            F.col("host").endswith(F.concat(F.lit("."), a))
-            if cfg.include_subdomains else F.lit(False)))
-        out = out.filter(cond)
+        out = out.filter(_domain_ok(F.col("host"), allowed_hosts, cfg))
     out = out.join(F.broadcast(robots.select("host", "disallow_prefixes")),
                    "host", "left")
-    blocked = F.when(
-        F.col("disallow_prefixes").isNotNull(),
-        F.exists("disallow_prefixes",
-                 lambda p: (p != "") & F.col("path").startswith(p)),
-    ).otherwise(F.lit(False))  # allow-all when robots missing (:481-485)
-    return out.filter(~blocked).drop("disallow_prefixes", "path")
+    return (out.filter(~_robots_blocked(F.col("path")))
+            .drop("disallow_prefixes", "path"))
 
 
 # ---------------------------------------------------------------------------
@@ -220,15 +244,8 @@ class ExtractPlan:
         self.child_path = url_path(F.col("child_url"))
         ok = F.col("child_url").rlike(r"^https?://[^/?#]+")
         if cfg.restrict_domains:
-            hosts = F.array(*[F.lit(h) for h in sorted(allowed_hosts)])
-            ok = ok & F.exists(hosts, lambda a: (F.col("child_host") == a) | (
-                F.col("child_host").endswith(F.concat(F.lit("."), a))
-                if cfg.include_subdomains else F.lit(False)))
-        blocked = F.when(
-            F.col("disallow_prefixes").isNotNull(),
-            F.exists("disallow_prefixes",
-                     lambda p: (p != "") & F.col("child_path").startswith(p)),
-        ).otherwise(F.lit(False))  # allow-all when robots missing (:481-485)
+            ok = ok & _domain_ok(F.col("child_host"), allowed_hosts, cfg)
+        blocked = _robots_blocked(F.col("child_path"))
         self.keep = (F.col("pos") == 0) | (ok & ~blocked)
         self.robots_b = F.broadcast(robots.select(
             F.col("host").alias("child_host"), "disallow_prefixes"))
@@ -627,13 +644,6 @@ class FrontierEngine:
         a handful of Column objects."""
         p = getattr(self, "_polite_plan", None)
         if p is None:
-            cap_col = F.coalesce(
-                F.when(F.col("crawl_delay_ms") > 0,
-                       F.greatest(F.lit(1), F.least(
-                           F.lit(self.cfg.rate_limit),
-                           (F.lit(self.cfg.batch_window_ms) /
-                            F.col("crawl_delay_ms")).cast("int")))),
-                F.lit(self.cfg.rate_limit))
             # Salted per-host ranking for mega-host skew: only hosts
             # whose cap covers all salts are split (budget divides
             # exactly, stays an upper bound); small-cap hosts rank
@@ -649,7 +659,7 @@ class FrontierEngine:
             p = {
                 "robots_b": F.broadcast(
                     self.robots.select("host", "crawl_delay_ms")),
-                "cap": cap_col, "salt": salt, "salt_cap": salt_cap,
+                "cap": _host_cap(self.cfg), "salt": salt, "salt_cap": salt_cap,
                 "rn": F.row_number().over(w),
                 "w_run": w.rowsBetween(Window.unboundedPreceding,
                                        Window.currentRow),
@@ -1306,7 +1316,6 @@ class FrontierEngine:
         host-partitioned window). Claims of
         never-materialized URLs are 404s (dead links — fetched as
         absent)."""
-        cfg = self.cfg
         fetched = (self.crawl_table.read(with_partition_columns=True,
                                         schema=self._crawl_schema)
                    .filter(F.col("kind") == "page")
@@ -1321,17 +1330,10 @@ class FrontierEngine:
         # DISTRIBUTED: the window partitions by host (ordering within
         # a host by prio ≡ visit order), so the only serial artifact
         # of the exact-ordering contract stays the sweep itself.
-        cap_col = F.coalesce(
-            F.when(F.col("crawl_delay_ms") > 0,
-                   F.greatest(F.lit(1), F.least(
-                       F.lit(cfg.rate_limit),
-                       (F.lit(cfg.batch_window_ms) /
-                        F.col("crawl_delay_ms")).cast("int")))),
-            F.lit(cfg.rate_limit))
         visits = (visits.join(F.broadcast(
                       self.robots.select("host", "crawl_delay_ms")),
                       "host", "left")
-                  .withColumn("cap", cap_col)
+                  .withColumn("cap", _host_cap(self.cfg))
                   .withColumn(
                       "host_k",
                       F.row_number().over(

@@ -2,16 +2,15 @@
 scoring, token counting, document fingerprinting — all native column
 expressions over `documents(doc_id, text, ...)`.
 
-The reference's text surface is extraction + truncation
-(/root/reference/lib/crawler/crawler-engine.ts:1353-1487); these are
-the standard corpus-curation extensions built on the same scalar
-toolbox (E-series operators). Every function here has a DuckDB-SQL
+The reference crawler's text surface is extraction + truncation; these
+are the standard corpus-curation extensions built on the same scalar
+toolbox (E-series operators). Every feature here has a DuckDB-SQL
 twin in __spark_entry__.oracle_sql() — the semantics are pinned by
 that cross-engine equality, not just by unit tests."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import tokens_col
@@ -27,122 +26,70 @@ LANG_MARKERS = {
 
 EN_STOPWORDS = ("the", "a", "of", "and", "is", "to", "in", "it", "on", "for")
 
-
-def _marker_hits(toks: Column, lang: str) -> Column:
-    ms = LANG_MARKERS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(*ms)))
+_TOKS = "_toks"
 
 
-def lang_id(text: Column | str) -> Column:
-    """Heuristic language guess: argmax of marker-stopword hit counts
-    (ties broken by fixed language order en>de>fr>es — array_position
-    returns the FIRST index of the max, which is exactly the
-    earlier-lang-wins-ties / later-must-strictly-exceed rule), 'unk'
-    when no marker hits. Pure column expr — a groupless scalar
-    classifier.
+def text_features(df: DataFrame, cols: dict[str, str],
+                  text: str = "text") -> DataFrame:
+    """*df* with per-document features of its *text* column attached.
+    *cols* maps each output column name to one of the features:
 
-    Shape note: the token array and the per-language hit vector are
-    each bound ONCE via a lambda scope (transform over a singleton).
-    The previous when-chain argmax embedded the running best-score
-    tree twice per level — the regex tokenization subtree ended up
-    inlined ~2^|langs| times, and the corpus feature stage was
-    allocation-bound on exactly that (79→120 s going 8→32 threads on
-    one heap; see BASELINE.md round-5 corpus section)."""
-    text = F.col(text) if isinstance(text, str) else text
-    toks = tokens_col(text, distinct=False)
-    langs = F.array(*[F.lit(lang) for lang in LANG_MARKERS])
+      n_tokens        word tokens (tokens_col, duplicates kept)
+      stopword_ratio  English stopword tokens / tokens (0 if none)
+      punct_ratio     '.,;:!?' characters / characters (0 if empty)
+      quality         [0,1] score: rewards mid-length docs with
+                      healthy stopword presence, penalizes
+                      punctuation soup (rounded to 6 places)
+      n_subwords      BPE-ish count: tokens + every character that is
+                      neither alphanumeric nor whitespace
+      lang            argmax of LANG_MARKERS hits, earlier language
+                      wins ties, 'unk' when no marker hits
+      fingerprint     doc_fingerprint (the exact-dedup key)
 
-    def pick(ts: Column) -> Column:
-        hits = F.array(*[
-            F.size(F.filter(ts, lambda t: t.isin(*LANG_MARKERS[lang])))
-            for lang in LANG_MARKERS])
+    An output named like an existing column replaces it in place; new
+    ones are appended in *cols* order. Ratios are exact integer-ratio
+    doubles, so every feature is bit-stable against the DuckDB twin.
 
-        def argmax(hs: Column) -> Column:
-            mx = F.array_max(hs)
-            return F.when(
-                mx > 0,
-                F.element_at(langs,
-                             F.array_position(hs, mx).cast("int"))
-            ).otherwise(F.lit("unk"))
-
-        return F.transform(F.array(hits), argmax)[0]
-
-    return F.transform(F.array(toks), pick)[0]
-
-
-def token_count(text: Column | str) -> Column:
-    """Whitespace-ish token count (the cheap budget estimator)."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.size(tokens_col(text, distinct=False))
-
-
-def subword_count(text: Column | str) -> Column:
-    """BPE-ish subword count: alphanumeric runs + punctuation marks
-    each count as a token (regex tokenizer — the deterministic
-    approximation of a BPE vocab's pre-tokenizer)."""
-    text = F.col(text) if isinstance(text, str) else text
-    alnum = F.size(F.filter(F.split(F.lower(text), r"[^a-z0-9]+"),
-                            lambda t: t != ""))
-    punct = F.length(F.regexp_replace(F.lower(text), r"[a-z0-9\s]", ""))
-    return alnum + punct
-
-
-def quality_features(text: Column | str) -> dict[str, Column]:
-    """Deterministic quality signals: char length, token count, mean
-    token length, stopword ratio, punctuation ratio, uppercase ratio.
-    Each an exact integer-ratio double (cross-engine bit-stable)."""
-    text = F.col(text) if isinstance(text, str) else text
-    toks = tokens_col(text, distinct=False)
+    The text is tokenized once: the token array is projected to a
+    named column that every feature reads, then dropped. Catalyst's
+    CollapseProject does not inline a non-cheap expression referenced
+    more than once, so the optimized plan keeps that one tokenizer
+    (pinned by tests/test_corpus_job.py)."""
+    txt = F.col(text)
+    toks = F.col(_TOKS)
     n_tok = F.size(toks)
-    n_char = F.length(text)
+    n_char = F.length(txt)
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
-    n_punct = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
-    n_upper = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
-    mean_tok = F.when(n_tok > 0,
-                      F.aggregate(toks, F.lit(0),
-                                  lambda acc, t: acc + F.length(t))
-                      / n_tok).otherwise(F.lit(0.0))
-    return dict(
-        n_chars=n_char,
-        n_tokens=n_tok,
-        mean_token_len=mean_tok,
-        stopword_ratio=F.when(n_tok > 0, n_stop / n_tok).otherwise(0.0),
-        punct_ratio=F.when(n_char > 0, n_punct / n_char).otherwise(0.0),
-        upper_ratio=F.when(n_char > 0, n_upper / n_char).otherwise(0.0),
-    )
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality score from the features: rewards
-    mid-length docs with healthy stopword presence, penalizes
-    punctuation soup. Weighted sum of clamped signals (the standard
-    hand-rolled pre-filter before model-based scoring).
-
-    The token array is bound ONCE via a lambda scope — going through
-    quality_features() referenced the tokenization subtree ~6 times
-    (n_tokens in three terms, the stopword filter, the ratio guards),
-    and Catalyst inlines each reference. Formulas are kept
-    term-for-term identical to quality_features' definitions, so the
-    score is bit-stable vs the DuckDB oracle."""
-    text = F.col(text) if isinstance(text, str) else text
-    toks = tokens_col(text, distinct=False)
-    punct_ratio_num = F.length(F.regexp_replace(text, r"[^.,;:!?]", ""))
-    n_char = F.length(text)
-
-    def score(ts: Column) -> Column:
-        n_tok = F.size(ts)
-        n_stop = F.size(F.filter(ts, lambda t: t.isin(*EN_STOPWORDS)))
-        stopword_ratio = F.when(n_tok > 0, n_stop / n_tok).otherwise(0.0)
-        punct_ratio = F.when(n_char > 0,
-                             punct_ratio_num / n_char).otherwise(0.0)
-        len_term = F.least(n_tok / F.lit(200.0), F.lit(1.0))
-        stop_term = F.least(stopword_ratio * 5.0, F.lit(1.0))
-        punct_pen = F.greatest(F.lit(0.0),
-                               F.lit(1.0) - punct_ratio * 10.0)
-        return F.round(0.4 * len_term + 0.3 * stop_term
-                       + 0.3 * punct_pen, 6)
-
-    return F.transform(F.array(toks), score)[0]
+    n_punct = F.length(F.regexp_replace(txt, r"[^.,;:!?]", ""))
+    stopword_ratio = F.when(n_tok > 0, n_stop / n_tok).otherwise(0.0)
+    punct_ratio = F.when(n_char > 0, n_punct / n_char).otherwise(0.0)
+    len_term = F.least(n_tok / F.lit(200.0), F.lit(1.0))
+    stop_term = F.least(stopword_ratio * 5.0, F.lit(1.0))
+    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio * 10.0)
+    # argmax as the max of (hits, -position, lang) structs: the most
+    # hits win, then the earlier language; ('unk', 0 hits) outranks
+    # every language only when none of them hits
+    best = F.array_max(F.array(
+        F.struct(F.lit(0).alias("hits"), F.lit(0).alias("pos"),
+                 F.lit("unk").alias("lang")),
+        *[F.struct(F.size(F.filter(toks, lambda t: t.isin(*ms)))
+                   .alias("hits"),
+                   F.lit(-i).alias("pos"), F.lit(lang).alias("lang"))
+          for i, (lang, ms) in enumerate(LANG_MARKERS.items(), 1)]))
+    feats = {
+        "n_tokens": n_tok,
+        "stopword_ratio": stopword_ratio,
+        "punct_ratio": punct_ratio,
+        "quality": F.round(0.4 * len_term + 0.3 * stop_term
+                           + 0.3 * punct_pen, 6),
+        "n_subwords": n_tok + F.length(
+            F.regexp_replace(F.lower(txt), r"[a-z0-9\s]", "")),
+        "lang": best["lang"],
+        "fingerprint": doc_fingerprint(txt),
+    }
+    return (df.withColumn(_TOKS, tokens_col(txt, distinct=False))
+            .withColumns({out: feats[f] for out, f in cols.items()})
+            .drop(_TOKS))
 
 
 def doc_fingerprint(text: Column | str) -> Column:

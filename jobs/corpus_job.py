@@ -4,7 +4,7 @@ canonical corpus with quality features attached.
 
 Stages (all distributed, no driver-side data):
   1. text features: lang-ID, quality score, token/subword counts,
-     content fingerprint — native columns, one codegen pass;
+     content fingerprint — native columns over one token array;
   2. exact dedup: fingerprint groupBy keeps the smallest doc_id;
   3. near-dup dedup: MinHash->banded LSH candidates -> connected
      components -> one canonical doc per cluster;
@@ -43,8 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def run_corpus(spark, docs_path: str, out: str,
                embeddings: str | None = None, images: str | None = None,
                minhash_threshold: float = 0.5,
-               cosine_threshold: float = 0.95, max_hamming: int = 10,
-               min_quality: int = 0) -> dict:
+               cosine_threshold: float = 0.95, max_hamming: int = 10) -> dict:
     """The pipeline body, importable so a caller (perfbench's
     corpus_dedup workload, tests/test_corpus_job.py) can run it in its
     own session — stats dict identical to the CLI's stdout line."""
@@ -52,9 +51,7 @@ def run_corpus(spark, docs_path: str, out: str,
 
     from crawler_spark.operators.cluster import (embedding_dedup,
                                                  minhash_dedup)
-    from crawler_spark.operators.textstats import (doc_fingerprint, lang_id,
-                                                   quality_score,
-                                                   subword_count, token_count)
+    from crawler_spark.operators.textstats import text_features
 
     stats: dict[str, int] = {}
     def _spread(df):
@@ -82,14 +79,10 @@ def run_corpus(spark, docs_path: str, out: str,
     # feature pass executed ~4x per job (measured in the round-5
     # scaling pair; the recompute was also most of the job's
     # core-count-independent latency floor).
-    feat = (docs
-            .withColumn("lang", lang_id("text"))
-            .withColumn("quality", quality_score("text"))
-            .withColumn("tokens", token_count("text"))
-            .withColumn("subwords", subword_count("text"))
-            .withColumn("fingerprint", doc_fingerprint("text")))
-    if min_quality:
-        feat = feat.filter(F.col("quality") >= min_quality)
+    feat = text_features(docs, {"lang": "lang", "quality": "quality",
+                                "tokens": "n_tokens",
+                                "subwords": "n_subwords",
+                                "fingerprint": "fingerprint"})
     exact_keep = (feat.groupBy("fingerprint")
                   .agg(F.min("doc_id").alias("doc_id")))
     feat = feat.join(exact_keep, ["fingerprint", "doc_id"]).localCheckpoint()
@@ -145,8 +138,6 @@ def main() -> None:
     ap.add_argument("--minhash-threshold", type=float, default=0.5)
     ap.add_argument("--cosine-threshold", type=float, default=0.95)
     ap.add_argument("--max-hamming", type=int, default=10)
-    ap.add_argument("--min-quality", type=int, default=0,
-                    help="drop docs scoring below this (0 keeps all)")
     ap.add_argument("--cores", type=int, default=0,
                     help="local-mode cores; 0 = use spark-submit's master")
     args = ap.parse_args()
@@ -163,8 +154,7 @@ def main() -> None:
                        embeddings=args.embeddings, images=args.images,
                        minhash_threshold=args.minhash_threshold,
                        cosine_threshold=args.cosine_threshold,
-                       max_hamming=args.max_hamming,
-                       min_quality=args.min_quality)
+                       max_hamming=args.max_hamming)
     print(json.dumps(stats))
 
 
