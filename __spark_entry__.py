@@ -784,7 +784,7 @@ def q_image_phash_dedup(spark, sf_dir):
 def q_image_thumbnail(spark, sf_dir):
     """Thumbnail stage with a real oracle: the fixture precomputes
     each image's 16x16-box mean luma at generation time (from the
-    decoded bytes, core.imaging.mean_luma_16), so DuckDB verifies the
+    decoded bytes, core.imaging.mean_luma), so DuckDB verifies the
     distributed decode→resize→luma path value-for-value."""
     return (thumbnail(_images(spark))
             .select("image_id",

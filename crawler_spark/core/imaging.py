@@ -242,14 +242,15 @@ def avgpool_resize(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return out.clip(0, 255).astype(np.uint8)
 
 
-def mean_luma_16(px: np.ndarray) -> float:
-    """Mean BT.601 luma of the 16x16 box-resized image, rounded to 4
-    places — the thumbnail operator's summary stat, factored here so
-    the fixture generator can precompute it per image as an
-    independent driver-oracle column."""
-    tp = avgpool_resize(px, 16, 16)
-    gray = tp.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    return round(float(gray.mean()), 4)
+def mean_luma(px: np.ndarray) -> float:
+    """Mean BT.601 luma of an (h, w, 3) pixel array, rounded to 4
+    places: an exact integer sum of 299R + 587G + 114B and one division
+    by 1000·h·w, so the rounding of a 4-place tie cannot depend on a
+    float summation order. The thumbnail and frame-sample operators'
+    summary stat, and the fixture generator's precomputed oracle
+    column."""
+    tot = int((px.astype(np.int64) @ np.array([299, 587, 114])).sum())
+    return round(tot / (1000 * px.shape[0] * px.shape[1]), 4)
 
 
 def render_image(image_id: str, w: int, h: int, noise_seed: int = 0,

@@ -38,6 +38,10 @@ Scale posture (10^10 URLs / 1000 executors):
     the per-round anti-join (candidates ⋈ admission history) is the
     J1 scale-critical join — one exact join, AQE-planned.
   * robots and the allowed-host list are broadcast (small dims).
+  * politeness is one queue: every round re-ranks the whole pending
+    set (deferred rows + new arrivals) by (depth, url) per host and
+    writes the verdict as the round's sel=b / sel=d partitions, so a
+    resume needs nothing but the committed frontier rounds.
   * the per-host politeness window is skew-prone (mega-hosts);
     rows are salted by pmod(url_hash, S) inside a host before the
     per-host rank so no single task sees a whole mega-host
@@ -288,15 +292,6 @@ class FrontierEngine:
         self.fixture_dir = fixture_dir
         self.ckpt = ckpt_dir
         self.enforce_politeness = enforce_politeness
-        # freeze-and-cursor deferral store (politeness mode only):
-        # deferred rows that can never be overtaken are written ONCE
-        # and popped by cursor instead of re-ranked + rewritten every
-        # window — see _write_frontier's scale note. The cursor is a
-        # driver-held pandas dim, broadcast into the round's plan
-        # like robots: ZERO extra Spark jobs per round to consult it.
-        self._cursor = None          # pandas (host, salt, salt_cap,
-        self._fdirs = None           #   consumed, frozen_total) /
-        #                                (dir, host, salt, max_frank)
         self.web = spark.read.parquet(f"{fixture_dir}/web_pages.parquet")
         self.robots = spark.read.parquet(f"{fixture_dir}/robots.parquet")
         self.seeds_raw = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
@@ -354,17 +349,6 @@ class FrontierEngine:
             types.StructField("url", types.StringType()),
             types.StructField("depth", types.IntegerType()),
             types.StructField("host", types.StringType())])
-        # frozen rows carry their politeness salt and a dense per-
-        # (host, salt) rank assigned at freeze time; b/d rows store
-        # nulls in these two columns (RLE — costs ~nothing), so one
-        # partitionBy(sel) write covers all three verdicts and every
-        # history read just prunes to _frontier_schema
-        self._freeze_schema = types.StructType([
-            types.StructField("url", types.StringType()),
-            types.StructField("depth", types.IntegerType()),
-            types.StructField("host", types.StringType()),
-            types.StructField("salt", types.IntegerType()),
-            types.StructField("frank", types.LongType())])
         self._crawl_schema = types.StructType([
             types.StructField("parent_url", types.StringType()),
             types.StructField("depth", types.IntegerType()),
@@ -414,202 +398,6 @@ class FrontierEngine:
             return os.path.join(self.ckpt, name)
         return os.path.join(self.ckpt, name, f"round={rnd:05d}")
 
-    @staticmethod
-    def _footer_min_depth(path: str) -> int | None:
-        """Min of the `depth` column across a dir's parquet files,
-        from row-group footer statistics (driver-side, no Spark job).
-        This is the freeze bound: the previous batch's min depth."""
-        import pyarrow.parquet as pq
-
-        mn = None
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(root, f))
-                try:
-                    ci = pf.schema_arrow.names.index("depth")
-                except ValueError:
-                    continue
-                md = pf.metadata
-                for g in range(md.num_row_groups):
-                    st = md.row_group(g).column(ci).statistics
-                    if st is not None and st.has_min_max:
-                        mn = st.min if mn is None else min(mn, st.min)
-        return mn
-
-    # ---- freeze-and-cursor deferral store (see _write_frontier) ----
-
-    def _cursor_frames(self):
-        import pandas as pd
-
-        cur = pd.DataFrame({"host": pd.Series(dtype="str"),
-                            "salt": pd.Series(dtype="int32"),
-                            "salt_cap": pd.Series(dtype="int64"),
-                            "consumed": pd.Series(dtype="int64"),
-                            "frozen_total": pd.Series(dtype="int64")})
-        fd = pd.DataFrame({"dir": pd.Series(dtype="str"),
-                           "host": pd.Series(dtype="str"),
-                           "salt": pd.Series(dtype="int32"),
-                           "max_frank": pd.Series(dtype="int64")})
-        return cur, fd
-
-    def _cursor_paths(self, rnd: int) -> tuple[str, str]:
-        d = os.path.join(self.ckpt, "cursor")
-        return (os.path.join(d, f"round={rnd:05d}.parquet"),
-                os.path.join(d, f"dirs={rnd:05d}.parquet"))
-
-    def _load_cursor(self, rnd: int) -> None:
-        """Cursor and live-dirs registry as persisted AFTER round
-        ``rnd``'s frontier write (resume path): the round's two
-        parquet files, read back onto the driver. A pre-freeze
-        checkpoint simply has no cursor files and no sel=f dirs —
-        empty state is correct."""
-        import pandas as pd
-
-        cp, dp = self._cursor_paths(rnd)
-        cur, fd = self._cursor_frames()
-        if os.path.exists(cp):
-            cur = pd.read_parquet(cp)
-        if os.path.exists(dp):
-            fd = pd.read_parquet(dp)
-        self._cursor, self._fdirs = cur, fd
-
-    def _save_cursor(self, rnd: int) -> None:
-        cp, dp = self._cursor_paths(rnd)
-        os.makedirs(os.path.dirname(cp), exist_ok=True)
-        self._cursor.to_parquet(cp, index=False)
-        self._fdirs.to_parquet(dp, index=False)
-
-    def _host_salt_cap(self, host: str) -> int:
-        """Driver twin of the plan's salt_cap expression (same
-        formula, same truncation — asserted equal by the dense-frank
-        invariant check in _advance_cursor)."""
-        caps = getattr(self, "_host_caps_", None)
-        if caps is None:
-            caps = {r["host"]: self.cfg.host_cap(r["crawl_delay_ms"] or 0)
-                    for r in self.robots.select(
-                        "host", "crawl_delay_ms").collect()}
-            self._host_caps_ = caps
-        cap = caps.get(host, self.cfg.rate_limit)
-        return cap // HOST_SALTS if cap >= HOST_SALTS else cap
-
-    def _takes(self):
-        """Per-(host, salt) cursor dim for this round's write: take =
-        min(salt_cap, frozen_total - consumed), over EVERY group that
-        has ever frozen — a drained group (take 0) must still ride
-        along so a later re-freeze continues its frank sequence from
-        ftot instead of restarting (the dense-frank invariant check
-        in _advance_cursor caught exactly that). None when nothing
-        has ever frozen (the hot no-deferral path pays zero
-        overhead)."""
-        import numpy as np
-
-        cur = self._cursor
-        if cur is None or not len(cur):
-            return None
-        m = cur["frozen_total"] > 0
-        if not m.any():
-            return None
-        t = cur.loc[m, ["host", "salt", "consumed", "frozen_total"]].copy()
-        t["take"] = np.minimum(
-            cur.loc[m, "salt_cap"],
-            cur.loc[m, "frozen_total"] - cur.loc[m, "consumed"])
-        return t.rename(columns={"frozen_total": "ftot"})
-
-    def _frozen_pops(self, takes) -> DataFrame:
-        """This round's batch rows popped from the frozen store:
-        frank in (consumed, consumed + take] per (host, salt). A scan
-        over the LIVE freeze dirs (fully-consumed dirs were retired)
-        with pushed global frank bounds — row groups are sorted by
-        (host, salt, frank) at write, so footer stats prune the
-        not-yet-reached tail — then a broadcast join against the
-        cursor dim. No shuffle, no rewrite."""
-        fd = self._fdirs
-        live = sorted(fd["dir"].unique()) if fd is not None and len(fd) \
-            else []
-        kmin = int(takes["consumed"].min())
-        kmax = int((takes["consumed"] + takes["take"]).max())
-        dim = self.spark.createDataFrame(
-            takes[["host", "salt", "consumed", "take"]])
-        return (self.spark.read.schema(self._freeze_schema)
-                .parquet(*[os.path.join(self.ckpt, d) for d in live])
-                .filter((F.col("frank") > kmin) & (F.col("frank") <= kmax))
-                .join(F.broadcast(dim), ["host", "salt"])
-                .filter((F.col("frank") > F.col("consumed"))
-                        & (F.col("frank") <= F.col("consumed")
-                           + F.col("take")))
-                .select("url", "depth", "host", "salt", "frank",
-                        F.lit("b").alias("sel")))
-
-    def _advance_cursor(self, rnd: int, takes, counts: dict) -> None:
-        """Post-write cursor bookkeeping for round ``rnd``: consumed
-        += take (pops are exactly take rows — franks are dense by
-        construction), register newly frozen rows (one small agg job,
-        only on rounds that actually froze), retire fully-consumed
-        freeze dirs, persist for resume."""
-        import pandas as pd
-
-        cur = self._cursor if self._cursor is not None \
-            else self._cursor_frames()[0]
-        fd = self._fdirs if self._fdirs is not None \
-            else self._cursor_frames()[1]
-        if takes is not None:
-            cur = cur.merge(takes[["host", "salt", "take"]],
-                            on=["host", "salt"], how="left")
-            cur["consumed"] = cur["consumed"] + cur["take"].fillna(0).astype(
-                "int64")
-            cur = cur.drop(columns=["take"])
-        n_f = sum(v for k, v in counts.items() if k.startswith("sel=f"))
-        if n_f:
-            rel = os.path.join(f"frontier/round={rnd:05d}", "sel=f")
-            fdir = os.path.join(self._paths("frontier", rnd), "sel=f")
-            fc = (self.spark.read.schema(self._freeze_schema).parquet(fdir)
-                  .groupBy("host", "salt")
-                  .agg(F.count("*").alias("cnt"), F.max("frank").alias("mx"),
-                       F.min("frank").alias("mn"))
-                  .collect())
-            fc = pd.DataFrame([(r["host"], r["salt"], r["cnt"], r["mx"],
-                                r["mn"]) for r in fc],
-                              columns=["host", "salt", "cnt", "mx", "mn"])
-            cur = cur.merge(fc, on=["host", "salt"], how="outer")
-            new = cur["consumed"].isna()
-            if new.any():
-                cur.loc[new, "consumed"] = 0
-                cur.loc[new, "frozen_total"] = 0
-                cur.loc[new, "salt_cap"] = [
-                    self._host_salt_cap(h) for h in cur.loc[new, "host"]]
-            froze = cur["cnt"].notna()
-            # dense-frank invariant: the plan's frank base (ftot) must
-            # equal the driver's frozen_total and the ranks must be
-            # gapless — catches any driver/plan salt_cap drift
-            bad = froze & ((cur["mn"] != cur["frozen_total"] + 1)
-                           | (cur["mx"] != cur["frozen_total"]
-                              + cur["cnt"]))
-            if bad.any():
-                raise AssertionError(
-                    f"frozen rank not dense for "
-                    f"{cur.loc[bad, ['host', 'salt']].values.tolist()}")
-            cur.loc[froze, "frozen_total"] = cur.loc[froze, "mx"]
-            fd = pd.concat(
-                [fd, fc.assign(dir=rel)[["dir", "host", "salt", "mx"]]
-                 .rename(columns={"mx": "max_frank"})],
-                ignore_index=True)
-            cur = cur.drop(columns=["cnt", "mx", "mn"])
-        for c in ("salt_cap", "consumed", "frozen_total"):
-            cur[c] = cur[c].astype("int64")
-        cur["salt"] = cur["salt"].astype("int32")
-        if len(fd):
-            alive = (fd.merge(cur[["host", "salt", "consumed"]],
-                              on=["host", "salt"], how="left")
-                     .assign(live=lambda x: x["max_frank"]
-                             > x["consumed"].fillna(0))
-                     .groupby("dir")["live"].any())
-            fd = fd[fd["dir"].isin(alive[alive].index)].reset_index(
-                drop=True)
-        self._cursor, self._fdirs = cur, fd
-        self._save_cursor(rnd)
-
     def _state(self) -> dict:
         """Resume state derived from the frontier table's snapshot
         manifest (NOT a side file): completed_rounds = highest
@@ -622,26 +410,15 @@ class FrontierEngine:
         return {"completed_rounds": max(rounds) if rounds else 0,
                 "done": any(s["op"] == "complete" for s in lineage)}
 
-    def _politeness_mark(self, frontier: DataFrame,
-                         takes_sdf: DataFrame | None = None,
-                         bound: int | None = None) -> DataFrame:
-        """Tag each ACTIVE frontier row with its politeness verdict for
-        the NEXT round: sel='b' (within the per-host budget, fetch
-        now), sel='f' (frozen — can never be overtaken, goes to the
-        append-only store), or sel='d' (deferred, re-ranked next
-        round). Mega-host skew: rank within (host, salt) with the
-        budget split across salts so no task scans a whole host.
-
-        ``takes_sdf`` (host, salt, take, ftot): how many slots this
-        round's frozen-store pops already occupy per (host, salt) —
-        they precede every active row in (depth, url) order, so the
-        active budget shrinks to salt_cap - take. ``ftot`` is the
-        frozen-rank base for NEW freezes. ``bound``: rows beyond the
-        budget with depth <= bound are frozen (see _write_frontier for
-        why that is exact). Column trees are built once (lazily) and
-        reused — plan construction is per-round driver py4j chatter
-        otherwise; the per-round bits (bound literal, takes join) are
-        a handful of Column objects."""
+    def _politeness_mark(self, frontier: DataFrame) -> DataFrame:
+        """Tag each pending frontier row with its politeness verdict for
+        the NEXT round: sel='b' (within the per-host budget, fetch now)
+        or sel='d' (deferred, re-ranked with next round's arrivals).
+        The whole pending set is ranked by (depth, url) within each
+        host every window. Mega-host skew: rank within (host, salt)
+        with the budget split across salts so no task scans a whole
+        host. Column trees are built once (lazily) and reused — plan
+        construction is per-round driver py4j chatter otherwise."""
         p = getattr(self, "_polite_plan", None)
         if p is None:
             # Salted per-host ranking for mega-host skew: only hosts
@@ -661,117 +438,44 @@ class FrontierEngine:
                     self.robots.select("host", "crawl_delay_ms")),
                 "cap": _host_cap(self.cfg), "salt": salt, "salt_cap": salt_cap,
                 "rn": F.row_number().over(w),
-                "w_run": w.rowsBetween(Window.unboundedPreceding,
-                                       Window.currentRow),
+                "sel": (F.when(F.col("rn") <= F.col("salt_cap"), F.lit("b"))
+                        .otherwise(F.lit("d"))),
             }
             self._polite_plan = p
-        df = (frontier.join(p["robots_b"], "host", "left")
-              .withColumn("cap", p["cap"])
-              .withColumn("salt", p["salt"].cast("int"))
-              .withColumn("salt_cap", p["salt_cap"]))
-        if takes_sdf is not None:
-            df = df.join(F.broadcast(takes_sdf), ["host", "salt"], "left")
-            eff_cap = F.col("salt_cap") - F.coalesce("take", F.lit(0))
-            base = F.coalesce("ftot", F.lit(0)).cast("long")
-        else:
-            eff_cap = F.col("salt_cap")
-            base = F.lit(0).cast("long")
-        df = df.withColumn("rn", p["rn"])
-        if bound is not None:
-            is_f = (F.col("rn") > eff_cap) & (F.col("depth") <= bound)
-            # dense frozen rank: base + running count of f-rows in
-            # (depth, url) order — same window spec as rn, one shuffle
-            df = df.withColumn("runf",
-                               F.sum(is_f.cast("long")).over(p["w_run"]))
-            sel = (F.when(F.col("rn") <= eff_cap, F.lit("b"))
-                   .when(is_f, F.lit("f")).otherwise(F.lit("d")))
-            frank = F.when(is_f, base + F.col("runf")).cast("long")
-        else:
-            sel = (F.when(F.col("rn") <= eff_cap, F.lit("b"))
-                   .otherwise(F.lit("d")))
-            frank = F.lit(None).cast("long")
-        return df.select("url", "depth", "host", "salt",
-                         frank.alias("frank"), sel.alias("sel"))
+        return (frontier.join(p["robots_b"], "host", "left")
+                .withColumn("cap", p["cap"])
+                .withColumn("salt", p["salt"].cast("int"))
+                .withColumn("salt_cap", p["salt_cap"])
+                .withColumn("rn", p["rn"])
+                .select("url", "depth", "host", p["sel"].alias("sel")))
 
     def _write_frontier(self, frontier: DataFrame, rnd: int) -> None:
-        """Write a frontier round partitioned by the politeness
-        verdict. Fusing the budget window into the frontier WRITE
-        (instead of a separate cache+count selection job at the start
-        of the next round) keeps a politeness round at the same three
-        Spark jobs as a non-politeness one — the per-round fixed cost
-        is the scaling-efficiency denominator, so every job counts.
+        """Write a frontier round partitioned by the politeness verdict
+        (sel=b: next round's batch, sel=d: deferred) and commit it.
+        Fusing the budget window into the frontier WRITE (instead of a
+        separate cache+count selection job at the start of the next
+        round) lets the next round read its batch from sel=b and count
+        it from footers, with no selection job. Without politeness
+        every row is sel=b.
 
-        Scale note (write amplification): naively a deferred row is
-        rewritten once per window it waits, so a host with queue depth
-        Q and per-window cap c costs ~Q²/(2c) extra row-writes over
-        its drain — quadratic, and a mega-host's drain would dominate
-        I/O at 10^10 URLs. The FREEZE-AND-CURSOR store removes it
-        while keeping the selection policy bit-identical:
-
-          * a round's new arrivals always have depth >= 1 + (global
-            min batch depth), and the global min pending depth is
-            non-decreasing, so any pending row with depth <= the
-            PREVIOUS round's batch-min-depth (``bound``, read from
-            parquet footer stats — no job) can never be overtaken by
-            a future arrival under the (depth, url) per-(host, salt)
-            rank. Such rows are written ONCE to the round's sel=f
-            partition with a dense per-(host, salt) rank ``frank``
-            and never re-ranked or rewritten.
-          * selection then pops take = min(remaining_frozen, salt_cap)
-            rows per (host, salt) from the frozen store by cursor
-            range — a scan + broadcast join with pushed frank bounds,
-            NO shuffle — and fills the remaining salt_cap - take slots
-            from the re-ranked ACTIVE set (new arrivals + unfrozen
-            deferrals). Frozen rows all precede active rows in
-            (depth, url) order (active rows have depth > bound by
-            construction), so pops-then-picks equals the old
-            full-re-rank selection row for row.
-          * the cursor (host, salt, salt_cap, consumed, frozen_total)
-            is a robots-cardinality dim — driver-held and broadcast
-            exactly like the robots table, persisted per round for
-            resume; fully-consumed freeze dirs are retired via
-            per-dir max-frank stats kept alongside it.
-
-        Freezing can also never interact with the depth-correcting
-        admit: an improving candidate must beat the frozen depth, but
-        arrivals are strictly deeper than every frozen row, so no
-        candidate touching a frozen URL survives the anti-join."""
+        A deferred row is rewritten once per window it waits, so a host
+        with queue depth Q and per-window cap c costs ~Q²/(2c) extra
+        row-writes over its drain. On perfbench's crawl_polite_resume
+        (seed 1), 425 of the crawl's 6,253 frontier row-writes are
+        deferred rows."""
         if self.enforce_politeness:
-            bound = None
-            if rnd == 0:
-                bound = 0     # seeds are depth 0; arrivals >= 1
-            else:
-                bdir = os.path.join(self._paths("frontier", rnd - 1),
-                                    "sel=b")
-                if os.path.isdir(bdir):
-                    bound = self._footer_min_depth(bdir)
-            takes = self._takes()
-            takes_sdf = (self.spark.createDataFrame(
-                takes[["host", "salt", "take", "ftot"]])
-                if takes is not None else None)
-            out = self._politeness_mark(frontier, takes_sdf, bound)
-            if takes is not None and (takes["take"] > 0).any():
-                out = out.unionByName(
-                    self._frozen_pops(takes[takes["take"] > 0]))
+            out = self._politeness_mark(frontier)
         else:
-            takes = None
             out = frontier.select("url", "depth", "host",
                                   F.lit("b").alias("sel"))
         (out.write.mode("overwrite").partitionBy("sel")
          .parquet(self._paths("frontier", rnd)))
-        counts = _footer_rows(self._paths("frontier", rnd))
-        self._round_freeze = {
-            "frozen": sum(v for k, v in counts.items()
-                          if k.startswith("sel=f")),
-            "popped": (int(takes["take"].sum()) if takes is not None
-                       else 0)}
-        if self.enforce_politeness:
-            self._advance_cursor(rnd, takes, counts)
         # snapshot-commit the round (fast-append; per-partition
         # lineage from footers, no extra Spark job). This commit IS
         # the round's progress record — see _state().
         self.frontier_table.commit_dir(
-            f"round={rnd:05d}", "round", counts,
+            f"round={rnd:05d}", "round",
+            _footer_rows(self._paths("frontier", rnd)),
             extra={"round": rnd})
 
     def _read_round(self, rnd: int) -> tuple[DataFrame, DataFrame, int]:
@@ -819,13 +523,21 @@ class FrontierEngine:
         politeness-budgeted batch selection → fetch join → edge/image
         extraction → admission → frontier update → checkpoint."""
         os.makedirs(self.ckpt, exist_ok=True)
+        if os.path.isdir(os.path.join(self.ckpt, "cursor")):
+            # written every politeness round by the retired
+            # freeze-and-cursor store, whose frozen rows sit in a
+            # partition _read_round does not read: resuming would
+            # silently drop them
+            raise ValueError(
+                f"checkpoint {self.ckpt} was written by the "
+                "freeze-and-cursor politeness store (it has a cursor/ "
+                "dir); its frozen rows cannot be resumed — start a "
+                "fresh checkpoint")
         self._pin_config_manifest()
         st = self._state()
         if st.get("done"):
             return
         rnd = st["completed_rounds"]
-        if rnd > 0 and self.enforce_politeness:
-            self._load_cursor(rnd)   # resume: cursor as of round rnd
         if rnd == 0:
             self._write_frontier(
                 self.seed_claims()
@@ -992,8 +704,7 @@ class FrontierEngine:
                            partitions=[[i, int(n)] for i, n in
                                        enumerate(part_counts.values())],
                            steps=steps,
-                           **img_metrics,
-                           **getattr(self, "_round_freeze", {}))
+                           **img_metrics)
             with open(os.path.join(self.ckpt, "metrics.jsonl"), "a") as f:
                 f.write(json.dumps(metrics) + "\n")
             # no separate state write: _write_frontier's snapshot

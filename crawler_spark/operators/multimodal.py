@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -26,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType,
                                StringType, StructField, StructType)
 
-from ..core.imaging import decode_image, png_encode
+from ..core.imaging import decode_image, mean_luma, png_encode
 from ..core.imaging import avgpool_resize as _avgpool_resize
 
 
@@ -48,10 +47,9 @@ def thumbnail(images: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
             for iid, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
                 px = decode_image(bytes(data), fmt)
                 tp = _avgpool_resize(px, out_h, out_w)
-                gray = tp.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
                 ids.append(iid)
                 thumbs.append(png_encode(tp))
-                lumas.append(round(float(gray.mean()), 4))
+                lumas.append(mean_luma(tp))
             yield pd.DataFrame({
                 "image_id": ids, "thumb_png": thumbs,
                 "thumb_w": out_w, "thumb_h": out_h, "mean_luma": lumas})
@@ -129,11 +127,8 @@ def frame_sample(video: DataFrame, every_n: int = 10,
                 frames = mpng_decode(bytes(data))
                 for i in range(0, len(frames), every_n):
                     px = png_decode(frames[i])
-                    gray = (px.astype(np.float64)
-                            @ np.array([0.299, 0.587, 0.114]))
                     rows.append((vid, i, len(frames), frames[i],
-                                 px.shape[1], px.shape[0],
-                                 round(float(gray.mean()), 4)))
+                                 px.shape[1], px.shape[0], mean_luma(px)))
             yield pd.DataFrame(rows, columns=[
                 "video_id", "frame_index", "n_frames", "frame_bytes",
                 "frame_w", "frame_h", "mean_luma"])

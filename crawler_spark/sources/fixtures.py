@@ -25,8 +25,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..core.imaging import (decode_image, fake_lossy_encode, mean_luma_16,
-                            phash64, png_encode, render_image)
+from ..core.imaging import (avgpool_resize, decode_image, fake_lossy_encode,
+                            mean_luma, phash64, png_encode, render_image)
 from ..core.urls import canonicalize_url
 from ..core.xxhash64 import xxhash64
 
@@ -305,7 +305,8 @@ class WebGen:
                     # luma of the DECODED bytes, precomputed at
                     # generation so the driver's DuckDB check can
                     # verify the distributed thumbnail stage
-                    mean_luma=mean_luma_16(decode_image(data, fmt)),
+                    mean_luma=mean_luma(avgpool_resize(
+                        decode_image(data, fmt), 16, 16)),
                     src=src,
                 )
         rows = list(seen.values())

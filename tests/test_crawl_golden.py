@@ -304,28 +304,26 @@ def test_politeness_enforcement(spark, tmp_path):
                for m in rounds)
 
 
-def test_freeze_store_write_once_and_resume(spark, tmp_path):
-    """Freeze-and-cursor deferral store (the Q²/2c write-amplification
-    fix, frontier.py:_write_frontier): under politeness, pending rows
-    that can never be overtaken are written ONCE to the append-only
-    sel=f store and popped by cursor range — never re-ranked or
-    rewritten. Checks: (a) freezing actually triggers at this cap,
-    (b) write-once — every frozen row hits disk exactly once over the
-    whole drain, (c) the cursor fully consumes the store by crawl
-    end and pops exactly the frozen rows, (d) every freeze dir is
-    retired from the live-dirs registry once drained, (e) a mid-drain
-    resume in a FRESH engine instance restores the cursor from its
-    per-round parquet and still matches the oracle row-for-row."""
+def test_politeness_resume_mid_drain(spark, tmp_path):
+    """A politeness crawl interrupted while hosts still have deferred
+    rows resumes in a FRESH engine instance from the committed frontier
+    rounds alone and still matches the oracle row-for-row. Every round
+    holds only the sel=b (batch) and sel=d (deferred) partitions, and
+    no side file sits beside them."""
     import glob
-    import json
 
-    import pandas as pd
+    from crawler_spark.core.skeleton import _footer_rows
 
     cfg = CrawlConfig(max_depth=3, rate_limit=6)
-    ck = fresh_ckpt(str(tmp_path / "fz"))
+    ck = fresh_ckpt(str(tmp_path / "mid"))
     eng1 = FrontierEngine(spark, cfg, FIXDIR, ck, enforce_politeness=True)
     eng1.explore(max_rounds=8)            # interrupt mid-drain
-    assert not eng1._state()["done"]
+    st = eng1._state()
+    assert not st["done"]
+    # non-vacuity: the last round committed before the interruption
+    # still carries deferred rows into the resumed engine
+    last = eng1._paths("frontier", st["completed_rounds"])
+    assert sum(_footer_rows(os.path.join(last, "sel=d")).values()) > 0
 
     eng2 = FrontierEngine(spark, cfg, FIXDIR, ck,
                           enforce_politeness=True)  # fresh instance
@@ -335,36 +333,32 @@ def test_freeze_store_write_once_and_resume(spark, tmp_path):
     exp = [_visit_tuple_oracle(v) for v in run_oracle(FIXDIR, cfg).visits]
     assert got == exp
 
-    # (a) + (b): the store saw rows, and no frozen row was ever
-    # rewritten — total sel=f rows across all rounds == distinct urls
-    ffiles = glob.glob(os.path.join(ck, "frontier", "round=*", "sel=f",
-                                    "*.parquet"))
-    assert ffiles, "freezing never triggered — test config is vacuous"
-    fz = spark.read.parquet(*ffiles)
-    n_rows = fz.count()
-    assert n_rows > 0
-    assert n_rows == fz.select("url").distinct().count()
+    parts = {os.path.basename(d) for d in
+             glob.glob(os.path.join(ck, "frontier", "round=*", "*"))
+             if os.path.isdir(d)}
+    assert parts == {"sel=b", "sel=d"}
+    assert not os.path.exists(os.path.join(ck, "cursor"))
 
-    # (c): drained — the final cursor shows every frozen row popped
-    last = sorted(glob.glob(os.path.join(ck, "cursor",
-                                         "round=*.parquet")))[-1]
-    cur = pd.read_parquet(last)
-    assert int(cur["frozen_total"].sum()) == n_rows
-    assert (cur["consumed"] == cur["frozen_total"]).all()
 
-    # metrics carry the freeze telemetry, and every frozen row was
-    # popped exactly once
-    with open(os.path.join(ck, "metrics.jsonl")) as f:
-        ms = [json.loads(line) for line in f]
-    assert sum(m.get("frozen", 0) for m in ms) == n_rows
-    assert sum(m.get("popped", 0) for m in ms) == n_rows
-
-    # (d): drained dirs leave the live list, so the pop scan's dir set
-    # is bounded by drain depth, not crawl length
-    assert len(eng2._fdirs) == 0
-    last_dirs = sorted(glob.glob(os.path.join(ck, "cursor",
-                                              "dirs=*.parquet")))[-1]
-    assert len(pd.read_parquet(last_dirs)) == 0
+def test_resume_refuses_freeze_store_checkpoint(spark, tmp_path):
+    """A checkpoint written by the retired freeze-and-cursor store (it
+    has a cursor/ dir) keeps frozen rows in sel=f dirs that resume no
+    longer reads; explore() refuses it by name before any Spark job
+    runs instead of silently dropping those rows."""
+    cfg = CrawlConfig(max_depth=3, rate_limit=6)
+    ck = fresh_ckpt(str(tmp_path / "old"))
+    FrontierEngine(spark, cfg, FIXDIR, ck,
+                   enforce_politeness=True).explore(max_rounds=1)
+    os.makedirs(os.path.join(ck, "cursor"))
+    eng = FrontierEngine(spark, cfg, FIXDIR, ck, enforce_politeness=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("refuse-freeze-store", "resume refusal")
+    try:
+        with pytest.raises(ValueError, match="cursor/"):
+            eng.explore()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("refuse-freeze-store") == []
 
 
 def test_resolve_timings_disjoint_per_call(spark, tmp_path):

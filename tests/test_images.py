@@ -10,7 +10,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark.core.imaging import (decode_image, hamming64, phash64,
+from crawler_spark.core.imaging import (avgpool_resize, decode_image,
+                                        hamming64, mean_luma, phash64,
                                         png_encode, psnr, render_image)
 from crawler_spark.operators.images import (decode_and_phash,
                                             exact_byte_dedup, phash_dedup,
@@ -132,6 +133,27 @@ def test_png_roundtrip_exact():
     assert np.array_equal(decode_image(png_encode(px), "png"), px)
     assert psnr(px, px) == float("inf")
     assert phash64(px) == phash64(px.copy())
+
+
+def test_mean_luma_exact_tie():
+    """Two fixture thumbnails have an exact mean luma of 126.81925, a
+    4-place tie: a float mean of BT.601 weights rounds it either way
+    depending on summation order, while the integer sum rounds it the
+    same on every host, to the fixture's precomputed 126.8192."""
+    from fractions import Fraction
+
+    import pyarrow.parquet as pq
+
+    rows = {r["image_id"]: r for r in pq.read_table(
+        f"{FIXDIR}/images.parquet").to_pylist()}
+    for iid in ("5224ba10a5d9760b", "7ae672c3dace3f9e"):
+        r = rows[iid]
+        tp = avgpool_resize(decode_image(r["bytes"], r["fmt"]), 16, 16)
+        w = (Fraction(299, 1000), Fraction(587, 1000), Fraction(114, 1000))
+        exact = sum(sum(wi * int(c) for wi, c in zip(w, p))
+                    for p in tp.reshape(-1, 3)) / (16 * 16)
+        assert exact == Fraction("126.81925")
+        assert r["mean_luma"] == mean_luma(tp) == 126.8192
 
 
 def _brute_pairs(hashes: dict[int, int], h: int) -> set[tuple[int, int]]:
