@@ -184,38 +184,36 @@ int64_t csr_bounds(int64_t n, const int32_t *p,
     return m;
 }
 
-/* Emit the priority-vector hex strings for a claims batch in ONE
+/* Emit the priority-vector hex strings for the sweep's claims in ONE
    forward pass: prio(claim) = prio(parent) ++ hex4(link_index).
    Rows arrive in visit order and a claim's parent is always an
-   earlier row of the SAME batch (DFS parents lie on the path from
-   the call's seeds), so the parent's bytes are complete before its
-   children copy them — and recently-claimed parents are cache-warm.
+   earlier row (DFS parents lie on the path from the seeds), so the
+   parent's bytes are complete before its children copy them — and
+   recently-claimed parents are cache-warm.
    Seed rows (parent_rank < 0) take their 4-byte prio from seed_prio
    via seed_ord[row]. offsets[n+1] = cumsum of 4*(depth+1); data is
    caller-allocated at offsets[n] bytes. Replaces a numpy build whose
    padded (n x maxw) staging matrix and per-depth gathers touched
    ~6x the payload in fresh pages.
 
-   Returns 0 on success, or 1 + the first row whose parent rank falls
-   outside this batch (0 <= pr - rank0 < r is the same-batch-parent
-   invariant the sweep guarantees; a violated invariant — corrupted
-   claims batch, future resume bug — must fail loud, not read or
-   write out of bounds). The two compares are always-false in a valid
-   batch, so the hot path stays branch-predictable. */
+   Returns 0 on success, or 1 + the first row whose parent rank is
+   not an earlier row (0 <= pr < r is the invariant the sweep
+   guarantees; a violated invariant — corrupted claims — must fail
+   loud, not read or write out of bounds). The compare is
+   always-false on valid claims, so the hot path stays
+   branch-predictable. */
 int64_t emit_prios(int64_t n, const int64_t *parent_rank, const int32_t *li,
-                   int64_t rank0, const uint8_t *seed_prio,
-                   const int32_t *seed_ord, const int64_t *offsets,
-                   uint8_t *data)
+                   const uint8_t *seed_prio, const int32_t *seed_ord,
+                   const int64_t *offsets, uint8_t *data)
 {
     static const char hexd[] = "0123456789abcdef";
     for (int64_t r = 0; r < n; r++) {
         uint8_t *dst = data + offsets[r];
-        int64_t pr = parent_rank[r];
-        if (pr < 0) {
+        int64_t p = parent_rank[r];
+        if (p < 0) {
             memcpy(dst, seed_prio + (int64_t)seed_ord[r] * 4, 4);
         } else {
-            int64_t p = pr - rank0;
-            if (p < 0 || p >= r) return r + 1;
+            if (p >= r) return r + 1;
             int64_t plen = offsets[p + 1] - offsets[p];
             memcpy(dst, data + offsets[p], (size_t)plen);
             uint32_t v = (uint32_t)li[r];
@@ -280,7 +278,7 @@ def _load_lib():
         u8p = ctypes.POINTER(ctypes.c_uint8)
         lib.emit_prios.restype = ctypes.c_int64
         lib.emit_prios.argtypes = [ctypes.c_int64, i64p, i32p,
-                                   ctypes.c_int64, u8p, i32p, i64p, u8p]
+                                   u8p, i32p, i64p, u8p]
         lib.uf_components.restype = ctypes.c_int64
         lib.uf_components.argtypes = [ctypes.c_int64, i32p, i32p,
                                       ctypes.c_int64, i32p]
@@ -452,14 +450,21 @@ def csr_runlength(p):
 _HEX_W = 4  # hex digits per priority-vector level (file format)
 
 
-def emit_prios(depth, parent_rank, li, rank0, seed_prio, seed_ord):
-    """Build the claims batch's priority-vector byte blob in visit
-    order: (offsets int64[n+1], data uint8[total]) where row r's prio
-    is data[offsets[r]:offsets[r+1]] — prio(parent) ++ hex4(li), and
+def _not_earlier(parent_rank, r: int) -> ValueError:
+    return ValueError(f"emit_prios: claim row {r} has parent rank "
+                      f"{int(parent_rank[r])}, not an earlier row — "
+                      "corrupted claims")
+
+
+def emit_prios(depth, parent_rank, li, seed_prio, seed_ord):
+    """Build the claims' priority-vector byte blob in visit order:
+    (offsets int64[n+1], data uint8[total]) where row r's prio is
+    data[offsets[r]:offsets[r+1]] — prio(parent) ++ hex4(li), and
     seed rows (parent_rank < 0) copy seed_prio[seed_ord[r]*4:][:4].
+    A parent rank that is not an earlier row raises ValueError.
 
     One forward C pass when a toolchain exists (parents precede
-    children within a sweep call, so the prefix copy reads
+    children in visit order, so the prefix copy reads
     just-written, cache-warm bytes); a per-depth vectorized numpy
     twin otherwise — the twin stages rows in a padded (n x maxw)
     matrix, which at millions of claims touches ~6x the payload in
@@ -484,30 +489,19 @@ def emit_prios(depth, parent_rank, li, rank0, seed_prio, seed_ord):
         u8p = ctypes.POINTER(ctypes.c_uint8)
         rc = lib.emit_prios(n, parent_rank.ctypes.data_as(i64p),
                             li32.ctypes.data_as(i32p),
-                            ctypes.c_int64(rank0),
                             seed_prio.ctypes.data_as(u8p),
                             seed_ord.ctypes.data_as(i32p),
                             offsets.ctypes.data_as(i64p),
                             data.ctypes.data_as(u8p))
-        if rc != 0:
-            raise ValueError(
-                f"emit_prios: claim row {rc - 1} has parent rank "
-                f"{int(parent_rank[rc - 1])} outside its batch "
-                f"(rank0={rank0}) — corrupted claims batch")
+        if rc:
+            raise _not_earlier(parent_rank, rc - 1)
         return offsets, data
     # numpy twin: same guard (the clamp below would otherwise turn a
-    # violated same-batch-parent invariant into silently wrong prios)
-    bad = np.flatnonzero((parent_rank >= 0)
-                         & ((parent_rank - rank0 < 0)
-                            | (parent_rank - rank0
-                               >= np.arange(n, dtype=np.int64))))
+    # violated earlier-parent invariant into silently wrong prios)
+    bad = np.flatnonzero(parent_rank >= np.arange(n, dtype=np.int64))
     if len(bad):
-        r = int(bad[0])
-        raise ValueError(
-            f"emit_prios: claim row {r} has parent rank "
-            f"{int(parent_rank[r])} outside its batch "
-            f"(rank0={rank0}) — corrupted claims batch")
-    local_pr = np.maximum(parent_rank - rank0, 0)
+        raise _not_earlier(parent_rank, int(bad[0]))
+    local_pr = np.maximum(parent_rank, 0)
     max_d = int(depth64.max())
     W = _HEX_W * (max_d + 1)
     buf = np.zeros((n, W), np.uint8)

@@ -46,8 +46,11 @@ Scale posture (10^10 URLs / 1000 executors):
     rows are salted by pmod(url_hash, S) inside a host before the
     per-host rank so no single task sees a whole mega-host
     (cfg.rate_limit budget is split across salts).
-  * resolve encodes the edge set with two keyed shuffle joins —
-    linear in |edges| — before the driver-side sweep.
+  * resolve reads the committed frontier once into a node table
+    (h, url, host, dense id) — the crawl's one URL dictionary. The
+    edge encode joins it on hash, the claims rejoin on id: keyed
+    shuffle joins linear in |edges| and |visits| around the
+    driver-side sweep.
 """
 
 from __future__ import annotations
@@ -362,13 +365,6 @@ class FrontierEngine:
             types.StructField("child_url", types.StringType()),
             types.StructField("child_host", types.StringType())])
 
-    def _seen_history(self):
-        """The admission history (committed frontier rounds) as a
-        DataFrame of (url, depth): a manifest-driven frontier-table
-        read with an explicit schema."""
-        return (self.frontier_table.read(schema=self._frontier_schema)
-                .select("url", "depth"))
-
     # ---- seeds ----
 
     def _seed_hosts(self) -> list[str]:
@@ -641,46 +637,37 @@ class FrontierEngine:
                     .filter(F.col("depth") <= self.cfg.max_depth)
                     .groupBy("url").agg(F.min("depth").alias("depth"),
                                         F.first("host").alias("host")))
-            # THE J1 anti-join: exclude everything already attempted OR
-            # currently deferred. The union of frontier rounds 0..rnd
-            # is exactly that set (every frontier row is either
-            # attempted in its round or carried forward as deferred),
-            # so ONE partition-discovered read of the frontier dir
-            # replaces both the attempted table and a second
-            # deferred anti-join. Reading from checkpoint also
-            # truncates lineage across rounds.
-            cand = cand.select("url", "depth", "host")
-            # one read of the committed admission history per round: a
-            # manifest-driven frontier read with an explicit schema
-            # (skips per-dir footer inference that grows O(rounds) —
-            # an incremental union-DF cache was tried and LOST: a
-            # 16-deep union of single-dir scans re-analyzes slower
-            # than one multi-dir scan lists)
-            frontier_hist = self._seen_history()
-            if self.enforce_politeness:
-                # Depth-correcting admit. Under politeness a URL can be
-                # FIRST admitted at a non-minimal depth: its shallow
-                # parent sat deferred while a deeper path found it.
-                # A plain anti-join freezes that inflated depth, and the
-                # max_depth cap then silently truncates the URL's
-                # subtree (descendants the DFS resolve legally visits
-                # are never fetched). Fix: keep a candidate iff it
-                # strictly improves on the best seen depth, re-fetching
-                # the page so expansion resumes from the shallower
-                # depth. Depths are non-negative ints and strictly
-                # decrease per re-admit ⇒ terminates. Without
-                # politeness, BFS admits every URL at minimal depth on
-                # first sight, so the cheaper plain anti-join below
-                # stays exact.
-                seen_best = (frontier_hist.groupBy("url")
-                             .agg(F.min("depth").alias("seen_depth")))
-                new_cand = (cand.join(seen_best, "url", "left")
-                            .filter(F.col("seen_depth").isNull()
-                                    | (F.col("depth") < F.col("seen_depth")))
-                            .drop("seen_depth"))
-            else:
-                new_cand = cand.join(frontier_hist.select("url"), "url",
-                                     "left_anti")
+            # THE J1 join: exclude everything already attempted OR
+            # currently deferred, unless it is now reached shallower.
+            # The union of frontier rounds 0..rnd is exactly that set
+            # (every frontier row is either attempted in its round or
+            # carried forward as deferred), so ONE manifest-driven read
+            # of the frontier history replaces both the attempted table
+            # and a second deferred anti-join, and truncates lineage
+            # across rounds (an incremental union-DF cache of the
+            # history LOST: a 16-deep union of single-dir scans
+            # re-analyzes slower than one multi-dir scan lists).
+            # Depth-correcting: keep a candidate iff it strictly
+            # improves on the best seen depth. Under politeness a URL
+            # can be FIRST admitted at a non-minimal depth (its shallow
+            # parent sat deferred while a deeper path found it); a
+            # plain anti-join would freeze that inflated depth and the
+            # max_depth cap would silently truncate the URL's subtree.
+            # Re-admitting it re-fetches the page so expansion resumes
+            # from the shallower depth; depths are non-negative ints
+            # and strictly decrease per re-admit ⇒ terminates. Without
+            # politeness nothing is deferred, so round rnd holds exactly
+            # the depth-rnd urls, every candidate has depth rnd+1 —
+            # deeper than any seen depth — and the filter keeps exactly
+            # the unseen ones: the plain anti-join's result.
+            seen_best = (self.frontier_table
+                         .read(schema=self._frontier_schema)
+                         .groupBy("url")
+                         .agg(F.min("depth").alias("seen_depth")))
+            new_cand = (cand.join(seen_best, "url", "left")
+                        .filter(F.col("seen_depth").isNull()
+                                | (F.col("depth") < F.col("seen_depth")))
+                        .drop("seen_depth"))
             new_frontier = (
                 deferred.unionByName(new_cand)
                 .groupBy("url").agg(F.min("depth").alias("depth"),
@@ -747,21 +734,21 @@ class FrontierEngine:
                                        schema=self._crawl_schema)
                  .filter(F.col("kind") == "edge")
                  .select("parent_url", "link_index", "child_url"))
-        seeds = self.seed_claims().localCheckpoint()
-        return self._finalize_visits(self._resolve_skeleton(edges, seeds))
+        return self._finalize_visits(self._resolve_skeleton(edges))
 
-    def _resolve_skeleton(self, edges: DataFrame,
-                          seeds: DataFrame) -> DataFrame:
-        """Exact DFS claiming over the int64-encoded skeleton.
+    def _resolve_skeleton(self, edges: DataFrame) -> DataFrame:
+        """Exact DFS claiming over the dictionary-encoded skeleton.
 
-        The lexicographic-heap formulation of round 1 is equivalent to
-        plain DFS preorder (the priority vectors have the prefix
-        property, so heap order ≡ visit stack order) — but the heap
-        built an O(depth)-char priority STRING per edge push, which
-        dominated the sweep. This version sweeps with an integer
-        explicit-stack DFS (no strings, no heap, no per-edge
-        allocation beyond one tuple); priority vectors are emitted
-        vectorized by the claims write (see _write_claims)."""
+        The node table (h, url, host, mono) is written once from the
+        committed frontier rounds: it is the one id↔url dictionary of
+        the resolve. The edges are encoded against it on hash, the
+        seeds look their ids up in it, and the claims map their ids
+        back to urls through it (_claims_to_visits).
+
+        Lexicographic-first claiming is plain DFS preorder (the
+        priority vectors have the prefix property), so the sweep is an
+        integer explicit-stack DFS with no strings; the priority
+        vectors are emitted by the claims write (_write_claims)."""
         t0 = time.time()
         # all-numeric skeleton (20 bytes/edge): host identity and
         # politeness are NOT shipped — only the visit ORDER is
@@ -780,30 +767,25 @@ class FrontierEngine:
         # cores on both sides.
         skel_path = self._paths("skeleton")
         npart = max(self.spark.sparkContext.defaultParallelism, 4)
-        # node table: distinct node hashes (attempted urls ∪ seeds —
-        # every claimable node: a child the DFS can claim at depth ≤
-        # max_depth has BFS depth ≤ its DFS depth, so BFS admitted it
-        # into a frontier round; edges to deeper children are dead and
-        # marked id -1 below) with a DENSE int32 id assigned
-        # DISTRIBUTED (a DataFrame zipWithIndex — no RDD-API
-        # round-trip through Python serialization). Dense ids keep the
-        # sweep's random-access state at ~8 bytes/node (L3-resident)
-        # instead of an open-addressing hash walk, which was
-        # memory-bound at bench scale.
+        # node table: the distinct attempted urls — every claimable
+        # node: frontier round 0 holds every admitted seed, and a
+        # child the DFS can claim at depth ≤ max_depth has BFS depth ≤
+        # its DFS depth, so BFS admitted it into a frontier round;
+        # edges to deeper children are dead and marked id -1 below —
+        # with a DENSE int32 id assigned distributed. Dense ids keep
+        # the sweep's random-access state at ~8 bytes/node
+        # (L3-resident) instead of an open-addressing hash walk.
         nodes_path = self._paths("nodes")
-        # ONE job: distinct → hash-partition by h → partition-local
-        # sort → store (h, mono) where mono =
+        # ONE job: dedup on h → hash-partition by h → partition-local
+        # sort → store (h, url, host, mono) where mono =
         # monotonically_increasing_id = (pid << 33) | local ordinal,
         # assigned in the sorted row order. The dense id = per-pid
         # offset + ordinal is then DERIVED — offsets come from parquet
         # footers (_node_offsets, zero jobs), and the id projection
-        # fuses into each consumer's plan. This replaces a 3-job
-        # sequence (localCheckpoint pinning pids, a per-pid count
-        # collect, a windowed re-write) with identical resulting ids.
+        # fuses into each consumer's plan.
         (self.frontier_table.read(schema=self._frontier_schema)
-         .select(url_hash(F.col("url")).alias("h"))
-         .unionByName(seeds.select(url_hash(F.col("url")).alias("h")))
-         .distinct()
+         .select(url_hash(F.col("url")).alias("h"), "url", "host")
+         .dropDuplicates(["h"])
          .repartition(npart, "h")
          .sortWithinPartitions("h")
          .withColumn("mono", F.monotonically_increasing_id())
@@ -817,10 +799,33 @@ class FrontierEngine:
             F.lit(v).cast(t) for pid, off in sorted(offs.items()) or [(0, 0)]
             for v, t in ((pid, "int"), (off, "long"))])
         off = off_map[F.shiftrightunsigned("mono", 33).cast("int")]
+        # consumers project only the columns they join on, so parquet
+        # pruning keeps the skeleton's node scans to (h, mono)
         nodes_id = (self.spark.read.parquet(nodes_path)
-                    .select("h", (off + F.col("mono").bitwiseAND(_MONO_MASK))
+                    .select("h", "url", "host",
+                            (off + F.col("mono").bitwiseAND(_MONO_MASK))
                             .cast("int").alias("id")))
         self.timings["nodes_write"] = round(time.time() - t0, 2)
+        t0 = time.time()
+        # seeds sorted by prio string ≡ seed_rank order: the oracle
+        # crawls each seed's subtree to completion before the next.
+        # Round 0 of the frontier is seed_claims(), so every seed has
+        # a node — unless seeds.parquet changed after the crawl began
+        # (the config manifest does not pin it): such a seed was never
+        # fetched, and resolving would silently drop or misplace it
+        seed_rows = sorted(
+            self.seed_claims()
+            .select(url_hash(F.col("url")).alias("h"), "url", "prio")
+            .join(nodes_id.select("h", "id"), "h", "left").collect(),
+            key=lambda r: r["prio"])
+        missing = [r["url"] for r in seed_rows if r["id"] is None]
+        if missing:
+            raise ValueError(
+                f"checkpoint {self.ckpt} has no frontier row for seed "
+                f"{missing[0]} ({len(missing)} missing): seeds.parquet "
+                "changed after the crawl began; resolve with the "
+                "original seeds or start a fresh checkpoint")
+        self.timings["seed_collect"] = round(time.time() - t0, 2)
         t0 = time.time()
         # skeleton: edges dictionary-encoded to dense int32 ids
         # DISTRIBUTED (two shuffle-hash joins against the node table —
@@ -864,17 +869,6 @@ class FrontierEngine:
         t0 = time.time()
         import numpy as np
 
-        # seeds sorted by prio string ≡ seed_rank order: the oracle
-        # crawls each seed's subtree to completion before the next;
-        # ids come from the same node table the edges were encoded
-        # against (tiny broadcast join, one collect)
-        seed_rows = sorted(
-            seeds.select(url_hash(F.col("url")).alias("h"), "prio")
-            .join(nodes_id, "h").collect(),
-            key=lambda r: r["prio"])
-        self.timings["seed_collect"] = round(time.time() - t0, 2)
-        t0 = time.time()
-
         from ..core.dfs_kernel import csr_runlength, sweep
 
         p_ids = skel_t["p_id"].to_numpy(zero_copy_only=False)
@@ -909,7 +903,7 @@ class FrontierEngine:
                            seed_prio_by_id={int(r["id"]): r["prio"].encode()
                                             for r in seed_rows})
         self.timings["claims_write"] = round(time.time() - t0, 2)
-        return self._claims_to_visits(claims_path, seeds, nodes_id)
+        return self._claims_to_visits(claims_path, nodes_id)
 
     @staticmethod
     def _write_claims(claims_path: str, out_id, out_depth, out_parent_rank,
@@ -920,27 +914,20 @@ class FrontierEngine:
         nullable parent_id), and it doubles as the resolve checkpoint
         artifact.
 
-        Claims are written as DENSE IDS (id, parent_id), not url
-        hashes: the id→hash/url mapping is resolved by the
-        DISTRIBUTED rejoin in _claims_to_visits against the node
-        table the skeleton was encoded with. The former approach
-        gathered hashes through a driver-resident 8 B/node id→hash
-        array (node_arr) — ~80 GB at the 10^10-URL posture; dense
-        ids remove that array entirely, leaving the 1-bit/node
-        claimed bitmap as the sweep's only node-indexed driver state.
+        Claims are written as DENSE IDS (id, parent_id), not urls or
+        hashes: _claims_to_visits maps them back through the node
+        table the skeleton was encoded with, so the 1-bit/node
+        claimed bitmap stays the sweep's only node-indexed driver
+        state (an id→hash array would be ~80 GB at 10^10 URLs).
 
         The priority VECTOR of every claim is emitted here too —
-        prio(claim) = prio(parent) ++ hex4(link_index) — rebuilt
-        VECTORIZED per depth level over the sweep's arrays (parents
-        always claim before their children and at depth-1, so each
-        level's parent bytes are complete before the level runs; no
-        per-claim Python loop, no Spark joins). The claims are
-        driver-resident at this point by design — the sweep is the
-        engine's one compact sequential pass — so building the ~4·
-        (depth+1)-byte strings here costs one gather/scatter per depth
-        level and removes the ⌈log₂ depth⌉ pointer-doubling shuffle
-        joins that used to run afterwards (claims_rejoin was a
-        core-count-independent Amdahl term in the scaling pairs)."""
+        prio(claim) = prio(parent) ++ hex4(link_index) — in one
+        forward pass over the sweep's arrays (core/dfs_kernel
+        emit_prios: parents claim before their children, so a
+        parent's bytes are complete when its children copy them). The
+        claims are driver-resident here by design, so this replaces
+        the ⌈log₂ depth⌉ pointer-doubling shuffle joins that used to
+        build the vectors afterwards."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -965,7 +952,7 @@ class FrontierEngine:
             seed_blob += p
             seed_ord[i] = j
         offsets, data = emit_prios(
-            out_depth, out_parent_rank, out_li, 0,
+            out_depth, out_parent_rank, out_li,
             np.frombuffer(bytes(seed_blob) or b"\0" * _HEX_W, np.uint8),
             seed_ord)
         prio_arr = pa.LargeStringArray.from_buffers(
@@ -975,7 +962,6 @@ class FrontierEngine:
             "id": pa.array(out_id.astype(np.int32)),
             "depth": pa.array(out_depth.astype(np.int32)),
             "parent_id": parent_id,
-            "parent_rank": pa.array(out_parent_rank.astype(np.int64)),
             "link_index": pa.array(out_li.astype(np.int32)),
             "prio": prio_arr,
             "visit_rank": pa.array(np.arange(n, dtype=np.int64)),
@@ -984,47 +970,36 @@ class FrontierEngine:
                        os.path.join(claims_path, "claims_00000.parquet"),
                        row_group_size=1 << 20)
 
-    def _claims_to_visits(self, claims_path: str, seeds: DataFrame,
+    def _claims_to_visits(self, claims_path: str,
                           nodes_id: DataFrame) -> DataFrame:
         """Read the claims parquet (prio vectors already emitted by the
-        sweep write — see _write_claims) and map dense ids back to url
-        strings DISTRIBUTED: every DFS claim is BFS-admitted, so the
-        union of frontier rounds (skinny url-only rows, ~visit count)
-        ∪ seeds contains every claimed url; hashing those urls and
-        joining the node table (the same table the skeleton ids were
-        encoded against) yields the (id, url) dim, which then joins
-        the claims on id and parent_id. No driver-side id→hash array
-        anywhere — the mapping rides two keyed shuffle joins. Joining
-        the 10x-larger edge set for the same mapping dominated the
-        rejoin; the frontier union is the small side."""
+        sweep write — see _write_claims) and map dense ids back through
+        the node table the skeleton was encoded against: one keyed
+        join on id brings each claim's url, hash and host, one on
+        parent_id its parent's url. No driver-side id→url array and
+        no re-read of the frontier — the node table is the one
+        dictionary."""
         t0 = time.time()
         claims_df = (self.spark.read.parquet(claims_path)
                      .withColumn("prio", F.col("prio").cast("string")))
-        # localCheckpoint: the dim feeds two joins below — without it
-        # the url-hash + node-table join subtree runs twice
-        id_url = (self.frontier_table.read(schema=self._frontier_schema)
-                  .select("url")
-                  .unionByName(seeds.select("url"))
-                  .withColumn("h", url_hash(F.col("url")))
-                  .dropDuplicates(["h"])
-                  .join(nodes_id.hint("shuffle_hash"), "h")
-                  .select("id", "url")
-                  .localCheckpoint())
-        out = (claims_df.join(id_url, "id")
-               .join(id_url.select(F.col("id").alias("parent_id"),
-                                   F.col("url").alias("parent_url")),
+        out = (claims_df
+               .join(nodes_id.select("id", "url",
+                                     F.col("h").alias("url_hash"), "host"),
+                     "id")
+               .join(nodes_id.select(F.col("id").alias("parent_id"),
+                                     F.col("url").alias("parent_url")),
                      "parent_id", "left")
-               .select("url", "prio", "depth", "parent_url", "link_index",
-                       "visit_rank"))
+               .select("url", "url_hash", "host", "prio", "depth",
+                       "parent_url", "link_index", "visit_rank"))
         out = out.localCheckpoint()
         self.timings["claims_rejoin"] = round(time.time() - t0, 2)
         return out
 
     def _finalize_visits(self, claims: DataFrame) -> DataFrame:
         """Attach statuses to the swept claims (which already carry
-        the global visit rank — the sweep claims in exact visit order)
-        and the per-host politeness batch schedule (a DISTRIBUTED
-        host-partitioned window). Claims of
+        url, url_hash, host and the global visit rank — the sweep
+        claims in exact visit order) and the per-host politeness batch
+        schedule (a DISTRIBUTED host-partitioned window). Claims of
         never-materialized URLs are 404s (dead links — fetched as
         absent)."""
         fetched = (self.crawl_table.read(with_partition_columns=True,
@@ -1034,9 +1009,7 @@ class FrontierEngine:
                            "status_code").distinct())
         visits = (claims.join(fetched, "url", "left")
                   .withColumn("status_code",
-                              F.coalesce("status_code", F.lit(404)))
-                  .withColumn("host", url_host(F.col("url")))
-                  .withColumn("url_hash", url_hash(F.col("url"))))
+                              F.coalesce("status_code", F.lit(404))))
         # politeness schedule: k-th visit of host h → batch k//cap(h).
         # DISTRIBUTED: the window partitions by host (ordering within
         # a host by prio ≡ visit order), so the only serial artifact

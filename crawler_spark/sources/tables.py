@@ -8,7 +8,8 @@ runtime jars). Provides the three properties the engine relies on:
     metadata pointer),
   * snapshot lineage: every commit records (snapshot_id, parent_id,
     operation, row_count, partition row counts) — the per-partition
-    lineage the north rule asks for,
+    lineage the north rule asks for, keyed by written file and read
+    from the parquet footers (no Spark job),
   * MERGE-style upsert (`merge`): WHEN MATCHED UPDATE / WHEN NOT
     MATCHED INSERT keyed on arbitrary columns, and time-travel reads
     by snapshot id,
@@ -32,6 +33,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..core.skeleton import _footer_rows
 
 
 def _member_signature(member: str) -> tuple:
@@ -96,17 +99,14 @@ class SnapshotTable:
         sid = self._next_id(mani)
         snap_dir = os.path.join(self.path, f"snap-{sid:06d}")
         df.write.mode("overwrite").parquet(snap_dir)
-        written = self.spark.read.parquet(snap_dir)
-        parts = (written.groupBy(F.spark_partition_id().alias("pid"))
-                 .count().collect())
+        parts = _footer_rows(snap_dir)
         mani["snapshots"].append({
             "id": sid,
             "parent": mani["current"],
             "op": op,
             "ts": time.time(),
-            "rows": int(sum(r["count"] for r in parts)),
-            "partition_rows": {str(r["pid"]): int(r["count"])
-                               for r in parts},
+            "rows": sum(parts.values()),
+            "partition_rows": parts,
             "members": members,
         })
         mani["current"] = sid
@@ -190,14 +190,12 @@ class SnapshotTable:
         sid = self._next_id(mani)
         new_dir = f"snap-{sid:06d}"
         df.write.mode("overwrite").parquet(os.path.join(self.path, new_dir))
-        written = self.spark.read.parquet(os.path.join(self.path, new_dir))
-        parts = (written.groupBy(F.spark_partition_id().alias("pid"))
-                 .count().collect())
+        parts = _footer_rows(os.path.join(self.path, new_dir))
         mani["snapshots"].append({
             "id": sid, "parent": mani["current"], "op": "append",
             "ts": time.time(),
-            "rows": int(sum(r["count"] for r in parts)),
-            "partition_rows": {str(r["pid"]): int(r["count"]) for r in parts},
+            "rows": sum(parts.values()),
+            "partition_rows": parts,
             "members": cur["members"] + [new_dir],
         })
         mani["current"] = sid
@@ -324,8 +322,6 @@ class SnapshotTable:
         keeps its partition clustering and sorts within files. This is
         what makes a 10^10-row URL-seen table answer membership probes
         without a full scan."""
-        import pyarrow.parquet as pq
-
         mani = self._manifest()
         if mani["current"] is None:
             raise FileNotFoundError(f"{self.path}: empty table")
@@ -361,15 +357,8 @@ class SnapshotTable:
                .write.mode("overwrite").parquet(out))
         else:
             df.repartition(n_files).write.mode("overwrite").parquet(out)
-        partition_rows: dict[str, int] = {}
-        files_after = 0
-        for r, _d, fs in sorted(os.walk(out)):
-            for f in sorted(fs):
-                if f.endswith(".parquet"):
-                    files_after += 1
-                    rel = os.path.relpath(os.path.join(r, f), out)
-                    partition_rows[rel] = pq.ParquetFile(
-                        os.path.join(r, f)).metadata.num_rows
+        partition_rows = _footer_rows(out)
+        files_after = len(partition_rows)
         mani["snapshots"].append({
             "id": sid, "parent": mani["current"], "op": "compact",
             "ts": time.time(),

@@ -361,6 +361,34 @@ def test_resume_refuses_freeze_store_checkpoint(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("refuse-freeze-store") == []
 
 
+def test_resolve_refuses_seed_missing_from_frontier(spark, tmp_path):
+    """The config manifest pins CrawlConfig but not seeds.parquet. A
+    seed added after the crawl was explored has no frontier row, hence
+    no node: resolve() raises ValueError naming the checkpoint and the
+    seed before the sweep, and writes no claims."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fix = str(tmp_path / "fix")
+    os.makedirs(fix)
+    for name in ("web_pages.parquet", "robots.parquet", "seeds.parquet"):
+        shutil.copy(os.path.join(FIXDIR, name), fix)
+    cfg = CrawlConfig(max_depth=3)
+    ck = fresh_ckpt(str(tmp_path / "seedck"))
+    FrontierEngine(spark, cfg, fix, ck).explore()
+    seeds = pq.read_table(os.path.join(fix, "seeds.parquet"))
+    new = "https://s4.example.org/added-after-explore"
+    pq.write_table(pa.concat_tables([seeds, pa.table(
+        {"url": [new], "seed_rank": pa.array([99], pa.int32())})]),
+        os.path.join(fix, "seeds.parquet"))
+    with pytest.raises(ValueError, match=new) as ei:
+        FrontierEngine(spark, cfg, fix, ck).resolve()
+    assert ck in str(ei.value)
+    assert not os.path.exists(os.path.join(ck, "claims"))
+
+
 def test_resolve_timings_disjoint_per_call(spark, tmp_path):
     """Two consecutive resolve() calls on one engine must each report
     their OWN step breakdown — the same steps, and no accumulated

@@ -174,12 +174,11 @@ def test_emit_prios_c_matches_numpy_twin(seed):
     depth[0] = 0
     by_d = {d: np.flatnonzero(depth == d) for d in range(7)}
     parent_rank = np.full(n, -1, np.int64)
-    rank0 = 1000 * seed
     for d in range(1, 7):
         rows, parents = by_d[d], by_d[d - 1]
         if not len(rows) or not len(parents):
             continue
-        parent_rank[rows] = rank0 + parents[
+        parent_rank[rows] = parents[
             (rng.random(len(rows)) * len(parents)).astype(np.int64)]
     li = rng.integers(0, 40, n).astype(np.int32)
     srows = np.flatnonzero(parent_rank < 0)
@@ -188,18 +187,25 @@ def test_emit_prios_c_matches_numpy_twin(seed):
     seed_ord[srows] = np.arange(len(srows), dtype=np.int32)
 
     assert dk._load_lib() is not None  # the C path must exist here
-    off_c, data_c = dk.emit_prios(depth, parent_rank, li, rank0,
-                                  seed_prio, seed_ord)
+    off_c, data_c = dk.emit_prios(depth, parent_rank, li, seed_prio,
+                                  seed_ord)
     # force the numpy twin
     saved, saved_tried = dk._lib, dk._lib_tried
     dk._lib, dk._lib_tried = None, True
     try:
-        off_np, data_np = dk.emit_prios(depth, parent_rank, li, rank0,
-                                        seed_prio, seed_ord)
+        off_np, data_np = dk.emit_prios(depth, parent_rank, li, seed_prio,
+                                        seed_ord)
+        # a parent that is not an earlier row fails loud in the twin
+        bad = parent_rank.copy()
+        bad[n - 2] = n - 1
+        with pytest.raises(ValueError, match=f"claim row {n - 2}"):
+            dk.emit_prios(depth, bad, li, seed_prio, seed_ord)
     finally:
         dk._lib, dk._lib_tried = saved, saved_tried
     assert np.array_equal(off_c, off_np)
     assert np.array_equal(data_c, data_np)
+    with pytest.raises(ValueError, match=f"claim row {n - 2}"):
+        dk.emit_prios(depth, bad, li, seed_prio, seed_ord)
 
     # per-row reference: prio = prio(parent) ++ hex4(li), seeds copy
     # their 4-byte seed prio
@@ -209,7 +215,7 @@ def test_emit_prios_c_matches_numpy_twin(seed):
             prios[r] = bytes(seed_prio[4 * seed_ord[r]:
                                        4 * seed_ord[r] + 4])
         else:
-            p = int(parent_rank[r]) - rank0
+            p = int(parent_rank[r])
             prios[r] = prios[p] + f"{int(li[r]):04x}".encode()
         got = bytes(data_c[off_c[r]:off_c[r + 1]])
         assert got == prios[r], r
@@ -217,7 +223,7 @@ def test_emit_prios_c_matches_numpy_twin(seed):
     # empty batch
     off0, data0 = dk.emit_prios(np.empty(0, np.int32),
                                 np.empty(0, np.int64),
-                                np.empty(0, np.int32), 0,
+                                np.empty(0, np.int32),
                                 np.zeros(4, np.uint8),
                                 np.empty(0, np.int32))
     assert list(off0) == [0] and len(data0) == 0
